@@ -54,6 +54,9 @@ object IvfCosTopk {
     val seeds = head.filter(x =>
       if (evenBase) x.vec_id % 2 == 0 && x.vec_id < 2L * k else x.vec_id < k)
     val cents0 = seeds.map(x => Cent(x.vec_id, x.v.toArray, x.n2))
+    // no seed, no cell: no query has a candidate, as in the SQL twin
+    if (cents0.isEmpty)
+      return Seq.empty[(Long, Int, Long, Double)].toDF("q_id", "rk", "vec_id", "cos")
     val dim = cents0(0).cv.length
 
     val cents: Array[Cent] =

@@ -1,5 +1,6 @@
 package graft.plans
 
+import org.apache.spark.{SparkConf, SparkEnv}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
@@ -10,9 +11,13 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *   --conf spark.sql.extensions=graft.plans.GraftExtensions
   *
   * then `SELECT fnv64(text) FROM docs` works from SQL as well as the DSL.
+  * It also sets graft's session defaults ([[GraftExtensions.Defaults]]).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    // runs after the SparkContext exists and before the session's shared
+    // state, SQL conf and the codegen cache read the context's conf
+    Option(SparkEnv.get).foreach(env => GraftExtensions.setDefaults(env.conf))
     ext.injectFunction(
       (new FunctionIdentifier("fnv64"),
         new ExpressionInfo(classOf[Fnv64].getName, "fnv64"),
@@ -42,4 +47,30 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // and expand the SessionWindow expression this rule introduces)
     ext.injectResolutionRule(_ => RewriteGapSessions)
   }
+}
+
+object GraftExtensions {
+  /** Conf defaults every graft session gets; an explicit setting wins.
+    *
+    * - `spark.sql.codegen.cache.maxEntries`: the JVM-wide cache of
+    *   compiled generated classes (an LRU in 4 segments) holds 100 by
+    *   default. One pass of the ten batch_history queries needs 152
+    *   distinct classes at sf0.001, so every warm pass recompiled 137.
+    *   One pass of the whole 246-query catalog compiles 2718-2725
+    *   distinct classes at sf0.001 (and 20-39 on each later pass, whose
+    *   code differs run to run); 4096 holds that with room for the
+    *   segments' uneven fill. The cache only holds what was compiled, so
+    *   the bound costs nothing until it is used.
+    * - `spark.sql.artifact.isolation.enabled=false`: with isolation each
+    *   streaming query's cloned session runs its tasks under a classloader
+    *   of its own, and the loader is part of the codegen cache key, so
+    *   every start recompiled byte-identical code. graft adds no session
+    *   artifacts (jars, files), so the isolation protects nothing here.
+    */
+  val Defaults: Seq[(String, String)] = Seq(
+    "spark.sql.codegen.cache.maxEntries" -> "4096",
+    "spark.sql.artifact.isolation.enabled" -> "false")
+
+  def setDefaults(conf: SparkConf): Unit =
+    Defaults.foreach { case (k, v) => conf.setIfMissing(k, v) }
 }

@@ -103,6 +103,17 @@ class DegenerateInputSpec extends SparkSpec {
     runAll(emptyDir, "empty")
   }
 
+  test("the IVF/PQ top-k queries return an empty frame on an EMPTY seed set") {
+    for (n <- Seq("knn_ivf", "knn_ivf_trained", "knn_ivf_append", "emb_pq_adc",
+      "knn_ivfpq", "knn_ivfpq_residual")) withClue(n) {
+      try {
+        val df = SparkEntry.queries(n)(spark, emptyDir)
+        df.collect() shouldBe empty
+        df.schema shouldBe SparkEntry.queries(n)(spark, srcDir).schema
+      } finally spark.catalog.clearCache()
+    }
+  }
+
   test("every ev_*/doc_* query survives a ONE-ROW corpus") {
     runAll(oneRowDir, "one-row")
   }
