@@ -16,6 +16,7 @@ object Demo {
     val spark = SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
@@ -50,7 +51,7 @@ object Demo {
 
     println("== Timer sampling: daily grid samples the running event count ==")
     val grid = Sources.timeGrid(spark, 1704067200000000L, 1704672000000000L, 86400L * 1000000)
-    val counted = EStream(all).foldAll("n_so_far", count(lit(1)))
+    val counted = EStream(all).scanAll("n_so_far", count(lit(1)))
     grid.take(counted, Seq("n_so_far" -> col("n_so_far"))).df.show(7)
 
     spark.stop()

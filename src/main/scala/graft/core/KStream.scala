@@ -4,12 +4,26 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Keyed multi-stream — the scespet `MultiTerm[K,X]`/`VectTerm[K,X]` surface
-  * (/root/reference/src/scespet/core/types.scala:286-369, VectTerm.scala:25):
-  * a "vector" of per-key streams. In Spark a keyed stream is just rows with
-  * key columns, so reshape signals / chained vectors / per-key cell wiring
-  * (VectorStream.java, ChainedVector.java) have no runtime analog — new keys
-  * appearing in the data are handled by value-based grouping for free.
+/** Event stream — the scespet `Term[X]`/`MacroTerm[X]` single stream
+  * (scespet core/types.scala:230-280, MacroTerm.scala:22)
+  * and the `MultiTerm[K,X]`/`VectTerm[K,X]` keyed multi-stream
+  * (types.scala:286-369, VectTerm.scala:25) as ONE type. A stream is a
+  * DataFrame with:
+  *   - `ts: Long`  event time (opaque ordered long)
+  *   - `seq: Long` deterministic arrival tie-break
+  *   - `keys`: the key columns — a "vector" of per-key streams. A single
+  *     stream is a keyed stream with no keys (`keys = Nil`, built by
+  *     [[graft.core.EStream]]): scespet's thesis that an expression on a
+  *     single stream applies unchanged to a multi-stream, stated once.
+  *   - any number of value columns.
+  *
+  * In Spark a keyed stream is just rows with key columns, so reshape
+  * signals / chained vectors / per-key cell wiring (VectorStream.java,
+  * ChainedVector.java) have no runtime analog — new keys appearing in the
+  * data are handled by value-based grouping for free. Every combinator
+  * returns plain Catalyst lineage — predicate pushdown, column pruning and
+  * whole-stage codegen apply as if the user had written the DataFrame ops
+  * by hand.
   */
 final case class KStream(
     df: DataFrame,
@@ -18,24 +32,63 @@ final case class KStream(
     seqCol: String = "seq") {
 
   private def keyCols: Seq[Column] = keys.map(col)
+  private def firstKey: String = {
+    require(keys.nonEmpty, "this operator needs a keyed stream; this stream has no keys")
+    keys.head
+  }
   private def meta: Seq[Column] = keyCols ++ Seq(col(tsCol), col(seqCol))
 
-  /** Isomorphic per-cell projection (VectTerm.map, VectTerm.scala:178-215). */
+  /** Per-event projection (MacroTerm.map, MacroTerm.scala:86-103;
+    * VectTerm.map, VectTerm.scala:178-215).
+    */
   def map(out: (String, Column)*): KStream =
     KStream(df.select(meta ++ out.map { case (n, e) => e.as(n) }: _*), keys, tsCol, seqCol)
 
-  /** Per-key value filter (VectTerm.filter, :252-277). */
+  /** [[map]] with MacroTerm's `exposeNull` switch: `exposeNull=false`
+    * reproduces the fused map+drop-null behavior.
+    */
+  def mapKeepNull(exposeNull: Boolean, out: (String, Column)*): KStream = {
+    val m = map(out: _*)
+    if (exposeNull) m
+    else KStream(m.df.na.drop(out.map(_._1)), keys, tsCol, seqCol)
+  }
+
+  /** Per-event predicate (MacroTerm.filter, MacroTerm.scala:105-124;
+    * VectTerm.filter, :252-277).
+    */
   def filter(p: Column): KStream = KStream(df.filter(p), keys, tsCol, seqCol)
 
-  /** Per-key type filter (VectTerm.filterType, :224-244). */
+  /** Type-routing filter (Term.filterType, types.scala:270-272;
+    * VectTerm.filterType, :224-244). In the relational model the "runtime
+    * class" is a discriminator column.
+    */
   def filterType(disc: Column, tpe: String): KStream = filter(disc === lit(tpe))
 
+  /** Hierarchy-aware type routing — the reference's `filterType[T]`
+    * dispatches on the JVM CLASS HIERARCHY (an `isInstanceOf` check,
+    * types.scala:270-272), so filtering on a supertype also admits every
+    * subtype (OrderReportsExample.scala:86 routes New/Fill/Terminate order
+    * events through their common base). Relationally the taxonomy is a
+    * dotted discriminator path ("order", "order.fill"): filtering on
+    * `tpe` admits the exact type AND every `tpe.`-prefixed subtype.
+    */
+  def filterTypeHierarchy(disc: Column, tpe: String): KStream =
+    filter(disc === lit(tpe) || disc.startsWith(lit(tpe + ".")))
+
+  /** Demultiplex by `key` (MacroTerm.by, MacroTerm.scala:134-138;
+    * GroupFunc key discovery GroupFunc.scala:16-50): the result is keyed
+    * by `as` alone. Dynamic key discovery is free in Spark — grouping is by
+    * value, not by wired graph cells.
+    */
+  def by(key: Column, as: String = "k"): KStream =
+    KStream(df.withColumn(as, key), Seq(as), tsCol, seqCol)
+
   /** Key-subset filter (VectTerm.subset, :37). */
-  def subset(pred: Column): KStream = KStream(df.filter(pred), keys, tsCol, seqCol)
+  def subset(pred: Column): KStream = filter(pred)
 
   /** Dereference one key → single stream (VectTerm.apply, :63-111). */
   def apply(keyValue: Any): EStream =
-    EStream(df.filter(col(keys.head) === lit(keyValue)), tsCol, seqCol)
+    EStream(df.filter(col(firstKey) === lit(keyValue)), tsCol, seqCol)
 
   /** Re-key (VectTerm.mapKeys, :59-61 / ReKeyedVector.scala:9-60). A `None`
     * mapping (null) drops the key. The reference errors on two old keys
@@ -53,15 +106,20 @@ final case class KStream(
     */
   def toStream: EStream = EStream(df, tsCol, seqCol)
 
-  /** Set-building (VectTerm.toValueSet/:365-421, toKeySet/:355-363). */
-  def toValueSet(value: Column): DataFrame = df.select(value.as("v")).distinct()
+  /** Stream → growing distinct set (MacroTerm.valueSet, :160-185;
+    * VectTerm.toValueSet, :365-421); `valueSetExpand` flattens an array
+    * value via explode. `toKeySet` is VectTerm.toKeySet (:355-363).
+    */
+  def valueSet(value: Column): DataFrame = df.select(value.as("v")).distinct()
+  def valueSetExpand(values: Column): DataFrame =
+    df.select(explode(values).as("v")).distinct()
   def toKeySet: DataFrame = df.select(keyCols: _*).distinct()
 
   /** Full key list as one growing value (VectTerm.keyList, :43-52);
     * relationally the terminal snapshot is the distinct key set collected.
     */
   def keyList: DataFrame =
-    toKeySet.agg(sort_array(collect_list(col(keys.head))).as("key_list"))
+    toKeySet.agg(sort_array(collect_list(col(firstKey))).as("key_list"))
 
   /** Whole-vector snapshot function per event (VectTerm.mapVector,
     * :145-176): at each event, a function of ALL keys' current values.
@@ -162,13 +220,39 @@ final case class KStream(
   def groupByNested(outer: Column, as: String = "k2"): KStream =
     KStream(df.withColumn(as, outer), as +: keys, tsCol, seqCol)
 
-  /** Per-key cumulative scan (VectTerm.scan, :487-493). */
+  /** Per-key cumulative scan (fold_all, MacroTerm.scala:42-53;
+    * VectTerm.scan, :487-493): aggregate over the unbounded-preceding rows
+    * frame. GENERAL path — with no keys it plans as a single-partition
+    * window (the fold may be order-dependent, e.g. EWMA — inherently
+    * sequential). For associative folds over a whole stream use
+    * [[foldAllAssoc]], which distributes.
+    */
   def scanAll(out: String, agg: Column): KStream =
     KStream(
       df.withColumn(out, agg.over(WindowKernel.cumulative(keys, tsCol, seqCol))),
       keys, tsCol, seqCol)
 
-  /** Per-key terminal reduce (VectTerm.reduce, :487-493). */
+  /** Distributed fold_all for ASSOCIATIVE reductions (exact decimal sums,
+    * counts, min/max) over a stream with no keys: two-pass prefix scan —
+    * within-partition running values in parallel + broadcast per-partition
+    * offsets ([[graft.operators.DistributedScan]]). Same rows as
+    * [[scanAll]], O(n/P) wall-clock instead of a one-reducer window.
+    *
+    * @param outs (outputCol, perRowContribution, combine∈{sum,min,max}) —
+    *             e.g. a running count is `("n", lit(1L), "sum")`.
+    */
+  def foldAllAssoc(outs: (String, Column, String)*): KStream = {
+    require(keys.isEmpty,
+      s"foldAllAssoc is one scan over the whole stream, but this stream is " +
+        s"keyed by ${keys.mkString(", ")}; use scanAll for per-key running values")
+    KStream(
+      graft.operators.DistributedScan.runningAggs(df, tsCol, seqCol, outs),
+      keys, tsCol, seqCol)
+  }
+
+  /** Terminal reduce, one row per key (reduce_all, MacroTerm.scala:63-84;
+    * VectTerm.reduce, :487-493); a single row when there are no keys.
+    */
   def reduceAll(aggs: (String, Column)*): DataFrame =
     df.groupBy(keyCols: _*)
       .agg(aggs.head._2.as(aggs.head._1), aggs.tail.map { case (n, e) => e.as(n) }: _*)
@@ -203,10 +287,17 @@ final case class KStream(
       keys :+ as, tsCol, seqCol)
   }
 
+  /** Capture a slice spec (MacroTerm.group, :262-265). */
   def group(slice: Slice): GroupedKStream = GroupedKStream(this, slice)
+
+  /** Boolean-gated window (MacroTerm.window, :242-259; VectTerm.window,
+    * :530-543).
+    */
   def window(gate: Column): WindowedKStream = WindowedKStream(this, gate)
 
-  /** Keyed either-fires zip (VectTerm.join, :454-456 / VectorJoin.scala). */
+  /** Either-fires temporal zip per key (MacroTerm.join, :190-204;
+    * VectTerm.join, :454-456 / VectorJoin.scala).
+    */
   def joinZip(other: KStream, leftVals: Seq[(String, Column)], rightVals: Seq[(String, Column)]): KStream =
     KStream(AsOf.zip(df, other.df, keys, leftVals, rightVals, tsCol, seqCol), keys, tsCol, seqCol)
 
@@ -231,13 +322,18 @@ final case class KStream(
       keys, tsCol, seqCol)
   }
 
-  /** Keyed left-fires as-of sample (VectTerm.take, :458-460). `rightKey`
-    * expresses the reference's keyMap (right-key derivation from left key).
+  /** Left-fires as-of sample (MacroTerm.take, :209-221; VectTerm.take,
+    * :458-460). `rightKeyOfLeft` expresses the reference's keyMap
+    * (right-key derivation from left key).
     */
   def take(other: KStream, rightKeyOfLeft: Seq[Column], rightVals: Seq[(String, Column)]): KStream =
     KStream(
       AsOf.take(df, other.df, rightKeyOfLeft, other.keys.map(col), rightVals, tsCol, seqCol),
       keys, tsCol, seqCol)
+
+  /** [[take]] on this stream's own keys (the identity keyMap). */
+  def take(other: KStream, rightVals: Seq[(String, Column)]): KStream =
+    take(other, keyCols, rightVals)
 
   /** Keyed as-of take with a staleness bound ([[AsOf.takeWithin]]):
     * sampled values older than `tolerance` null out.
@@ -252,21 +348,44 @@ final case class KStream(
         rightVals, tolerance, tsCol, seqCol),
       keys, tsCol, seqCol)
 
-  /** Snapshot every key's value on each fire of `trigger`
-    * (VectTerm.sample, :468-482).
+  /** Emit this stream's latest values when `trigger` fires
+    * (MacroTerm.sample, :226-230; VectTerm.sample, :468-482). With no keys
+    * this is `trigger.take(this)`: one row per trigger event, even before
+    * this stream has any. With keys, every key's value is snapshotted on
+    * each trigger event: the trigger is replicated into every key
+    * partition via cross join with the key set, each pair as-of sampled.
     */
-  def sample(trigger: EStream, myVals: Seq[(String, Column)]): DataFrame = {
-    // trigger ticks × keys, each as-of sampled: union-window per key with
-    // the trigger replicated into every key partition via cross join.
-    val ticks = trigger.df.select(col(trigger.tsCol).as(tsCol), col(trigger.seqCol).as(seqCol))
-    val keyed = toKeySet.crossJoin(ticks)
+  def sample(trigger: KStream, myVals: Seq[(String, Column)]): KStream =
+    if (keys.isEmpty) trigger.take(this, Nil, myVals)
+    else {
+      val ticks = trigger.df.select(col(trigger.tsCol).as(tsCol), col(trigger.seqCol).as(seqCol))
+      val keyed = toKeySet.crossJoin(ticks)
+      KStream(
+        AsOf.take(keyed, df, keyCols, keyCols, myVals, tsCol, seqCol),
+        keys, tsCol, seqCol)
+    }
+
+  /** takef (MacroTerm.scala:140-142): per-event dereference of a STREAM-
+    * VALUED attribute — each event names a key (`keyOf`, any expression
+    * over this row), and samples that key's stream from `registry` as of
+    * the event time. The reference's `f: X => HasVal[Y]` cell lookup is
+    * relationally a derived-key as-of join; combine with
+    * [[graft.sources.Sources.keyToStreamDynamic]] for generated registries.
+    */
+  def takef(keyOf: Column, registry: KStream, rightVals: Seq[(String, Column)]): KStream =
     KStream(
-      AsOf.take(keyed, df, keys.map(col), keys.map(col), myVals, tsCol, seqCol),
-      keys, tsCol, seqCol).df
-  }
+      AsOf.take(df.withColumn("__fk", keyOf), registry.df,
+        Seq(col("__fk")), registry.keys.map(col), rightVals, tsCol, seqCol)
+        .drop("__fk"),
+      keys, tsCol, seqCol)
 }
 
-/** Per-key × per-slice aggregation (GroupedVectTerm, VectTerm.scala:609-696). */
+/** Per-key × per-slice aggregation: `.group(spec).scan(...)/.reduce(...)`
+  * (GroupedTerm, MacroTerm.scala:327-335; GroupedVectTerm,
+  * VectTerm.scala:609-696). `reduce` is the LAST emit-mode, one row per
+  * slice (types.scala:144-148 "Fold"); `scan` the CUMULATIVE one, a
+  * running value within each slice ("Scan").
+  */
 final case class GroupedKStream(s: KStream, slice: Slice) {
   private def withId: DataFrame =
     WindowKernel.withWindowId(s.df, s.keys, slice, s.tsCol, s.seqCol)
@@ -285,7 +404,10 @@ final case class GroupedKStream(s: KStream, slice: Slice) {
   }
 }
 
-/** Per-key boolean windows (VectTerm.window, :530-543). */
+/** Per-key boolean windows: `.window(gate).reduce(...)` — WindowedBucket
+  * semantics (WindowedBucket_Continuous/LastValue; close-edge precedence
+  * WindowedReduce.scala:55-58).
+  */
 final case class WindowedKStream(s: KStream, gate: Column) {
   private def sessions: DataFrame =
     WindowKernel

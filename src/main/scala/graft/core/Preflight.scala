@@ -80,9 +80,6 @@ object Preflight {
     * unreadable, or carries an off-contract column.
     */
   def check(spark: SparkSession, dir: String): Unit = {
-    // ns-long compat: if the events fixture flips back to ns timestamps the
-    // schema read itself needs this conf, same as Tables.events.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val problems = contract.flatMap { case (table, cols) =>
       try {
         val schema = spark.read.parquet(Tables.path(dir, table)).schema

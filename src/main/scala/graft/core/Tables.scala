@@ -27,18 +27,15 @@ object Tables {
     * data: every action still computes from the parquet bytes. Fixture
     * drift within a JVM is impossible (the harness data is immutable and
     * Preflight.check gates the one legitimate drift axis at startup).
+    * Inference of ns-timestamp fixtures needs
+    * `spark.sql.legacy.parquet.nanosAsLong`, which every graft session
+    * sets by default ([[graft.plans.GraftExtensions.Defaults]]).
     */
   private val schemaCache =
     scala.collection.concurrent.TrieMap[String, StructType]()
 
   def cachedSchema(spark: SparkSession, path: String): StructType =
-    schemaCache.getOrElseUpdate(path, {
-      // inference depends on this conf (ns-timestamp fixtures throw
-      // without it) and the result is memoized JVM-wide — set it HERE so
-      // the first caller's session can never poison the cache (ADVICE r15)
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      spark.read.parquet(path).schema
-    })
+    schemaCache.getOrElseUpdate(path, spark.read.parquet(path).schema)
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     val p = path(dir, name)
@@ -69,11 +66,10 @@ object Tables {
 
   /** `events` loader. Historically the fixture used ns parquet timestamps,
     * which Spark's vectorized reader rejects unless read as Long
-    * (`nanosAsLong`) — keep that conf for robustness if the encoding flips
-    * back; [[tsUsExpr]] handles either physical type it lands as.
+    * (`nanosAsLong`, a graft session default); [[tsUsExpr]] handles either
+    * physical type it lands as.
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = table(spark, dir, "events")
     raw
       .withColumn("ts", tsUsExpr(raw.schema))

@@ -4,10 +4,12 @@ package graft
   *
   * A stream is a `DataFrame` with `ts: Long` (event time, epoch-µs) and
   * `seq: Long` (deterministic arrival tie-break — scespet's global merge
-  * order, SURVEY §1.2). Wrap it:
+  * order, SURVEY §1.2), plus a list of key columns. There is one stream
+  * type, [[KStream]]; a single stream is a keyed stream with no keys, so
+  * every combinator is written once and applies to both. Wrap it:
   *
   * {{{
-  * val trades = EStream(df)                       // Term[X]
+  * val trades = EStream(df)                       // Term[X]: KStream(df, Nil)
   * val bySym  = trades.by(col("symbol"))          // MultiTerm[K,X]
   * }}}
   *
@@ -35,4 +37,14 @@ package graft
   * `reduce`/`last` = one row per bucket, `scan`/`all` = running value per
   * event. Streaming twins live in [[graft.streaming]].
   */
-package object core
+package object core {
+  import org.apache.spark.sql.DataFrame
+
+  /** A single stream: a [[KStream]] with no keys. */
+  type EStream = KStream
+
+  object EStream {
+    def apply(df: DataFrame, tsCol: String = "ts", seqCol: String = "seq"): EStream =
+      KStream(df, Nil, tsCol, seqCol)
+  }
+}

@@ -66,10 +66,17 @@ object GraftExtensions {
     *   of its own, and the loader is part of the codegen cache key, so
     *   every start recompiled byte-identical code. graft adds no session
     *   artifacts (jars, files), so the isolation protects nothing here.
+    * - `spark.sql.legacy.parquet.nanosAsLong=true`: the `events` fixture
+    *   has been written with nanosecond parquet timestamps, which Spark's
+    *   reader rejects unless it reads them as Long; `core.Tables.tsUsExpr`
+    *   normalizes either encoding. Set once per session here, not by the
+    *   code that loads a table: a loader or query that writes session conf
+    *   makes one query's result depend on which ran before it.
     */
   val Defaults: Seq[(String, String)] = Seq(
     "spark.sql.codegen.cache.maxEntries" -> "4096",
-    "spark.sql.artifact.isolation.enabled" -> "false")
+    "spark.sql.artifact.isolation.enabled" -> "false",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true")
 
   def setDefaults(conf: SparkConf): Unit =
     Defaults.foreach { case (k, v) => conf.setIfMissing(k, v) }

@@ -7,7 +7,8 @@ import graft.functions.Reducers
 
 /** scespet operator parity over the `events` stream table
   * (SURVEY.md §2.2–2.6). Each query goes through the graft library surface
-  * (EStream/KStream/WindowKernel/AsOf) and has a DuckDB oracle.
+  * (KStream — a single stream is `EStream(df)`, a KStream with no keys —
+  * WindowKernel, AsOf) and has a DuckDB oracle.
   *
   * `events` stream contract: ts = epoch nanos (Long), seq = event_id.
   * Oracle mirrors with epoch_us(ts) / event_id.
@@ -112,7 +113,7 @@ object CoreQueries {
       (s, dir) =>
         ev(s, dir)
           // associative folds → distributed two-pass prefix scan (>1 task
-          // in the scan stage; the general foldAll stays for EWMA-likes)
+          // in the scan stage; the general scanAll stays for EWMA-likes)
           .foldAllAssoc(
             ("run_sum", col("value").cast("decimal(38,6)"), "sum"),
             ("run_cnt", lit(1L), "sum"))
@@ -360,7 +361,6 @@ object CoreQueries {
     QueryDef(
       "stream_tumbling",
       (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         val schema = graft.core.Tables.cachedSchema(s, s"$dir/events.parquet")
         // the file stream source wants a directory: glob the one table file
         val src = s.readStream.schema(schema)
@@ -396,7 +396,6 @@ object CoreQueries {
     QueryDef(
       "stream_sliding",
       (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         // keyed-topic ingest shape (VERDICT r14 #3, same playbook that
         // took stream_session_window 6.48→3.96 s at sf1): the corpus
         // arrives as ~cores parquet files hash-partitioned by user_id
@@ -466,7 +465,6 @@ object CoreQueries {
         // table flows through readStream — nothing is ever materialized on
         // the driver (the round-1 collect()+MemoryStream harness was a
         // driver OOM at scale, VERDICT r1 "What's wrong" #3).
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         val schema = graft.core.Tables.cachedSchema(s, s"$dir/events.parquet")
         val src = s.readStream.schema(schema)
           .option("pathGlobFilter", "events.parquet").parquet(dir)
@@ -610,7 +608,6 @@ object CoreQueries {
       "stream_trigger_slices",
       (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
         import s.implicits._
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         val schema = graft.core.Tables.cachedSchema(s, s"$dir/events.parquet")
         val src = s.readStream.schema(schema)
           .option("pathGlobFilter", "events.parquet").parquet(dir)
@@ -650,7 +647,6 @@ object CoreQueries {
       "stream_gated_windows",
       (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
         import s.implicits._
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         val schema = graft.core.Tables.cachedSchema(s, s"$dir/events.parquet")
         val src = s.readStream.schema(schema)
           .option("pathGlobFilter", "events.parquet").parquet(dir)
@@ -694,7 +690,6 @@ object CoreQueries {
       "stream_zip_join",
       (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
         import s.implicits._
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         val schema = graft.core.Tables.cachedSchema(s, s"$dir/events.parquet")
         val src = s.readStream.schema(schema)
           .option("pathGlobFilter", "events.parquet").parquet(dir)
@@ -740,7 +735,6 @@ object CoreQueries {
       "stream_take_join",
       (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
         import s.implicits._
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         val schema = graft.core.Tables.cachedSchema(s, s"$dir/events.parquet")
         val src = s.readStream.schema(schema)
           .option("pathGlobFilter", "events.parquet").parquet(dir)
@@ -791,10 +785,8 @@ object CoreQueries {
       "stream_ewma",
       (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
         import s.implicits._
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        s.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
+        StreamHarness.withConf(s,
+          "spark.sql.streaming.stateStore.providerClass" -> StreamHarness.RocksDbProvider) {
           val schema = graft.core.Tables.cachedSchema(s, s"$dir/events.parquet")
           val src = s.readStream.schema(schema)
             .option("pathGlobFilter", "events.parquet").parquet(dir)
@@ -817,7 +809,7 @@ object CoreQueries {
             .agg(max_by(col("ewma"), struct(col("ts"), col("seq"))).as("ewma"))
             .select(col("k").cast("long").as("user_id"), col("ewma"))
             .orderBy("user_id")
-        } finally s.conf.unset("spark.sql.streaming.stateStore.providerClass")
+        }
       },
       Some("""SELECT user_id,
              list_reduce(list(value ORDER BY epoch_us(ts), event_id),
@@ -832,7 +824,6 @@ object CoreQueries {
     QueryDef(
       "stream_stream_join",
       (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         val schema = graft.core.Tables.cachedSchema(s, s"$dir/events.parquet")
         def side(tpe: String, pfx: String) =
           s.readStream.schema(schema)
@@ -883,7 +874,6 @@ object CoreQueries {
     QueryDef(
       "stream_outer_join",
       (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         val schema = graft.core.Tables.cachedSchema(s, s"$dir/events.parquet")
         def side(tpe: String, pfx: String) =
           s.readStream.schema(schema)
@@ -934,7 +924,6 @@ object CoreQueries {
     QueryDef(
       "stream_bind_bucket",
       (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         val schema = graft.core.Tables.cachedSchema(s, s"$dir/events.parquet")
         val src = s.readStream.schema(schema)
           .option("pathGlobFilter", "events.parquet").parquet(dir)
@@ -1081,7 +1070,7 @@ object CoreQueries {
           s, start, start + 7L * 86400000000L, 86400000000L)
         evKeyed(s, dir)
           .sample(grid, Seq("v" -> col("value")))
-          .select(col("user_id"), col("ts"), col("v"))
+          .df.select(col("user_id"), col("ts"), col("v"))
           .orderBy("user_id", "ts")
       },
       Some("""WITH ks AS (SELECT DISTINCT user_id FROM events),
@@ -1273,16 +1262,6 @@ object CoreQueries {
     QueryDef(
       "stream_session_window",
       (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.wideStreamPartitions(s)) {
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        // pre-merge sessions within each input partition BEFORE the
-        // key shuffle: the shuffle then moves ~sessions (~912k at sf1),
-        // not ~events (5M) — the quantity that matters on a real
-        // cluster's network; a single-JVM local shuffle shows parity
-        // (SCALE.md r12 has the honest A/B). Semantics identical — the
-        // oracle gate holds unchanged.
-        s.conf.set(
-          "spark.sql.streaming.sessionWindow.merge.sessions.in.local.partition",
-          "true")
         // the final emission rides the no-data micro-batch after the
         // sentinel advances the watermark — fail loudly on config drift
         // (same guard as stream_clean_corpus_ttl, ADVICE r11)
@@ -1292,67 +1271,72 @@ object CoreQueries {
             "spark.sql.streaming.noDataMicroBatches.enabled=true: append-" +
             "mode sessions finalize in the idle batch after the flush " +
             "sentinel's watermark advance")
-        val mainSrc = StreamFixtures.scratchDir("graft_sw_src_")
-        try {
-          // keyed-topic ingest shape (VERDICT r13 #3): the corpus arrives
-          // as ~cores parquet files hash-partitioned by user_id, and the
-          // scan takes one partition per file (withSplitPerFile) — the
-          // 5M-row sf1 decode runs file-parallel instead of on one core,
-          // and each partition holds complete per-user histories, so the
-          // local session pre-merge finishes sessions map-side and the
-          // key shuffle moves ~sessions. This replaces the r13 scanWide
-          // round-robin exchange (which fanned rows out but still paid
-          // the single-split decode AND an extra 5M-row exchange); a
-          // deployed Kafka topic is keyed, so this is the shape the
-          // operator actually sees in production.
-          val fxRoot = StreamFixtures.eventsKeyed(s, dir)
-          val schema = StreamFixtures.eventsKeyedSchema(s, dir)
-          StreamFixtures.feed(fxRoot, "keyed", mainSrc)
-          // the sentinel file is staged into the SAME source dir BEFORE
-          // start, so batch 0 admits the corpus and the flush row
-          // TOGETHER: the watermark only advances AFTER a batch, so
-          // nothing can be late-dropped, and the single no-data batch
-          // that follows finalizes and emits every real session and
-          // drains the store in one pass. (r12 needed a second source to
-          // stage the sentinel after batch 0; the r13 single-phase feed
-          // made that source pure overhead — one more listing + offset
-          // log + union node per trigger — so it is gone.)
-          StreamFixtures.feed(
-            StreamFixtures.sessionFlushFixture(s, dir), "flush", mainSrc)
-          val src = s.readStream.schema(schema).parquet(mainSrc)
-            .withColumn("event_time", timestamp_micros(graft.core.Tables.tsUsExpr(schema)))
-            .withWatermark("event_time", "0 seconds")
-          val agg = src
-            .groupBy(col("user_id"), session_window(col("event_time"), "1 hour"))
-            .agg(count(lit(1)).as("n"), Q.dsumD(col("value")).as("sum_value"))
-          val name = "stream_sw_" + System.nanoTime()
-          StreamHarness.withSplitPerFile(s) {
-          val sq = agg.writeStream.queryName(name).format("memory")
-            .outputMode("append")
-            .start()
+        // pre-merge sessions within each input partition BEFORE the
+        // key shuffle: the shuffle then moves ~sessions (~912k at sf1),
+        // not ~events (5M) — the quantity that matters on a real
+        // cluster's network; a single-JVM local shuffle shows parity
+        // (SCALE.md r12 has the honest A/B). Semantics identical — the
+        // oracle gate holds unchanged.
+        StreamHarness.withConf(s,
+          "spark.sql.streaming.sessionWindow.merge.sessions.in.local.partition" -> "true") {
+          val mainSrc = StreamFixtures.scratchDir("graft_sw_src_")
           try {
-            StreamHarness.settle(sq)
-            // the sentinel rides WITH the corpus in batch 0, so nothing
-            // may ever be late-dropped; if admission ever spans batches
-            // (fixture/source drift) this catches the silent loss
-            // (ADVICE r13, same spirit as the noDataMicroBatches guard)
-            val dropped = StreamHarness.watermarkDrops(sq)
-            require(dropped == 0L,
-              s"stream_session_window: $dropped rows late-dropped by the " +
-                "watermark — corpus and flush sentinel were not admitted " +
-                "in the same micro-batch; sessions were silently lost")
-          } finally sq.stop()
-          }
-          s.table(name)
-            .filter(col("user_id") =!= -1L)
-            .select(col("user_id"),
-              unix_micros(col("session_window.start")).as("wstart"),
-              col("n"), col("sum_value"))
-            .orderBy("user_id", "wstart")
-        } finally {
-          s.conf.unset(
-            "spark.sql.streaming.sessionWindow.merge.sessions.in.local.partition")
-          StreamFixtures.deleteRecursively(mainSrc)
+            // keyed-topic ingest shape (VERDICT r13 #3): the corpus arrives
+            // as ~cores parquet files hash-partitioned by user_id, and the
+            // scan takes one partition per file (withSplitPerFile) — the
+            // 5M-row sf1 decode runs file-parallel instead of on one core,
+            // and each partition holds complete per-user histories, so the
+            // local session pre-merge finishes sessions map-side and the
+            // key shuffle moves ~sessions. This replaces the r13 scanWide
+            // round-robin exchange (which fanned rows out but still paid
+            // the single-split decode AND an extra 5M-row exchange); a
+            // deployed Kafka topic is keyed, so this is the shape the
+            // operator actually sees in production.
+            val fxRoot = StreamFixtures.eventsKeyed(s, dir)
+            val schema = StreamFixtures.eventsKeyedSchema(s, dir)
+            StreamFixtures.feed(fxRoot, "keyed", mainSrc)
+            // the sentinel file is staged into the SAME source dir BEFORE
+            // start, so batch 0 admits the corpus and the flush row
+            // TOGETHER: the watermark only advances AFTER a batch, so
+            // nothing can be late-dropped, and the single no-data batch
+            // that follows finalizes and emits every real session and
+            // drains the store in one pass. (r12 needed a second source to
+            // stage the sentinel after batch 0; the r13 single-phase feed
+            // made that source pure overhead — one more listing + offset
+            // log + union node per trigger — so it is gone.)
+            StreamFixtures.feed(
+              StreamFixtures.sessionFlushFixture(s, dir), "flush", mainSrc)
+            val src = s.readStream.schema(schema).parquet(mainSrc)
+              .withColumn("event_time", timestamp_micros(graft.core.Tables.tsUsExpr(schema)))
+              .withWatermark("event_time", "0 seconds")
+            val agg = src
+              .groupBy(col("user_id"), session_window(col("event_time"), "1 hour"))
+              .agg(count(lit(1)).as("n"), Q.dsumD(col("value")).as("sum_value"))
+            val name = "stream_sw_" + System.nanoTime()
+            StreamHarness.withSplitPerFile(s) {
+              val sq = agg.writeStream.queryName(name).format("memory")
+                .outputMode("append")
+                .start()
+              try {
+                StreamHarness.settle(sq)
+                // the sentinel rides WITH the corpus in batch 0, so nothing
+                // may ever be late-dropped; if admission ever spans batches
+                // (fixture/source drift) this catches the silent loss
+                // (ADVICE r13, same spirit as the noDataMicroBatches guard)
+                val dropped = StreamHarness.watermarkDrops(sq)
+                require(dropped == 0L,
+                  s"stream_session_window: $dropped rows late-dropped by the " +
+                    "watermark — corpus and flush sentinel were not admitted " +
+                    "in the same micro-batch; sessions were silently lost")
+              } finally sq.stop()
+            }
+            s.table(name)
+              .filter(col("user_id") =!= -1L)
+              .select(col("user_id"),
+                unix_micros(col("session_window.start")).as("wstart"),
+                col("n"), col("sum_value"))
+              .orderBy("user_id", "wstart")
+          } finally StreamFixtures.deleteRecursively(mainSrc)
         }
       },
       Some("""SELECT user_id, min(t) AS wstart, count(*) AS n,
@@ -1382,7 +1366,6 @@ object CoreQueries {
     QueryDef(
       "stream_ingest_floor",
       (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         val fxRoot = StreamFixtures.eventsKeyed(s, dir)
         val schema = StreamFixtures.eventsKeyedSchema(s, dir)
         val srcDir = StreamFixtures.scratchDir("graft_floor_src_")
@@ -1667,7 +1650,6 @@ object CoreQueries {
     QueryDef(
       "stream_drift_kl",
       (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         // reference mix FROZEN per JVM (offline-computed monitoring
         // baseline; see StreamFixtures.frozen)
         val ctRows = StreamFixtures.frozen("driftkl_ct|" + dir) {
@@ -1792,7 +1774,6 @@ object CoreQueries {
     QueryDef(
       "stream_static_join",
       (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         val schema = graft.core.Tables.cachedSchema(s, s"$dir/events.parquet")
         // static dim: per-user tier derived once, batch-side
         val tiers = s.read.schema(schema)
@@ -1822,7 +1803,6 @@ object CoreQueries {
     QueryDef(
       "stream_dedup_exact",
       (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         val schema = graft.core.Tables.cachedSchema(s, s"$dir/events.parquet")
         val src = s.readStream.schema(schema)
           .option("pathGlobFilter", "events.parquet").parquet(dir)
@@ -2796,7 +2776,6 @@ object CoreQueries {
     QueryDef(
       "stream_interval_join",
       (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         val bRow = Q.events(s, dir)
           .agg(min(col("ts")).as("tmin"), max(col("ts")).as("tmax")).head()
         val (tmin, tmax) = (bRow.getLong(0), bRow.getLong(1))

@@ -7,7 +7,7 @@ import graft.core._
 /** Driver-gate closure for the SURVEY §2 rows that were golden-only after
   * round 2 (VERDICT r2 "What's missing" #1): source constructors
   * (IteratorEvents, asVector, keyToStream/lazyVect), trivial keyed
-  * accessors (subset, apply(k), toValueSet), the takef stream-valued
+  * accessors (subset, apply(k), valueSet), the takef stream-valued
   * dereference, ad-hoc CellAdder cells, and the rendezvous-exact bucket
   * chain — each as a composite query with a DuckDB oracle. Plus the
   * round-3 additions: hierarchy-aware subtype routing and the streaming
@@ -99,7 +99,7 @@ object ParityQueries {
       "ev_valueset_expand",
       (s, dir) => {
         val ks = KStream(Q.events(s, dir), Seq("user_id"))
-        val a = ks.toValueSet(
+        val a = ks.valueSet(
           concat_ws("|", col("event_type"), pmod(col("user_id"), lit(3))))
         val b = EStream(Q.events(s, dir))
           .valueSetExpand(array(col("event_type"), upper(col("event_type"))))
@@ -233,7 +233,6 @@ object ParityQueries {
       "stream_trigger_slices_before",
       (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
         import s.implicits._
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         val schema = graft.core.Tables.cachedSchema(s, s"$dir/events.parquet")
         val src = s.readStream.schema(schema)
           .option("pathGlobFilter", "events.parquet").parquet(dir)

@@ -28,36 +28,44 @@ import scala.jdk.CollectionConverters._
   */
 object StreamHarness {
 
-  /** Run `body` with `spark.sql.shuffle.partitions` set to `n`, restoring
-    * the previous session value afterwards. The streaming state-store
-    * count scales with this setting; the batch catalog keeps the session
-    * default (local[32] ⇒ 32).
+  /** Run `body` with each `key -> value` set on the session, then put every
+    * key back as it was: its previous value, or unset if it had none. The
+    * only way a catalog query changes session conf, so a query leaves the
+    * session as it found it.
     */
-  def withShufflePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    // state-backend sweep knob (VERDICT r6 #8): SPARK_GRAFT_STATE_BACKEND=
-    // rocksdb runs the WHOLE streaming catalog on the RocksDB provider
-    // (queries that pin RocksDB themselves, e.g. stream_ewma's
-    // transformWithState, are unaffected). Results must be backend-
-    // independent — the sweep re-checks every hash; SCALE.md records the
-    // per-backend toll.
-    val bk = "spark.sql.streaming.stateStore.providerClass"
-    val prevBk = s.conf.getOption(bk)
-    val rocks = sys.env.get("SPARK_GRAFT_STATE_BACKEND")
-      .exists(_.equalsIgnoreCase("rocksdb"))
-    if (rocks) s.conf.set(bk,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+  def withConf[T](s: SparkSession, kvs: (String, String)*)(body: => T): T = {
+    val set = s.conf.getAll // the explicitly set keys, no defaults
+    val prev = kvs.map { case (k, _) => k -> set.get(k) }
+    kvs.foreach { case (k, v) => s.conf.set(k, v) }
     try body
-    finally {
-      s.conf.set(key, prev)
-      if (rocks) prevBk match {
-        case Some(v) => s.conf.set(bk, v)
-        case None => s.conf.unset(bk)
-      }
+    finally prev.reverse.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
     }
   }
+
+  /** Run `body` with `spark.sql.shuffle.partitions` set to `n`. The
+    * streaming state-store count scales with this setting; the batch
+    * catalog keeps the session default (local[32] ⇒ 32).
+    *
+    * State-backend sweep knob (VERDICT r6 #8): SPARK_GRAFT_STATE_BACKEND=
+    * rocksdb runs the WHOLE streaming catalog on the RocksDB provider
+    * (queries that pin RocksDB themselves, e.g. stream_ewma's
+    * transformWithState, are unaffected). Results must be backend-
+    * independent — the sweep re-checks every hash; SCALE.md records the
+    * per-backend toll.
+    */
+  def withShufflePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
+    val rocks = sys.env.get("SPARK_GRAFT_STATE_BACKEND")
+      .exists(_.equalsIgnoreCase("rocksdb"))
+    val backend =
+      if (rocks) Seq("spark.sql.streaming.stateStore.providerClass" -> RocksDbProvider)
+      else Nil
+    withConf(s, ("spark.sql.shuffle.partitions" -> n.toString) +: backend: _*)(body)
+  }
+
+  val RocksDbProvider =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   /** Default partition count for the streaming catalog queries. 4 is the
     * measured sweet spot at catalog volumes (state-store commits scale
@@ -118,11 +126,11 @@ object StreamHarness {
       math.min(16, s.sparkContext.defaultParallelism))
 
   /** Run `body` with the file-scan bin-packer closing a partition at
-    * every file, restoring the session value afterwards. The pre-split
-    * keyed fixtures ([[StreamFixtures.eventsKeyed]]) are ~cores small
-    * files; under the defaults (maxPartitionBytes 128 MB, openCost 4 MB)
-    * the packer would coalesce them into one or two scan partitions and
-    * re-serialize the decode the split exists to parallelize. Setting
+    * every file. The pre-split keyed fixtures
+    * ([[StreamFixtures.eventsKeyed]]) are ~cores small files; under the
+    * defaults (maxPartitionBytes 128 MB, openCost 4 MB) the packer would
+    * coalesce them into one or two scan partitions and re-serialize the
+    * decode the split exists to parallelize. Setting
     * maxPartitionBytes to the 4 MB open cost makes every file its own
     * partition (any file's padded cost alone reaches the cap) — the
     * micro-batch scan then decodes file-parallel, which is exactly the
@@ -140,12 +148,8 @@ object StreamHarness {
     * a future concurrent runner must either pin its own session or plan
     * outside these windows.
     */
-  def withSplitPerFile[T](s: SparkSession)(body: => T): T = {
-    val key = "spark.sql.files.maxPartitionBytes"
-    val prev = s.conf.get(key)
-    s.conf.set(key, "4m")
-    try body finally s.conf.set(key, prev)
-  }
+  def withSplitPerFile[T](s: SparkSession)(body: => T): T =
+    withConf(s, "spark.sql.files.maxPartitionBytes" -> "4m")(body)
 
   /** Total rows dropped as too-late across every recorded micro-batch of
     * `q` (sum of stateOperators.numRowsDroppedByWatermark). The flush-

@@ -54,7 +54,6 @@ object StreamAmortize {
       builder.config("spark.sql.streaming.checkpointLocation", s"$d/ckpt"))
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     val results = Seq(
       "stream_ingest_floor" -> measureFloor(spark, sfDir, k),

@@ -55,7 +55,7 @@ class DistributedScanSpec extends SparkSpec {
     val assoc = s.foldAllAssoc(("run", col("value").cast("decimal(38,6)"), "sum"))
       .df.orderBy("ts", "seq").select(col("run").cast("double"))
       .as[Double].collect().toSeq
-    val general = s.foldAll("run", sum(col("value").cast("decimal(38,6)")))
+    val general = s.scanAll("run", sum(col("value").cast("decimal(38,6)")))
       .df.orderBy("ts", "seq").select(col("run").cast("double"))
       .as[Double].collect().toSeq
     assoc shouldBe general

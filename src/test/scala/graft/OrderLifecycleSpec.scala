@@ -119,7 +119,7 @@ class OrderLifecycleSpec extends SparkSpec {
       Seq("k"))
     val ticks = EStream(Seq((2L, 0L, 0), (5L, 1L, 0)).toDF("ts", "seq", "x"))
     val got = prices.sample(ticks, Seq("px" -> col("px")))
-      .orderBy("ts", "k")
+      .df.orderBy("ts", "k")
       .select("k", "ts", "px").as[(String, Long, Double)].collect().toSeq
     got shouldBe Seq(
       ("A", 2L, 10.0), ("B", 2L, 20.0),

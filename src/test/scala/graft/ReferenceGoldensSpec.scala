@@ -41,7 +41,7 @@ class ReferenceGoldensSpec extends SparkSpec {
   }
 
   test("'reduce' golden: single terminal append (BucketStreamTest:142-146)") {
-    EStream(chars).reduceAll(concat_ws("", collect_list(col("c"))).as("s"))
+    EStream(chars).reduceAll("s" -> concat_ws("", collect_list(col("c"))))
       .as[String].collect().toSeq shouldBe Seq(data)
   }
 

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -14,7 +15,9 @@ import graft.core._
   *     and per-window sums re-add to the stream total;
   *  2. count law — Count(n) windows have exactly n rows except the last;
   *  3. alignment law — BEFORE/AFTER window ids differ ONLY on trigger rows
-  *     (the trigger row opens the new bucket under BEFORE).
+  *     (the trigger row opens the new bucket under BEFORE);
+  *  4. keyed law — scespet's thesis: for every key k, a keyed stream's rows
+  *     for k equal the no-key stream `ks(k)` under the same expression.
   */
 class SlicePropertySpec extends SparkSpec {
   import spark.implicits._
@@ -30,6 +33,19 @@ class SlicePropertySpec extends SparkSpec {
 
   private def stream(vs: List[Int]) =
     vs.zipWithIndex.map { case (v, i) => (i.toLong, i.toLong, v) }.toDF("ts", "seq", "v")
+
+  /** The same values spread over keys 0-2; `other` is a second keyed
+    * stream on a coarser clock, for as-of takes.
+    */
+  private def keyed(vs: List[Int]) =
+    vs.zipWithIndex.map { case (v, i) =>
+      (Math.floorMod(i * 7 + v, 3).toLong, i.toLong, i.toLong, v)
+    }.toDF("k", "ts", "seq", "v")
+
+  private def other(vs: List[Int]) =
+    vs.zipWithIndex.map { case (v, i) =>
+      (Math.floorMod(i * 5 + v, 3).toLong, (i * 3 / 2).toLong, i.toLong, v * 10)
+    }.toDF("k", "ts", "seq", "rv")
 
   test("composition law: Count(a) then Count(b) over the emissions " +
     "equals Count(a*b) directly (layered slicing, random streams)") {
@@ -148,6 +164,38 @@ class SlicePropertySpec extends SparkSpec {
         withClue(s"v=$v vs=$vs: ") {
           if (v % 3 == 0) ib shouldBe ia + 1
           else ib shouldBe ia
+        }
+      }
+    }
+  }
+
+  test("keyed law: each key's rows of a keyed stream equal the no-key " +
+    "stream of that key under slices, gates, scanAll and take") {
+    cases(4).foreach { case (vs, w) =>
+      val n = math.max(1, w / 2)
+      val laws: Seq[(String, (KStream, KStream) => DataFrame)] = Seq(
+        "group(Count).reduce" -> ((s, _) => s.group(Slice.Count(n))
+          .reduce("s" -> sum(col("v")), "c" -> count(lit(1)))),
+        "group(Count).scan" -> ((s, _) => s.group(Slice.Count(n)).scan("run", sum(col("v")))),
+        "group(Tumbling).reduce" -> ((s, _) => s.group(Slice.Tumbling(w.toLong))
+          .reduce("s" -> sum(col("v")), "c" -> count(lit(1)))),
+        "group(Tumbling).scan" -> ((s, _) =>
+          s.group(Slice.Tumbling(w.toLong)).scan("run", sum(col("v")))),
+        "window.reduce" -> ((s, _) => s.window(col("v") % 2 === 0)
+          .reduce("s" -> sum(col("v")), "c" -> count(lit(1)))),
+        "scanAll" -> ((s, _) => s.scanAll("run", sum(col("v"))).df),
+        "take" -> ((s, o) => s.take(o, Seq("rv" -> col("rv"))).df))
+      val ks = KStream(keyed(vs), Seq("k"))
+      val ko = KStream(other(vs), Seq("k"))
+      val keys = ks.toKeySet.as[Long].collect().toSeq.sorted
+      def rows(df: DataFrame) =
+        df.drop("k").collect().map(_.toString).toSeq.sorted
+      laws.foreach { case (name, f) =>
+        val all = f(ks, ko)
+        keys.foreach { k =>
+          withClue(s"$name k=$k vs=$vs w=$w: ") {
+            rows(all.filter(col("k") === k)) shouldBe rows(f(ks(k), ko(k)))
+          }
         }
       }
     }

@@ -171,8 +171,8 @@ class SourcesSpec extends SparkSpec {
     got shouldBe Seq((35.31, 100L), (35.32, 250L), (35.30, 50L))
     // and it is a regular EStream: running VWAP over the tick file
     val vwap = graft.core.EStream(df)
-      .reduceAll(graft.functions.Reducers
-        .vwap(col("price"), col("quantity")).as("vwap"))
+      .reduceAll("vwap" -> graft.functions.Reducers
+        .vwap(col("price"), col("quantity")))
       .as[Double].collect().head
     vwap shouldBe (35.31 * 100 + 35.32 * 250 + 35.30 * 50) / 400.0 +- 1e-9
   }
@@ -215,7 +215,7 @@ class SourcesSpec extends SparkSpec {
     bad.count() shouldBe 2L
     // good rows form a regular EStream
     graft.core.EStream(good.drop("_corrupt"))
-      .reduceAll(sum(col("v")).cast("double").as("s"))
+      .reduceAll("s" -> sum(col("v")).cast("double"))
       .as[Double].collect().head shouldBe 60.75
   }
 }

@@ -48,7 +48,7 @@ class StreamOpsSpec extends SparkSpec {
 
   test("fold_all: cumulative scan over the whole stream (MacroTerm.scala:42-53)") {
     val got = EStream(trades)
-      .foldAll("run_q", sum(col("qty")))
+      .scanAll("run_q", sum(col("qty")))
       .df.orderBy("seq").select("run_q").as[Long].collect().toSeq
     got shouldBe Seq(1, 2, 3, 4, 5, 6).scanLeft(0L)(_ + _).tail
   }
@@ -93,7 +93,7 @@ class StreamOpsSpec extends SparkSpec {
 
   test("toValueSet and keyList on a keyed stream (VectTerm:355-421,43-52)") {
     val ks = KStream(trades, Seq("name"))
-    ks.toValueSet(col("name")).orderBy("v")
+    ks.valueSet(col("name")).orderBy("v")
       .as[String].collect().toSeq shouldBe Seq("MSFT.O", "VOD.L")
     ks.keyList.as[Seq[String]].collect().head shouldBe Seq("MSFT.O", "VOD.L")
   }
@@ -116,5 +116,16 @@ class StreamOpsSpec extends SparkSpec {
       .vectorSizeAtEachEvent("nk")
       .orderBy("seq").select("nk").as[Long].collect().toSeq
     got shouldBe Seq(1L, 2L, 2L, 2L, 2L, 2L)
+  }
+
+  test("one stream type: key-only operators fail fast on a stream with no " +
+    "keys, and the whole-stream foldAllAssoc fails fast on a keyed one") {
+    val single = EStream(trades)
+    single.keys shouldBe Nil
+    an[IllegalArgumentException] should be thrownBy single("VOD.L")
+    an[IllegalArgumentException] should be thrownBy single.keyList
+    val e = the[IllegalArgumentException] thrownBy
+      KStream(trades, Seq("name")).foldAllAssoc(("n", lit(1L), "sum"))
+    e.getMessage should include("scanAll")
   }
 }

@@ -31,7 +31,7 @@ class TradesExampleSpec extends SparkSpec {
 
   test("testFoldAll golden: running Sum of qty (TradesExample:46-49)") {
     EStream(trades)
-      .foldAll("acc", sum(col("qty")))
+      .scanAll("acc", sum(col("qty")))
       .df.orderBy("seq").select("acc").as[Long].collect().toSeq shouldBe
       Seq(1L, 11L, 13L, 113L, 133L, 1133L, 1333L, 11333L, 13333L)
   }
@@ -61,7 +61,7 @@ class TradesExampleSpec extends SparkSpec {
     "derived from a Counter over the gated stream itself (TradesExample:62-72)") {
     // counter = fold_all(Counter); window = x<=3 || (x>=size-4 && x<size)
     val counted = EStream(trades)
-      .foldAll("x", count(lit(1)))
+      .scanAll("x", count(lit(1)))
       .df
     val gate = col("x") <= 3 || (col("x") >= 5 && col("x") < 9)
     // close-edge precedence: trade 4 (gate false) closes bucket 1 and is

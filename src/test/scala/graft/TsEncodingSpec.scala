@@ -59,7 +59,6 @@ class TsEncodingSpec extends SparkSpec {
     "runtime schema) matches batch under both fixture encodings") {
     for (enc <- Seq("ns_long", "ts_us")) {
       val dir = writeFixture(enc)
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val schema = spark.read.parquet(s"$dir/events.parquet").schema
       // the shape of the 13 catalog readStream sites (the fixture here is
       // a directory, so no pathGlobFilter; tsUsExpr-on-runtime-schema is
