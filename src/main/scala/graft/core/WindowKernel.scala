@@ -42,7 +42,9 @@ object Slice {
     * (SliceTriggerSpec.scala:53-56, NthEvent BucketBuilderImpl.scala:7-21).
     * Count-based, so inherently order-dependent: needs a sort per key.
     */
-  final case class Count(n: Int) extends Slice
+  final case class Count(n: Int) extends Slice {
+    require(n > 0, s"Slice.Count needs a positive slice size, got n = $n")
+  }
 
   /** Data-driven slicing: a predicate ON THE SAME STREAM acts as the
     * trigger (scespet: any EventGraphObject as trigger,

@@ -453,7 +453,7 @@ object CoreQueries {
              ORDER BY user_id, wstart""")),
 
     // ---- stateful streaming count-slices under the gate: the custom
-    // flatMapGroupsWithState operator (no Spark built-in for N-event
+    // KeyedFold operator (no Spark built-in for N-event
     // windows) verified against the window-function SQL oracle. Closed
     // buckets only — a live stream never sees termination, so the batch
     // twin filters to full buckets.
@@ -498,7 +498,7 @@ object CoreQueries {
     // parked in the state store; incarnation 2 discovers the second file,
     // restores state, and closes the buckets that STRADDLE the restart.
     // The combined sink must equal the single-run batch oracle over the
-    // full table — possible only if (a) flatMapGroupsWithState state
+    // full table — possible only if (a) the KeyedFold state
     // round-trips through the checkpoint and (b) the file-sink commit log
     // is exactly-once. This is the operational contract a 100 TB streaming
     // pipeline leans on across executor loss / planned restarts.
@@ -599,7 +599,7 @@ object CoreQueries {
              ORDER BY user_id, wstart""")),
 
     // ---- stateful streaming trigger-slices under the gate: the custom
-    // flatMapGroupsWithState operator closes a bucket when the trigger
+    // KeyedFold operator closes a bucket when the trigger
     // event ('error') arrives — Align.After: the trigger JOINS its bucket.
     // A live stream only emits CLOSED buckets (the trailing partial stays
     // in state), so the oracle keeps exactly the groups containing a
@@ -638,7 +638,7 @@ object CoreQueries {
              WHERE n_trig > 0 ORDER BY user_id, window_id""")),
 
     // ---- boolean-gated windows on a LIVE stream under the gate: the
-    // flatMapGroupsWithState session operator (open on false→true edge,
+    // KeyedFold session operator (open on false→true edge,
     // close-excludes-its-event precedence). A live stream emits only
     // CLOSED sessions; since session_id increments only at open edges,
     // a session is closed iff some gate=false row carries its id — the

@@ -2,17 +2,17 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
-  StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
+  TimerValues, TTLConfig, ValueState}
 
 /** Structured Streaming execution of the graft operator semantics.
   *
   * scespet is a push-graph CEP engine; its streaming analog in Spark is
   * Structured Streaming (SURVEY §1.2, §4.2): event-time columns +
-  * watermarks for time slices, stateful operators for count/trigger
-  * slices and multi-input buckets. The batch kernel (WindowKernel) and
-  * these operators share semantics — the conformance spec runs the same
-  * data through both and asserts identical buckets.
+  * watermarks for time slices, per-key folds ([[KeyedFold]]) for
+  * count/trigger slices and multi-input buckets. The batch kernel
+  * (WindowKernel) and these operators share semantics — the conformance
+  * spec runs the same data through both and asserts identical buckets.
   */
 object Streams {
 
@@ -126,42 +126,38 @@ final case class CountBucket(
     k: String, windowId: Long, n: Long, sum: Double, mn: Double, mx: Double)
 
 private final case class CountSliceState(
-    windowId: Long, n: Long, sum: Double, mn: Double, mx: Double)
+    windowId: Long, n: Long, sum: Double, mn: Double, mx: Double) {
+  def add(v: Double): CountSliceState =
+    CountSliceState(windowId, n + 1, sum + v, math.min(mn, v), math.max(mx, v))
+  def bucket(k: String): CountBucket = CountBucket(k, windowId, n, sum, mn, mx)
+  def next: CountSliceState =
+    CountSliceState(windowId + 1, 0L, 0.0, Double.MaxValue, Double.MinValue)
+}
+
+private object CountSliceState {
+  val First = CountSliceState(0L, 0L, 0.0, Double.MaxValue, Double.MinValue)
+}
 
 /** Count-based slicing on a live stream (scespet `Events(n)` /
   * `group(3.events).reduce`, SliceTriggerSpec.scala:53-56): no Spark
-  * built-in exists, so per-key state in `flatMapGroupsWithState` counts
-  * events and emits a bucket each time N accumulate. Batch twin:
+  * built-in exists, so a per-key fold counts events in (ts, seq) order
+  * and emits a bucket each time N accumulate. Batch twin:
   * `WindowKernel.withWindowId(Slice.Count(n))`.
-  *
-  * Ordering contract: within one micro-batch the group's events are
-  * sorted by (ts, seq) before folding; across batches arrival order must
-  * respect event order per key (the standard per-key-ordered-source
-  * assumption, e.g. a keyed Kafka topic).
   */
 object CountSlices {
 
   def apply(events: Dataset[KeyedEvent], n: Int): Dataset[CountBucket] = {
+    require(n > 0, s"CountSlices needs a positive slice size, got n = $n")
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.k)
-      .flatMapGroupsWithState[CountSliceState, CountBucket](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: String, it: Iterator[KeyedEvent], state: GroupState[CountSliceState]) =>
-          var s = state.getOption.getOrElse(
-            CountSliceState(0L, 0L, 0.0, Double.MaxValue, Double.MinValue))
-          val out = Seq.newBuilder[CountBucket]
-          it.toSeq.sortBy(e => (e.ts, e.seq)).foreach { e =>
-            s = CountSliceState(s.windowId, s.n + 1, s.sum + e.v,
-              math.min(s.mn, e.v), math.max(s.mx, e.v))
-            if (s.n == n) {
-              out += CountBucket(key, s.windowId, s.n, s.sum, s.mn, s.mx)
-              s = CountSliceState(s.windowId + 1, 0L, 0.0, Double.MaxValue, Double.MinValue)
-            }
-          }
-          state.update(s)
-          out.result().iterator
-      }
+    KeyedFold.run(events,
+      new KeyedFold[String, KeyedEvent, CountSliceState, CountBucket](
+        _.k, Ordering.by(e => (e.ts, e.seq)), CountSliceState.First) {
+        def step(k: String, s: CountSliceState, e: KeyedEvent,
+                 emit: CountBucket => Unit): CountSliceState = {
+          val a = s.add(e.v)
+          if (a.n == n) { emit(a.bucket(k)); a.next } else a
+        }
+      })
   }
 }
 
@@ -244,53 +240,34 @@ object EwmaScan {
 
 /** Trigger-stream slicing on a live stream (scespet's stream-as-trigger
   * slices, SliceTriggerSpec.scala:57-73): per-key state folds events in
-  * order; an event matching the trigger closes the bucket. `Align.After`
-  * semantics: the triggering event JOINS the closing bucket (end-
-  * inclusive, SliceAfterBucket.scala:13-16); `before = true` gives
-  * end-exclusive (the trigger event opens the new bucket). Batch twin:
-  * `WindowKernel.withWindowId(Slice.TriggerCol(…))`.
+  * (ts, seq) order; an event whose `gate` is set closes the bucket.
+  * `Align.After` semantics: the triggering event JOINS the closing bucket
+  * (end-inclusive, SliceAfterBucket.scala:13-16); `before = true` gives
+  * end-exclusive (the trigger event opens the new bucket). The trigger
+  * predicate is evaluated in the PLAN (any Column over the source row
+  * lands in `gate`), so it can reference columns the typed event doesn't
+  * carry. Batch twin: `WindowKernel.withWindowId(Slice.TriggerCol(…))`.
   */
 object TriggerSlices {
 
-  def apply(
-      events: Dataset[KeyedEvent],
-      isTrigger: KeyedEvent => Boolean,
-      before: Boolean = false): Dataset[CountBucket] = {
-    import events.sparkSession.implicits._
-    tagged(events.map(e => GatedEvent(e.k, e.ts, e.seq, e.v, isTrigger(e))), before)
-  }
-
-  /** Column-tagged variant: the trigger predicate is evaluated in the
-    * PLAN (any Column over the source row lands in `gate`), so the
-    * trigger can reference columns the typed event doesn't carry.
-    */
   def tagged(
       events: Dataset[GatedEvent],
       before: Boolean = false): Dataset[CountBucket] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.k)
-      .flatMapGroupsWithState[CountSliceState, CountBucket](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: String, it: Iterator[GatedEvent], state: GroupState[CountSliceState]) =>
-          var s = state.getOption.getOrElse(
-            CountSliceState(0L, 0L, 0.0, Double.MaxValue, Double.MinValue))
-          val out = Seq.newBuilder[CountBucket]
-          def close(): Unit = {
-            if (s.n > 0) out += CountBucket(key, s.windowId, s.n, s.sum, s.mn, s.mx)
-            s = CountSliceState(s.windowId + 1, 0L, 0.0, Double.MaxValue, Double.MinValue)
+    KeyedFold.run(events,
+      new KeyedFold[String, GatedEvent, CountSliceState, CountBucket](
+        _.k, Ordering.by(e => (e.ts, e.seq)), CountSliceState.First) {
+        def step(k: String, s: CountSliceState, e: GatedEvent,
+                 emit: CountBucket => Unit): CountSliceState = {
+          def close(c: CountSliceState) = {
+            if (c.n > 0) emit(c.bucket(k))
+            c.next
           }
-          def add(e: GatedEvent): Unit =
-            s = CountSliceState(s.windowId, s.n + 1, s.sum + e.v,
-              math.min(s.mn, e.v), math.max(s.mx, e.v))
-          it.toSeq.sortBy(e => (e.ts, e.seq)).foreach { e =>
-            if (e.gate) {
-              if (before) { close(); add(e) } else { add(e); close() }
-            } else add(e)
-          }
-          state.update(s)
-          out.result().iterator
-      }
+          if (!e.gate) s.add(e.v)
+          else if (before) close(s).add(e.v)
+          else close(s.add(e.v))
+        }
+      })
   }
 }
 
@@ -308,39 +285,33 @@ object GatedWindows {
 
   def apply(events: Dataset[GatedEvent]): Dataset[CountBucket] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.k)
-      .flatMapGroupsWithState[GateState, CountBucket](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: String, it: Iterator[GatedEvent], state: GroupState[GateState]) =>
-          var s = state.getOption.getOrElse(
-            GateState(open = false, 0L, 0L, 0.0, Double.MaxValue, Double.MinValue))
-          val out = Seq.newBuilder[CountBucket]
-          it.toSeq.sortBy(e => (e.ts, e.seq)).foreach { e =>
-            (s.open, e.gate) match {
-              case (false, true) => // open edge: session starts WITH this event
-                s = GateState(open = true, s.sessionId + 1, 1L, e.v, e.v, e.v)
-              case (true, true) =>
-                s = s.copy(n = s.n + 1, sum = s.sum + e.v,
-                  mn = math.min(s.mn, e.v), mx = math.max(s.mx, e.v))
-              case (true, false) => // close edge excludes its event
-                out += CountBucket(key, s.sessionId, s.n, s.sum, s.mn, s.mx)
-                s = s.copy(open = false, n = 0L, sum = 0.0,
-                  mn = Double.MaxValue, mx = Double.MinValue)
-              case (false, false) => ()
-            }
-          }
-          state.update(s)
-          out.result().iterator
-      }
+    KeyedFold.run(events,
+      new KeyedFold[String, GatedEvent, GateState, CountBucket](
+        _.k, Ordering.by(e => (e.ts, e.seq)),
+        GateState(open = false, 0L, 0L, 0.0, Double.MaxValue, Double.MinValue)) {
+        def step(k: String, s: GateState, e: GatedEvent,
+                 emit: CountBucket => Unit): GateState = (s.open, e.gate) match {
+          case (false, true) => // open edge: session starts WITH this event
+            GateState(open = true, s.sessionId + 1, 1L, e.v, e.v, e.v)
+          case (true, true) =>
+            s.copy(n = s.n + 1, sum = s.sum + e.v,
+              mn = math.min(s.mn, e.v), mx = math.max(s.mx, e.v))
+          case (true, false) => // close edge excludes its event
+            emit(CountBucket(k, s.sessionId, s.n, s.sum, s.mn, s.mx))
+            s.copy(open = false, n = 0L, sum = 0.0,
+              mn = Double.MaxValue, mx = Double.MinValue)
+          case (false, false) => s
+        }
+      })
   }
 }
 
 /** Streaming either-fires zip join (scespet `join`, MacroTerm.scala:190-204):
-  * per-key state holds the latest value of each side; every event emits the
-  * current pair (rendezvous: both sides in one batch-group are folded in
-  * (ts, seq) order, so a same-cycle pair emits once with both values).
-  * Batch twin: [[graft.core.AsOf.zip]].
+  * per-key state holds the latest value of each side (`side` 0 = right,
+  * 1 = left); rows fold in (ts, side, seq) order and every ts cycle emits
+  * the current pair ONCE, after the whole cycle (rendezvous: both sides in
+  * one cycle emit one pair with both values). Batch twin:
+  * [[graft.core.AsOf.zip]].
   */
 final case class ZipEvent(k: String, ts: Long, seq: Long, side: Int, v: Double)
 final case class ZipOut(k: String, ts: Long, left: Option[Double], right: Option[Double])
@@ -354,27 +325,20 @@ object ZipJoin {
       events: Dataset[ZipEvent],
       emitOnRightOnly: Boolean): Dataset[ZipOut] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.k)
-      .flatMapGroupsWithState[ZipState, ZipOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: String, it: Iterator[ZipEvent], state: GroupState[ZipState]) =>
-          var s = state.getOption.getOrElse(ZipState(None, None))
-          val out = Seq.newBuilder[ZipOut]
-          // one emission per (ts) cycle: fold cycle groups in order
-          it.toSeq.sortBy(e => (e.ts, e.side, e.seq))
-            .groupBy(_.ts).toSeq.sortBy(_._1)
-            .foreach { case (ts, cycle) =>
-              cycle.foreach { e =>
-                s = if (e.side == 0) s.copy(right = Some(e.v))
-                    else s.copy(left = Some(e.v))
-              }
-              if (emitOnRightOnly || cycle.exists(_.side == 1))
-                out += ZipOut(key, ts, s.left, s.right)
-            }
-          state.update(s)
-          out.result().iterator
-      }
+    KeyedFold.run(events,
+      new KeyedFold[String, ZipEvent, ZipState, ZipOut](
+        _.k, Ordering.by(e => (e.ts, e.side, e.seq)), ZipState(None, None)) {
+        def step(k: String, s: ZipState, e: ZipEvent, emit: ZipOut => Unit): ZipState =
+          if (e.side == 0) s.copy(right = Some(e.v)) else s.copy(left = Some(e.v))
+        override def cycle(e: ZipEvent): Any = e.ts
+        // side 1 sorts last in its cycle: the cycle has a left row iff
+        // its last row is one
+        override def flush(k: String, s: ZipState, last: ZipEvent,
+                           emit: ZipOut => Unit): ZipState = {
+          if (emitOnRightOnly || last.side == 1) emit(ZipOut(k, last.ts, s.left, s.right))
+          s
+        }
+      })
   }
 }
 
@@ -393,13 +357,12 @@ object TakeJoin {
   * holds the signatures seen so far. An arriving document compares against
   * ONLY its bucket's history (bounded by the banding, never all-pairs) and
   * emits a pair when ≥ `minEq` of the H minhash components agree.
+  * Documents fold in docId order.
   *
   * This is dedup-against-history for an ingest pipeline, and its state is
   * BOUNDED (the r2 unbounded-`Seq` gap): per-bucket history is a FIFO
   * capped at `maxPerBucket` entries — the oldest signature evicts when a
-  * new arrival would exceed the cap — and, when `ttlMs > 0`, a bucket that
-  * receives no documents for that long drops its whole history via a
-  * processing-time group timeout. On an infinite stream total state is
+  * new arrival would exceed the cap. On an infinite stream total state is
   * therefore ≤ activeBuckets × maxPerBucket × sigBytes regardless of
   * runtime; the banding keeps real bucket occupancy far below the cap
   * (more bands/rows is the production lever), so eviction only bites on
@@ -421,46 +384,33 @@ object StreamNearDup {
     */
   val DefaultMaxPerBucket = 256
 
+  /** `history` plus `x`, keeping only the newest `cap` entries. */
+  private[streaming] def fifo[T](history: Seq[T], x: T, cap: Int): Seq[T] = {
+    val h = history.toVector :+ x
+    if (h.size > cap) h.drop(h.size - cap) else h
+  }
+
   def apply(
       docs: Dataset[BandDoc],
       minEq: Int,
-      maxPerBucket: Int = DefaultMaxPerBucket,
-      ttlMs: Long = 0L): Dataset[NearDupPair] = {
+      maxPerBucket: Int = DefaultMaxPerBucket): Dataset[NearDupPair] = {
     import docs.sparkSession.implicits._
     require(maxPerBucket > 0, "maxPerBucket must be positive")
-    val timeoutConf =
-      if (ttlMs > 0) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    docs
-      .groupByKey(d => (d.band, d.bh))
-      .flatMapGroupsWithState[BucketSigs, NearDupPair](
-        OutputMode.Append, timeoutConf) {
-        (_, it: Iterator[BandDoc], state: GroupState[BucketSigs]) =>
-          if (state.hasTimedOut) {
-            state.remove() // idle bucket: whole history expires
-            Iterator.empty
-          } else {
-            val buf = scala.collection.mutable.ArrayBuffer
-              .from(state.getOption.map(_.entries).getOrElse(Seq.empty))
-            val out = Seq.newBuilder[NearDupPair]
-            it.toSeq.sortBy(_.docId).foreach { d =>
-              buf.foreach { case (id, sig) =>
-                if (id != d.docId) {
-                  val nEq = sig.iterator.zip(d.sig.iterator)
-                    .count { case (a, b) => a == b }
-                  if (nEq >= minEq)
-                    out += NearDupPair(
-                      math.min(id, d.docId), math.max(id, d.docId), nEq)
-                }
-              }
-              buf += (d.docId -> d.sig)
-              if (buf.size > maxPerBucket) buf.remove(0, buf.size - maxPerBucket)
+    KeyedFold.run(docs,
+      new KeyedFold[(Int, Long), BandDoc, BucketSigs, NearDupPair](
+        d => (d.band, d.bh), Ordering.by(_.docId), BucketSigs(Seq.empty)) {
+        def step(k: (Int, Long), s: BucketSigs, d: BandDoc,
+                 emit: NearDupPair => Unit): BucketSigs = {
+          s.entries.foreach { case (id, sig) =>
+            if (id != d.docId) {
+              val nEq = sig.iterator.zip(d.sig.iterator).count { case (a, b) => a == b }
+              if (nEq >= minEq)
+                emit(NearDupPair(math.min(id, d.docId), math.max(id, d.docId), nEq))
             }
-            state.update(BucketSigs(buf.toSeq))
-            if (ttlMs > 0) state.setTimeoutDuration(ttlMs)
-            out.result().iterator
           }
-      }
+          BucketSigs(fifo(s.entries, d.docId -> d.sig, maxPerBucket))
+        }
+      })
   }
 }
 
@@ -482,14 +432,11 @@ object StreamNearDup {
   *
   * Last-match SEQ semantics: a purchase matches the LATEST click within
   * `winUs`, and is vetoed iff an error falls strictly between that click
-  * and the purchase. Clicks sort before purchases within a cycle (kind
-  * order), so a same-cycle click is visible to its purchase — identical
-  * to the batch oracle's (t, side, event_id) window order.
-  *
-  * Ordering contract: within one micro-batch the group's events are sorted
-  * by (ts, kind, seq); across batches arrival order must respect event
-  * order per key (the per-key-ordered-source assumption; the catalog query
-  * feeds time-split halves to prove cross-batch register carry).
+  * and the purchase. Rows fold in (ts, kind, seq) order, so clicks sort
+  * before purchases within a cycle and a same-cycle click is visible to
+  * its purchase — identical to the batch oracle's (t, side, event_id)
+  * window order. (The catalog query feeds time-split halves to prove
+  * cross-batch register carry.)
   */
 final case class CepEvent(k: String, ts: Long, seq: Long, kind: Int) // 0=click 1=error 2=purchase
 final case class CepMatch(k: String, eventId: Long, pT: Long, clickT: Long)
@@ -499,30 +446,26 @@ object CepPattern {
 
   private val None_ = Long.MinValue
 
+  /** The (ts, kind, seq) row order the CEP folds share. */
+  private[streaming] val order: Ordering[CepEvent] = Ordering.by(e => (e.ts, e.kind, e.seq))
+
   def apply(events: Dataset[CepEvent], winUs: Long): Dataset[CepMatch] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.k)
-      .flatMapGroupsWithState[CepState, CepMatch](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: String, it: Iterator[CepEvent], state: GroupState[CepState]) =>
-          var s = state.getOption.getOrElse(CepState(None_, None_, None_))
-          val out = Seq.newBuilder[CepMatch]
-          it.toSeq.sortBy(e => (e.ts, e.kind, e.seq)).foreach { e =>
-            e.kind match {
-              case 0 => s = s.copy(lastClick = e.ts)
-              case 1 =>
-                if (e.ts > s.err1) s = s.copy(err1 = e.ts, err2 = s.err1)
-              case _ =>
-                val lastErrBelow = if (s.err1 < e.ts) s.err1 else s.err2
-                if (s.lastClick != None_ && e.ts - s.lastClick <= winUs &&
-                  lastErrBelow <= s.lastClick)
-                  out += CepMatch(key, e.seq, e.ts, s.lastClick)
-            }
-          }
-          state.update(s)
-          out.result().iterator
-      }
+    KeyedFold.run(events,
+      new KeyedFold[String, CepEvent, CepState, CepMatch](
+        _.k, order, CepState(None_, None_, None_)) {
+        def step(k: String, s: CepState, e: CepEvent,
+                 emit: CepMatch => Unit): CepState = e.kind match {
+          case 0 => s.copy(lastClick = e.ts)
+          case 1 => if (e.ts > s.err1) s.copy(err1 = e.ts, err2 = s.err1) else s
+          case _ =>
+            val lastErrBelow = if (s.err1 < e.ts) s.err1 else s.err2
+            if (s.lastClick != None_ && e.ts - s.lastClick <= winUs &&
+              lastErrBelow <= s.lastClick)
+              emit(CepMatch(k, e.seq, e.ts, s.lastClick))
+            s
+        }
+      })
   }
 }
 
@@ -530,7 +473,7 @@ object CepPattern {
   * `ev_cep_kleene` (clicks since the previous purchase, per purchase).
   * The iteration count of SEQ(click+ → purchase) needs exactly ONE
   * counter register per key: click increments, purchase emits-and-resets.
-  * O(1) state forever, same contract as [[CepPattern]].
+  * O(1) state forever, same row order as [[CepPattern]].
   */
 final case class KleeneMatch(k: String, eventId: Long, nClicks: Long)
 
@@ -538,23 +481,15 @@ object CepKleene {
 
   def apply(events: Dataset[CepEvent]): Dataset[KleeneMatch] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.k)
-      .flatMapGroupsWithState[Long, KleeneMatch](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: String, it: Iterator[CepEvent], state: GroupState[Long]) =>
-          var c = state.getOption.getOrElse(0L)
-          val out = Seq.newBuilder[KleeneMatch]
-          it.toSeq.sortBy(e => (e.ts, e.kind, e.seq)).foreach { e =>
-            e.kind match {
-              case 0 => c += 1
-              case 2 => out += KleeneMatch(key, e.seq, c); c = 0L
-              case _ => ()
-            }
+    KeyedFold.run(events,
+      new KeyedFold[String, CepEvent, Long, KleeneMatch](_.k, CepPattern.order, 0L) {
+        def step(k: String, c: Long, e: CepEvent, emit: KleeneMatch => Unit): Long =
+          e.kind match {
+            case 0 => c + 1
+            case 2 => emit(KleeneMatch(k, e.seq, c)); 0L
+            case _ => c
           }
-          state.update(c)
-          out.result().iterator
-      }
+      })
   }
 }
 
@@ -577,27 +512,20 @@ object FunnelTracker {
   /** kinds: 0 = view, 1 = click, 2 = purchase (ordered stages). */
   def apply(events: Dataset[CepEvent]): Dataset[FunnelStage] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.k)
-      .flatMapGroupsWithState[FunnelState, FunnelStage](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: String, it: Iterator[CepEvent], state: GroupState[FunnelState]) =>
-          var s = state.getOption.getOrElse(FunnelState(None_, None_, None_))
-          val out = Seq.newBuilder[FunnelStage]
-          it.toSeq.sortBy(e => (e.ts, e.kind, e.seq)).foreach { e =>
-            e.kind match {
-              case 0 if s.t1 == None_ =>
-                s = s.copy(t1 = e.ts); out += FunnelStage(key, 1, e.ts)
-              case 1 if s.t1 != None_ && s.t2 == None_ && e.ts > s.t1 =>
-                s = s.copy(t2 = e.ts); out += FunnelStage(key, 2, e.ts)
-              case 2 if s.t2 != None_ && s.t3 == None_ && e.ts > s.t2 =>
-                s = s.copy(t3 = e.ts); out += FunnelStage(key, 3, e.ts)
-              case _ => ()
-            }
-          }
-          state.update(s)
-          out.result().iterator
-      }
+    KeyedFold.run(events,
+      new KeyedFold[String, CepEvent, FunnelState, FunnelStage](
+        _.k, CepPattern.order, FunnelState(None_, None_, None_)) {
+        def step(k: String, s: FunnelState, e: CepEvent,
+                 emit: FunnelStage => Unit): FunnelState = e.kind match {
+          case 0 if s.t1 == None_ =>
+            emit(FunnelStage(k, 1, e.ts)); s.copy(t1 = e.ts)
+          case 1 if s.t1 != None_ && s.t2 == None_ && e.ts > s.t1 =>
+            emit(FunnelStage(k, 2, e.ts)); s.copy(t2 = e.ts)
+          case 2 if s.t2 != None_ && s.t3 == None_ && e.ts > s.t2 =>
+            emit(FunnelStage(k, 3, e.ts)); s.copy(t3 = e.ts)
+          case _ => s
+        }
+      })
   }
 }
 
@@ -617,23 +545,17 @@ object SessionPaths {
 
   def apply(events: Dataset[CepEvent2], gapUs: Long): Dataset[SessionPath] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.k)
-      .flatMapGroupsWithState[SessState, SessionPath](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: String, it: Iterator[CepEvent2], state: GroupState[SessState]) =>
-          var s = state.getOption.orNull
-          val out = Seq.newBuilder[SessionPath]
-          it.toSeq.sortBy(e => (e.ts, e.seq)).foreach { e =>
-            if (s == null) s = SessState(e.ts, e.ts, List(e.etype))
-            else if (e.ts - s.last > gapUs) {
-              out += SessionPath(key, s.start, s.path.reverse.mkString(">"))
-              s = SessState(e.ts, e.ts, List(e.etype))
-            } else s = SessState(s.start, e.ts, e.etype :: s.path)
-          }
-          if (s != null) state.update(s)
-          out.result().iterator
-      }
+    KeyedFold.run(events,
+      new KeyedFold[String, CepEvent2, SessState, SessionPath](
+        _.k, Ordering.by(e => (e.ts, e.seq)), null) {
+        def step(k: String, s: SessState, e: CepEvent2,
+                 emit: SessionPath => Unit): SessState =
+          if (s == null) SessState(e.ts, e.ts, List(e.etype))
+          else if (e.ts - s.last > gapUs) {
+            emit(SessionPath(k, s.start, s.path.reverse.mkString(">")))
+            SessState(e.ts, e.ts, List(e.etype))
+          } else SessState(s.start, e.ts, e.etype :: s.path)
+      })
   }
 }
 
@@ -655,29 +577,25 @@ object CohortTracker {
 
   def apply(events: Dataset[KeyedEvent], widthUs: Long): Dataset[CohortHit] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.k)
-      .flatMapGroupsWithState[CohortState, CohortHit](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: String, it: Iterator[KeyedEvent], state: GroupState[CohortState]) =>
-          var s = state.getOption.orNull
-          val out = Seq.newBuilder[CohortHit]
-          it.toSeq.sortBy(e => (e.ts, e.seq)).foreach { e =>
-            val w = Math.floorDiv(e.ts, widthUs)
-            if (s == null) {
-              s = CohortState(w, Set(0L))
-              out += CohortHit(key, w, 0L)
-            } else {
-              val off = w - s.cohortW
-              if (!s.seen(off)) {
-                s = s.copy(seen = s.seen + off)
-                out += CohortHit(key, s.cohortW, off)
-              }
+    KeyedFold.run(events,
+      new KeyedFold[String, KeyedEvent, CohortState, CohortHit](
+        _.k, Ordering.by(e => (e.ts, e.seq)), null) {
+        def step(k: String, s: CohortState, e: KeyedEvent,
+                 emit: CohortHit => Unit): CohortState = {
+          val w = Math.floorDiv(e.ts, widthUs)
+          if (s == null) {
+            emit(CohortHit(k, w, 0L))
+            CohortState(w, Set(0L))
+          } else {
+            val off = w - s.cohortW
+            if (s.seen(off)) s
+            else {
+              emit(CohortHit(k, s.cohortW, off))
+              s.copy(seen = s.seen + off)
             }
           }
-          if (s != null) state.update(s)
-          out.result().iterator
-      }
+        }
+      })
   }
 }
 
@@ -687,10 +605,10 @@ object CohortTracker {
   * an ARBITRARY row within a micro-batch (partition order), which
   * diverges from the batch oracle whenever duplicate keys carry different
   * payloads (the sf0.1 corpus has identical texts under different lang
-  * labels); this operator sorts each batch-group by `ord` and emits the
-  * first row per key exactly once across the stream's lifetime. State is
-  * one boolean per seen key — the dedup-registry shape, same as
-  * `dropDuplicates` itself holds.
+  * labels); this operator folds each key's rows in (ord, lang) order
+  * (ties in arrival order) and emits the first row per key exactly once
+  * across the stream's lifetime. State is one boolean per seen key — the
+  * dedup-registry shape, same as `dropDuplicates` itself holds.
   */
 final case class KeyedDoc(h: Long, ord: Long, lang: String, nTokens: Long)
 
@@ -702,32 +620,30 @@ final case class TsKeyedDoc(
 
 object KeepFirst {
 
+  private def firstWins[I](h: I => Long, ord: I => (Long, String), doc: I => KeyedDoc) =
+    new KeyedFold[Long, I, Boolean, KeyedDoc](h, Ordering.by(ord), false) {
+      def step(k: Long, seen: Boolean, d: I, emit: KeyedDoc => Unit): Boolean = {
+        if (!seen) emit(doc(d))
+        true
+      }
+    }
+
   def apply(docs: Dataset[KeyedDoc]): Dataset[KeyedDoc] = {
     import docs.sparkSession.implicits._
-    docs
-      .groupByKey(_.h)
-      .flatMapGroupsWithState[Boolean, KeyedDoc](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_, it: Iterator[KeyedDoc], state: GroupState[Boolean]) =>
-          if (state.getOption.getOrElse(false)) Iterator.empty
-          else {
-            state.update(true)
-            Iterator.single(it.toSeq.minBy(d => (d.ord, d.lang)))
-          }
-      }
+    KeyedFold.run(docs, firstWins[KeyedDoc](_.h, d => (d.ord, d.lang), identity))
   }
 
   /** Registry-TTL variant (VERDICT r8 #8): without eviction the seen-key
     * registry grows with distinct keys forever — the one streaming state
     * family the FIFO-cap proofs cannot bound. The TTL is EVENT-TIME,
-    * watermark-driven, and the semantics change is documented:
-    * "first-wins" becomes "first within any ttl of the key's last
-    * sighting ON THE EVENT TIMELINE" — the timeout timestamp refreshes
-    * on every duplicate (sliding idle-TTL, the dedup-registry
-    * convention), a key whose last sighting falls ttl behind the
-    * watermark evicts, and a later duplicate re-emits. State is bounded
-    * by the keys active inside any ttl window regardless of stream
-    * length (soak-proven in tools.StateSoak).
+    * watermark-driven ([[IdleTtl]]), and the semantics change is
+    * documented: "first-wins" becomes "first within any ttl of the key's
+    * last sighting ON THE EVENT TIMELINE" — the timeout refreshes on
+    * every duplicate (sliding idle-TTL, the dedup-registry convention), a
+    * key whose last sighting falls ttl behind the watermark evicts, and a
+    * later duplicate re-emits. State is bounded by the keys active inside
+    * any ttl window regardless of stream length (soak-proven in
+    * tools.StateSoak).
     *
     * Event-time, NOT processing-time, deliberately: eviction then
     * depends only on the data and the micro-batch composition —
@@ -743,33 +659,10 @@ object KeepFirst {
               delay: String = "0 seconds"): Dataset[KeyedDoc] = {
     import docs.sparkSession.implicits._
     require(ttlMs > 0, "ttlMs must be positive (use apply() for no TTL)")
-    docs
-      .withWatermark("ts", delay)
-      .groupByKey(_.h)
-      .flatMapGroupsWithState[Boolean, KeyedDoc](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (_, it: Iterator[TsKeyedDoc], state: GroupState[Boolean]) =>
-          if (state.hasTimedOut) {
-            state.remove() // idle key: registry entry expires
-            Iterator.empty
-          } else {
-            val rows = it.toSeq
-            val seen = state.getOption.getOrElse(false)
-            state.update(true)
-            // refresh to last-sighting + ttl; the watermark floor keeps
-            // late rows (event time already behind the watermark) from
-            // registering an immediately-expired — and thus rejected —
-            // timer
-            val maxTs = rows.iterator.map(_.ts.getTime).max
-            state.setTimeoutTimestamp(
-              math.max(maxTs + ttlMs, state.getCurrentWatermarkMs() + 1))
-            if (seen) Iterator.empty
-            else {
-              val d = rows.minBy(d => (d.ord, d.lang))
-              Iterator.single(KeyedDoc(d.h, d.ord, d.lang, d.nTokens))
-            }
-          }
-      }
+    KeyedFold.run(docs,
+      firstWins[TsKeyedDoc](_.h, d => (d.ord, d.lang),
+        d => KeyedDoc(d.h, d.ord, d.lang, d.nTokens)),
+      Some(IdleTtl[TsKeyedDoc](ttlMs, delay, _.ts.getTime)))
   }
 }
 
@@ -778,14 +671,13 @@ object KeepFirst {
   * accumulate via a streaming agg whose state grows with distinct docs
   * forever; that is fine for a bounded corpus and exact, which is why
   * the gated query keeps it). On an infinite ingest the deployment shape
-  * is this operator: per-key running counts with a sliding EVENT-TIME
-  * idle-TTL (see [[KeepFirst.withTtl]] for why event-time and not
-  * wall-clock) — a key whose last hit falls ttl behind the watermark
-  * drops its count (a later hit restarts from 1, the documented
-  * semantics change), so state is bounded by the keys active within any
-  * ttl window regardless of stream length. Soak-proven bounded in
-  * tools.StateSoak; exactness law (ttl off ≡ batch counts) and the
-  * restart semantics pinned in StreamingSpec.
+  * is this operator: per-key running counts, one emission per key and
+  * micro-batch, with a sliding EVENT-TIME idle-TTL ([[IdleTtl]]) — a key
+  * whose last hit falls ttl behind the watermark drops its count (a later
+  * hit restarts from 1, the documented semantics change), so state is
+  * bounded by the keys active within any ttl window regardless of stream
+  * length. Soak-proven bounded in tools.StateSoak; exactness law (ttl off
+  * ≡ batch counts) and the restart semantics pinned in StreamingSpec.
   */
 final case class TsKeyHit(k: Long, ts: java.sql.Timestamp)
 final case class KeyCount(k: Long, n: Long)
@@ -795,43 +687,26 @@ object TtlCounter {
   def apply(hits: Dataset[TsKeyHit], ttlMs: Long = 0L,
             delay: String = "0 seconds"): Dataset[KeyCount] = {
     import hits.sparkSession.implicits._
-    val timeoutConf =
-      if (ttlMs > 0) GroupStateTimeout.EventTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    val src = if (ttlMs > 0) hits.withWatermark("ts", delay) else hits
-    src
-      .groupByKey(_.k)
-      .flatMapGroupsWithState[Long, KeyCount](
-        OutputMode.Append, timeoutConf) {
-        (key: Long, it: Iterator[TsKeyHit], state: GroupState[Long]) =>
-          if (state.hasTimedOut) {
-            state.remove() // idle key: count expires
-            Iterator.empty
-          } else {
-            val rows = it.toSeq
-            val n = state.getOption.getOrElse(0L) + rows.size
-            state.update(n)
-            if (ttlMs > 0)
-              state.setTimeoutTimestamp(
-                math.max(rows.iterator.map(_.ts.getTime).max + ttlMs,
-                  state.getCurrentWatermarkMs() + 1))
-            Iterator.single(KeyCount(key, n))
-          }
-      }
+    KeyedFold.run(hits,
+      new KeyedFold[Long, TsKeyHit, Long, KeyCount](_.k, Ordering.by(_.ts.getTime), 0L) {
+        def step(k: Long, n: Long, h: TsKeyHit, emit: KeyCount => Unit): Long = n + 1
+        override def flush(k: Long, n: Long, last: TsKeyHit, emit: KeyCount => Unit): Long = {
+          emit(KeyCount(k, n))
+          n
+        }
+      },
+      if (ttlMs > 0) Some(IdleTtl[TsKeyHit](ttlMs, delay, _.ts.getTime)) else None)
   }
 }
 
 /** STREAMING SCD2 compaction — the streaming twin of the batch `ord_scd2`
   * gaps-and-islands build: a change-log stream folds into validity
-  * intervals LIVE. Per-key state is the one OPEN interval (value,
-  * valid_from, valid_to, count, island ordinal) — O(1) per key forever;
-  * a value change CLOSES the open interval (emitted) and opens the next.
-  * The open tail interval stays in state (a live dimension's current
-  * version is by definition not yet closed), so the batch oracle keeps
-  * exactly the islands that have a successor.
-  *
-  * Ordering contract: same as the other fMGWS operators — (ts, seq) sort
-  * within batch, per-key-ordered source across batches.
+  * intervals LIVE, in (ts, seq) order. Per-key state is the one OPEN
+  * interval (value, valid_from, valid_to, count, island ordinal) — O(1)
+  * per key forever; a value change CLOSES the open interval (emitted) and
+  * opens the next. The open tail interval stays in state (a live
+  * dimension's current version is by definition not yet closed), so the
+  * batch oracle keeps exactly the islands that have a successor.
   */
 final case class ScdEvent(k: String, ts: Long, seq: Long, value: String)
 final case class ScdInterval(
@@ -843,40 +718,33 @@ object ScdCompact {
 
   def apply(events: Dataset[ScdEvent]): Dataset[ScdInterval] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.k)
-      .flatMapGroupsWithState[ScdState, ScdInterval](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: String, it: Iterator[ScdEvent], state: GroupState[ScdState]) =>
-          var s = state.getOption.orNull
-          val out = Seq.newBuilder[ScdInterval]
-          it.toSeq.sortBy(e => (e.ts, e.seq)).foreach { e =>
-            if (s == null) s = ScdState(1L, e.value, e.ts, e.ts, 1L)
-            else if (e.value == s.value)
-              s = s.copy(to = e.ts, n = s.n + 1)
-            else {
-              out += ScdInterval(key, s.island, s.value, s.from, s.to, s.n)
-              s = ScdState(s.island + 1, e.value, e.ts, e.ts, 1L)
-            }
+    KeyedFold.run(events,
+      new KeyedFold[String, ScdEvent, ScdState, ScdInterval](
+        _.k, Ordering.by(e => (e.ts, e.seq)), null) {
+        def step(k: String, s: ScdState, e: ScdEvent,
+                 emit: ScdInterval => Unit): ScdState =
+          if (s == null) ScdState(1L, e.value, e.ts, e.ts, 1L)
+          else if (e.value == s.value) s.copy(to = e.ts, n = s.n + 1)
+          else {
+            emit(ScdInterval(k, s.island, s.value, s.from, s.to, s.n))
+            ScdState(s.island + 1, e.value, e.ts, e.ts, 1L)
           }
-          if (s != null) state.update(s)
-          out.result().iterator
-      }
+      })
   }
 }
 
 /** STREAMING SemDeDup — semantic dedup-against-history. Arriving vectors
   * are routed to their coarse k-means cell (the codebook is a constant of
   * the query, like the LSH planes); per-cell state holds the vector
-  * history, and an arrival emits a pair for every historical cell-mate
-  * with cosine >= theta. The cell bound is the same lever as the batch
-  * operator's: comparisons are per-cell, never corpus-wide, and the cell
-  * count tracks the corpus.
+  * history, and an arrival (in id order) emits a pair for every
+  * historical cell-mate with cosine >= theta. The cell bound is the same
+  * lever as the batch operator's: comparisons are per-cell, never
+  * corpus-wide, and the cell count tracks the corpus.
   *
   * State is BOUNDED like [[StreamNearDup]]: per-cell FIFO capped at
-  * `maxPerCell`, optional idle-cell TTL. The quantized cosine (floor 1e-6)
-  * is emitted so the pair set is engine-comparable; the double itself is
-  * the same left-to-right fold both `dotd` and the oracle compute.
+  * `maxPerCell`. The quantized cosine (floor 1e-6) is emitted so the pair
+  * set is engine-comparable; the double itself is the same left-to-right
+  * fold both `dotd` and the oracle compute.
   */
 final case class CellVec(cell: Long, id: Long, v: Seq[Double], n2: Double)
 final case class SemDupPair(idA: Long, idB: Long, qcos: Long)
@@ -902,54 +770,37 @@ object StreamSemDedup {
     */
   def codebookCells(n: Long): Long = math.max(8L, n / TargetOccupancy)
 
+  // identical op sequence to dotd / the oracle's list_reduce fold
+  private def dot(a: Seq[Double], b: Seq[Double]): Double = {
+    var s = 0.0
+    var i = 0
+    val n = a.length
+    while (i < n) { s += a(i) * b(i); i += 1 }
+    s
+  }
+
   def apply(
       vecs: Dataset[CellVec],
       theta: Double,
-      maxPerCell: Int = DefaultMaxPerCell,
-      ttlMs: Long = 0L): Dataset[SemDupPair] = {
+      maxPerCell: Int = DefaultMaxPerCell): Dataset[SemDupPair] = {
     import vecs.sparkSession.implicits._
     require(maxPerCell > 0, "maxPerCell must be positive")
-    val timeoutConf =
-      if (ttlMs > 0) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    // identical op sequence to dotd / the oracle's list_reduce fold
-    def dot(a: Seq[Double], b: Seq[Double]): Double = {
-      var s = 0.0
-      var i = 0
-      val n = a.length
-      while (i < n) { s += a(i) * b(i); i += 1 }
-      s
-    }
-    vecs
-      .groupByKey(_.cell)
-      .flatMapGroupsWithState[CellHistory, SemDupPair](
-        OutputMode.Append, timeoutConf) {
-        (_, it: Iterator[CellVec], state: GroupState[CellHistory]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val buf = scala.collection.mutable.ArrayBuffer
-              .from(state.getOption.map(_.entries).getOrElse(Seq.empty))
-            val out = Seq.newBuilder[SemDupPair]
-            it.toSeq.sortBy(_.id).foreach { d =>
-              buf.foreach { case (id, v, n2) =>
-                if (id != d.id) {
-                  val cos = dot(v, d.v) / (math.sqrt(n2) * math.sqrt(d.n2))
-                  if (cos >= theta)
-                    out += SemDupPair(
-                      math.min(id, d.id), math.max(id, d.id),
-                      math.floor(cos * 1000000L).toLong)
-                }
-              }
-              buf += ((d.id, d.v, d.n2))
-              if (buf.size > maxPerCell) buf.remove(0, buf.size - maxPerCell)
+    KeyedFold.run(vecs,
+      new KeyedFold[Long, CellVec, CellHistory, SemDupPair](
+        _.cell, Ordering.by(_.id), CellHistory(Seq.empty)) {
+        def step(k: Long, s: CellHistory, d: CellVec,
+                 emit: SemDupPair => Unit): CellHistory = {
+          s.entries.foreach { case (id, v, n2) =>
+            if (id != d.id) {
+              val cos = dot(v, d.v) / (math.sqrt(n2) * math.sqrt(d.n2))
+              if (cos >= theta)
+                emit(SemDupPair(math.min(id, d.id), math.max(id, d.id),
+                  math.floor(cos * 1000000L).toLong))
             }
-            state.update(CellHistory(buf.toSeq))
-            if (ttlMs > 0) state.setTimeoutDuration(ttlMs)
-            out.result().iterator
           }
-      }
+          CellHistory(StreamNearDup.fifo(s.entries, (d.id, d.v, d.n2), maxPerCell))
+        }
+      })
   }
 }
 
@@ -966,33 +817,24 @@ private final case class PackFillState(bin: Long, fill: Int)
   * training-batch construction step running at ingest time (the batch
   * twin is `operators.Packing`, which additionally sorts len-desc inside
   * each shard; a stream cannot sort the future, so the streaming form
-  * packs in arrival order). Per-shard state is O(1) FOREVER: the open
-  * bin's id and fill — bins close implicitly when the next item does not
-  * fit, so no bin contents are ever buffered.
-  *
-  * Ordering contract (the CountSlices convention): within a micro-batch
-  * the shard's items are sorted by id; across batches arrival order must
-  * respect id order per shard (per-key-ordered source).
+  * packs in arrival order, i.e. id order per shard). Per-shard state is
+  * O(1) FOREVER: the open bin's id and fill — bins close implicitly when
+  * the next item does not fit, so no bin contents are ever buffered.
   */
 object StreamPacking {
 
   def nextFit(items: Dataset[PackItem], capacity: Int): Dataset[PackAssigned] = {
     import items.sparkSession.implicits._
-    items
-      .filter(_.len <= capacity) // oversize items drop (count upstream)
-      .groupByKey(_.shard)
-      .flatMapGroupsWithState[PackFillState, PackAssigned](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (shard: Int, it: Iterator[PackItem], state: GroupState[PackFillState]) =>
-          var s = state.getOption.getOrElse(PackFillState(0L, 0))
-          val out = Seq.newBuilder[PackAssigned]
-          it.toSeq.sortBy(_.id).foreach { i =>
-            if (s.fill + i.len > capacity) s = PackFillState(s.bin + 1, 0)
-            out += PackAssigned(shard, s.bin, i.id, i.len, s.fill)
-            s = PackFillState(s.bin, s.fill + i.len)
-          }
-          state.update(s)
-          out.result().iterator
-      }
+    KeyedFold.run(
+      items.filter(_.len <= capacity), // oversize items drop (count upstream)
+      new KeyedFold[Int, PackItem, PackFillState, PackAssigned](
+        _.shard, Ordering.by(_.id), PackFillState(0L, 0)) {
+        def step(shard: Int, s: PackFillState, i: PackItem,
+                 emit: PackAssigned => Unit): PackFillState = {
+          val open = if (s.fill + i.len > capacity) PackFillState(s.bin + 1, 0) else s
+          emit(PackAssigned(shard, open.bin, i.id, i.len, open.fill))
+          PackFillState(open.bin, open.fill + i.len)
+        }
+      })
   }
 }

@@ -75,6 +75,12 @@ class BoundaryInvarianceSpec extends SparkSpec {
       i.toLong, rnd.nextInt(2), rnd.nextInt(50).toDouble)
   }.sortBy(e => (e.ts, e.seq))
 
+  // gates derived from the keyed feed: sparse triggers, long gate runs
+  private val triggers: Seq[GatedEvent] =
+    keyed.map(e => GatedEvent(e.k, e.ts, e.seq, e.v, gate = e.v >= 80))
+  private val gates: Seq[GatedEvent] =
+    keyed.map(e => GatedEvent(e.k, e.ts, e.seq, e.v, gate = e.v >= 30))
+
   private val ceps: Seq[CepEvent] = (0 until 240).map { i =>
     CepEvent("c" + rnd.nextInt(4), i.toLong * 100L, i.toLong, rnd.nextInt(3))
   }
@@ -101,7 +107,7 @@ class BoundaryInvarianceSpec extends SparkSpec {
     PackItem(i % 4, i.toLong, 10 + rnd.nextInt(90))
   }
 
-  // the ten laws ----------------------------------------------------------
+  // the laws --------------------------------------------------------------
 
   law[KeyedEvent]("tumblingAgg", keyed,
     ds => Streams.tumblingAgg(ds.toDF(), Seq("k"), "10 seconds", "0 seconds",
@@ -110,6 +116,15 @@ class BoundaryInvarianceSpec extends SparkSpec {
     Seq("k", "ws"), mode = "complete")
 
   law[KeyedEvent]("CountSlices", keyed, ds => CountSlices(ds, 7),
+    Seq("k", "windowId"))
+
+  law[GatedEvent]("TriggerSlices.tagged AFTER", triggers,
+    ds => TriggerSlices.tagged(ds), Seq("k", "windowId"))
+
+  law[GatedEvent]("TriggerSlices.tagged before", triggers,
+    ds => TriggerSlices.tagged(ds, before = true), Seq("k", "windowId"))
+
+  law[GatedEvent]("GatedWindows", gates, ds => GatedWindows(ds),
     Seq("k", "windowId"))
 
   law[KeyedEvent]("CohortTracker", keyed, ds => CohortTracker(ds, 50000000L),
@@ -121,6 +136,8 @@ class BoundaryInvarianceSpec extends SparkSpec {
 
   law[CepEvent]("CepPattern", ceps, ds => CepPattern(ds, 2000L),
     Seq("k", "eventId"))
+
+  law[CepEvent]("CepKleene", ceps, ds => CepKleene(ds), Seq("k", "eventId"))
 
   law[CepEvent]("FunnelTracker", ceps, ds => FunnelTracker(ds),
     Seq("k", "stage"))

@@ -1,8 +1,10 @@
 package graft
 
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.core._
 import graft.functions.Reducers
+import graft.streaming.{CountSlices, KeyedEvent}
 
 /** EStream/KStream combinator goldens (map/filter/filterType/by/valueSet/
   * fold_all — TestSingleTerms, TestMultiTerms) and the order-dependent
@@ -127,5 +129,16 @@ class StreamOpsSpec extends SparkSpec {
     val e = the[IllegalArgumentException] thrownBy
       KStream(trades, Seq("name")).foldAllAssoc(("n", lit(1L), "sum"))
     e.getMessage should include("scanAll")
+  }
+
+  test("count slices fail fast on a non-positive size, batch and stream") {
+    // n <= 0 never closes a bucket (stream) or divides by zero (batch)
+    for (n <- Seq(0, -3)) {
+      (the[IllegalArgumentException] thrownBy Slice.Count(n))
+        .getMessage should include("positive slice size")
+      (the[IllegalArgumentException] thrownBy
+        CountSlices(MemoryStream[KeyedEvent](spark).toDS(), n))
+        .getMessage should include("positive slice size")
+    }
   }
 }

@@ -398,13 +398,13 @@ class StreamingSpec extends SparkSpec {
     // the [1,1,1,10,1,1,1] golden (TestSingleTerms:157-181) on a stream
     val vals = Seq(1, 1, 1, 10, 1, 1, 1)
     val events = vals.zipWithIndex.map { case (v, i) =>
-      KeyedEvent("k", i.toLong, i.toLong, v.toDouble)
+      GatedEvent("k", i.toLong, i.toLong, v.toDouble, gate = v == 10.0)
     }
-    val mem = MemoryStream[KeyedEvent](spark)
+    val mem = MemoryStream[GatedEvent](spark)
     mem.addData(events.take(4): _*)
     mem.addData(events.drop(4): _*)
     runToCompletion(
-      TriggerSlices(mem.toDS(), _.v == 10.0).writeStream.outputMode("append"),
+      TriggerSlices.tagged(mem.toDS()).writeStream.outputMode("append"),
       "trigslices")
     // closed buckets only (the trailing [1,1,1] is still open)
     spark.table("trigslices").orderBy("windowId")
