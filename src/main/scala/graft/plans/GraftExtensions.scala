@@ -11,7 +11,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *   --conf spark.sql.extensions=graft.plans.GraftExtensions
   *
   * then `SELECT fnv64(text) FROM docs` works from SQL as well as the DSL.
-  * It also sets graft's session defaults ([[GraftExtensions.Defaults]]).
+  * It also sets graft's session defaults ([[GraftExtensions.Defaults]])
+  * and injects graft's plan rules, [[SmallSortSinglePartition]] among them.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -46,6 +47,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // (resolution phase: the builtin SessionWindowing rule must still see
     // and expand the SessionWindow expression this rule introduces)
     ext.injectResolutionRule(_ => RewriteGapSessions)
+    // small global sorts: one-partition exchange, no range-sampling job
+    ext.injectQueryStagePrepRule(SmallSortSinglePartition)
   }
 }
 

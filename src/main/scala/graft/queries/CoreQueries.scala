@@ -2448,7 +2448,8 @@ object CoreQueries {
         // paid three fact scans, three groupBy shuffles and two joins.
         // Exact: min(when(cond, ts)) over a user's rows IS the filtered
         // groupBy min; count(non-null stage time) IS that stage's user
-        // count.
+        // count. n_view counts users with a view, not a non-null t1: a
+        // user whose view ts are all NULL still has a t1 group.
         val w = org.apache.spark.sql.expressions.Window.partitionBy("user_id")
         val staged = Q.events(s, dir).select("user_id", "ts", "event_type")
           .filter(col("event_type").isin("view", "click", "purchase"))
@@ -2462,9 +2463,9 @@ object CoreQueries {
             min(when(col("event_type") === "purchase" && col("ts") > col("t2"),
               col("ts"))).over(w))
         staged.groupBy("user_id")
-          .agg(max(col("t1")).as("t1"), max(col("t2")).as("t2"),
-            max(col("t3")).as("t3"))
-          .agg(count(col("t1")).as("n_view"),
+          .agg(max(when(col("event_type") === "view", 1)).as("viewed"),
+            max(col("t2")).as("t2"), max(col("t3")).as("t3"))
+          .agg(count(col("viewed")).as("n_view"),
             count(col("t2")).as("n_click_after"),
             count(col("t3")).as("n_purchase_after"))
       },

@@ -21,10 +21,11 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   * a single-node deployment that toll IS most of the stateful
   * micro-batch floor.
   *
-  * This manager overrides ONLY `createAtomic`, and only for scheme-less /
-  * `file:` paths (anything else defers to the FileContext base, so a
-  * cluster checkpoint on HDFS/S3 keeps Hadoop semantics). Contract
-  * preserved exactly:
+  * This manager overrides `createAtomic`, `mkdirs` and
+  * `createCheckpointDirectory`, and only for scheme-less / `file:` paths
+  * (anything else defers to the FileContext base, so a cluster
+  * checkpoint on HDFS/S3 keeps Hadoop semantics). Contract of
+  * `createAtomic` preserved exactly:
   *   - atomic publish: temp file in the same directory, then
   *     ATOMIC_MOVE (same-filesystem rename);
   *   - `overwriteIfPossible = false` must fail atomically when the
@@ -48,6 +49,23 @@ class LocalNioCheckpointFileManager(root: Path, conf: Configuration)
     if (u.getScheme == null || u.getScheme == "file")
       Some(Paths.get(u.getPath))
     else None
+  }
+
+  // Without libhadoop, Hadoop's local filesystem applies each directory's
+  // permission by forking `chmod`; a stream start creates a dozen
+  // checkpoint directories (logs, state-store and metadata dirs). NIO
+  // creates them under the process umask, which is what Hadoop's default
+  // directory permission resolves to.
+  override def mkdirs(path: Path): Unit = localPath(path) match {
+    case Some(dir) => Files.createDirectories(dir)
+    case None => super.mkdirs(path)
+  }
+
+  override def createCheckpointDirectory(): Path = localPath(root) match {
+    case Some(dir) =>
+      Files.createDirectories(dir)
+      fc.makeQualified(root)
+    case None => super.createCheckpointDirectory()
   }
 
   override def createAtomic(

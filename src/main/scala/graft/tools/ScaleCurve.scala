@@ -41,6 +41,7 @@ object ScaleCurve {
                 else Seq(1000000L, 10000000L)
     val spark = SparkSession.builder()
       .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
+      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.sql.shuffle.partitions", 32)
       .config("spark.ui.enabled", "false")
       .getOrCreate()

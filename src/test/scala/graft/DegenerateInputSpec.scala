@@ -122,4 +122,25 @@ class DegenerateInputSpec extends SparkSpec {
     "three identical docs)") {
     runAll(oneGroupDir, "one-group")
   }
+
+  test("ev_funnel counts a user whose view events all have a NULL ts, as " +
+    "its oracle does") {
+    val dir = fixture("nullts") { (df, t) =>
+      if (t != "events") df.limit(0)
+      else {
+        val u = df.filter(col("event_type") === "view").select("user_id").head().get(0)
+        df.withColumn("ts",
+          when(col("user_id") === lit(u) && col("event_type") === "view",
+            lit(null).cast(df.schema("ts").dataType)).otherwise(col("ts")))
+      }
+    }
+    val got = SparkEntry.queries("ev_funnel")(spark, dir).collect().toSeq
+    spark.read.parquet(s"$dir/events.parquet").createOrReplaceTempView("events")
+    val want =
+      try spark.sql(SparkEntry.oracleSql("ev_funnel")
+          .replaceAll("epoch_us\\(([\\w.]+)\\)", "unix_micros(cast($1 AS timestamp))"))
+        .collect().toSeq
+      finally spark.catalog.dropTempView("events")
+    got shouldBe want
+  }
 }

@@ -1,6 +1,13 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
+
+import graft.queries.StreamHarness
 
 /** Physical-plan regression guards: the properties that make the catalog
   * scale-safe, asserted on the actual executed plans at sf0.001 —
@@ -681,5 +688,93 @@ class PlanAuditSpec extends SparkSpec {
       .orderBy("user_id", "session_id")
       .collect()
     got.map(_.toString).toSeq shouldBe expected.map(_.toString).toSeq
+  }
+
+  // plans.SmallSortSinglePartition: a global sort over an input of at most
+  // one advisory partition is exchanged into one partition, so Spark runs
+  // no range-sampling job, and the sorted rows do not change.
+
+  private val batchHistory = Seq(
+    "ev_slice_count", "ev_slice_time", "ev_slice_hopping", "ev_slice_trigger_after",
+    "ev_window_scan", "ev_asof_take", "ev_join_zip", "ev_bind_bucket", "ev_ewma",
+    "ev_fold_all")
+
+  /** Rows of `df` with the small-sort rule held off: it fires only while
+    * AQE coalesces partitions. */
+  private def ruleOff(df: => DataFrame): Seq[Row] =
+    StreamHarness.withConf(spark, "spark.sql.adaptive.coalescePartitions.enabled" -> "false")(
+      df.collect().toSeq)
+
+  /** Jobs that `body` runs. The listener bus delivers events in order, so
+    * once a marker job's start is seen, every earlier job start was too. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val marker = "graft.test.marker"
+    val jobs = new AtomicInteger
+    val seen = new AtomicReference(new CountDownLatch(1))
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(marker) != null)) seen.get.countDown()
+        else jobs.incrementAndGet()
+    }
+    def drain(): Unit = {
+      seen.set(new CountDownLatch(1))
+      sc.setLocalProperty(marker, "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(marker, null)
+      seen.get.await(30, TimeUnit.SECONDS) shouldBe true
+    }
+    sc.addSparkListener(listener)
+    try {
+      drain()
+      jobs.set(0)
+      body
+      drain()
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("ev_slice_count: the final sort's exchange is one partition, not range partitions") {
+    val plan = finalPlan("ev_slice_count")
+    withClue(plan) {
+      plan should include("Exchange SinglePartition")
+      plan should not include "Exchange rangepartitioning("
+    }
+  }
+
+  test("ev_slice_count: the action runs no range-sampling job") {
+    jobsOf(SparkEntry.queries("ev_slice_count")(spark, dir).collect()) shouldBe 3
+    jobsOf(ruleOff(SparkEntry.queries("ev_slice_count")(spark, dir))) shouldBe 4
+  }
+
+  test("the batch_history queries return the same rows in the same order with " +
+    "the small-sort rule held off") {
+    for (n <- batchHistory) withClue(n) {
+      val on = SparkEntry.queries(n)(spark, dir).collect().toSeq
+      on should not be empty
+      on shouldBe ruleOff(SparkEntry.queries(n)(spark, dir))
+    }
+    spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled") shouldBe "true"
+  }
+
+  test("a sort input larger than the advisory partition size keeps the range exchange") {
+    val plan = StreamHarness.withConf(spark,
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1b")(finalPlan("ev_slice_count"))
+    withClue(plan) {
+      plan should include("Exchange rangepartitioning(")
+      plan should not include "Exchange SinglePartition"
+    }
+  }
+
+  test("an orderBy over an empty and over a one-row frame returns the same rows " +
+    "with the small-sort rule held off") {
+    val events = graft.core.Tables.events(spark, dir)
+    val first = events.select("event_id").head().getLong(0)
+    for ((label, keep) <- Seq("empty" -> (col("event_id") < 0),
+        "one row" -> (col("event_id") === first))) withClue(label) {
+      def q = events.where(keep).orderBy(col("ts").desc, col("event_id"))
+      val on = q.collect().toSeq
+      on should have size (if (label == "empty") 0 else 1)
+      on shouldBe ruleOff(q)
+    }
   }
 }
