@@ -108,17 +108,9 @@ object Bench {
     val duckPaired = scala.collection.mutable.Map.empty[String, Double]
     val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
       try {
-        // cleanup between runs: drop query-internal persists AND temp
-        // views — memory-sink tables (one per streaming run, nanoTime-
-        // suffixed) hold their full results on the driver heap and are
-        // never read again; 161 queries × repeats of accumulation
-        // measurably slowed the late alphabet (stream_ewma: 5.2 s in
-        // full-catalog context vs 2.7 s isolated) until dropped here
+        // cleanup between runs: drop query-internal persists
         def cleanup(): Unit = {
           spark.catalog.clearCache()
-          spark.catalog.listTables().collect()
-            .filter(_.isTemporary)
-            .foreach(t => spark.catalog.dropTempView(t.name))
           // Release localCheckpoint blocks (VERDICT r10 #3): clearCache
           // drops SQL-cached relations, but checkpoint RDD blocks are
           // freed only when the ContextCleaner sees the RDD object
@@ -166,14 +158,17 @@ object Bench {
     val failed = results.collect { case (n, Left(e)) => n -> e }
     val multi = results.collect { case (n, Right((_, rs))) if rs.size > 1 => n -> rs }
     // Storage-tab assertion (VERDICT r7 #6): after the per-query cleanup
-    // discipline (clearCache + temp-view drop after every run), NO
-    // SQL-cached relation may survive to run end — a non-empty cache here
-    // means some query's persist escaped the lifecycle and would
-    // accumulate across an embedding caller's job. (localCheckpoint
-    // blocks are intentionally exempt: they are RDD-GC-governed and the
-    // per-JVM frozen stream models own theirs for the JVM lifetime.)
+    // discipline (clearCache after every run), NO SQL-cached relation may
+    // survive to run end — a non-empty cache here means some query's
+    // persist escaped the lifecycle and would accumulate across an
+    // embedding caller's job. (localCheckpoint blocks are intentionally
+    // exempt: they are RDD-GC-governed and the per-JVM frozen stream
+    // models own theirs for the JVM lifetime.) Likewise no temp view: a
+    // leaked memory-sink view holds its full result on the driver heap.
     require(spark.sharedState.cacheManager.isEmpty,
       "cache leak: SQL-cached relations survived the catalog run")
+    val views = spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name)
+    require(views.isEmpty, s"temp views leaked by the catalog run: ${views.mkString(", ")}")
     spark.stop()
 
     // Head-to-head over the identical oracle SQL + parquet. Paired path:

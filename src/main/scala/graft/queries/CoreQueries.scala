@@ -370,13 +370,7 @@ object CoreQueries {
           src, Seq("user_id"), "1 day", "0 seconds",
           "n" -> count(lit(1)),
           "sum_value" -> Q.dsumD(col("value")))
-        val name = "stream_tumbling_" + System.nanoTime()
-        val q = agg.writeStream.queryName(name).format("memory")
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.processAllAvailable() finally q.stop()
-        s.table(name)
+        StreamHarness.drain(agg, "complete", availableNow = true)
           .select(col("user_id"),
             unix_micros(col("window.start")).as("wstart"),
             col("n"), col("sum_value"))
@@ -405,7 +399,8 @@ object CoreQueries {
         val fxRoot = StreamFixtures.eventsKeyed(s, dir)
         val schema = StreamFixtures.eventsKeyedSchema(s, dir)
         val srcDir = StreamFixtures.scratchDir("graft_sl_src_")
-        val (name, wm) = try {
+        var wm = 0L
+        val sink = try {
           StreamFixtures.feed(fxRoot, "keyed", srcDir)
           StreamHarness.withSplitPerFile(s) {
             val src = s.readStream.schema(schema).parquet(srcDir)
@@ -420,19 +415,13 @@ object CoreQueries {
             val agg = graft.streaming.SlicedHopping.slices(
               src, Seq("user_id"), "1 hour", "0 seconds",
               "n" -> count(lit(1)), "sv" -> Q.dsum(col("value")))
-            val nm = "stream_sliding_" + System.nanoTime()
-            val q = agg.writeStream.queryName(nm).format("memory")
-              .outputMode("append")
-              .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-              .start()
-            val w = try {
+            StreamHarness.drain(agg, availableNow = true, drive = { q =>
               q.processAllAvailable()
-              graft.streaming.SlicedHopping.finalWatermarkUs(q)
-            } finally q.stop()
-            (nm, w)
+              wm = graft.streaming.SlicedHopping.finalWatermarkUs(q)
+            })
           }
         } finally StreamFixtures.deleteRecursively(srcDir)
-        graft.streaming.SlicedHopping.compose(s.table(name), Seq("user_id"),
+        graft.streaming.SlicedHopping.compose(sink, Seq("user_id"),
             7200000000L, 3600000000L, wm,
             "n" -> sum(col("n")),
             "sum_value" -> sum(col("sv")).cast("double"))
@@ -472,11 +461,7 @@ object CoreQueries {
             graft.core.Tables.tsUsExpr(schema).as("ts"), col("event_id").as("seq"),
             col("value").as("v"))
           .as[graft.streaming.KeyedEvent]
-        val name = "stream_cs_" + System.nanoTime()
-        val sq = graft.streaming.CountSlices(src, 10)
-          .writeStream.queryName(name).format("memory").outputMode("append").start()
-        try sq.processAllAvailable() finally sq.stop()
-        s.table(name)
+        StreamHarness.drain(graft.streaming.CountSlices(src, 10))
           .select(col("k").cast("long").as("user_id"),
             col("windowId").as("window_id"), col("n"),
             col("sum").cast("decimal(38,6)").cast("double").as("sum_value"))
@@ -562,30 +547,19 @@ object CoreQueries {
         // arrives entirely behind it.
         val fx = StreamFixtures.eventsHalves(s, dir)
         val schema = StreamFixtures.eventsHalvesSchema(s, dir)
-        val root = StreamFixtures.scratchDir("graft_late_")
-        val srcDir = s"$root/src"
-        StreamFixtures.feed(fx, "hi", srcDir)
-        val src = s.readStream.schema(schema).parquet(srcDir)
-          .select(col("user_id"), col("ts"), col("value"))
-        val agg = graft.streaming.Streams.tumblingAgg(
-          src, Seq("user_id"), "1 day", "1 hour",
-          "n" -> count(lit(1)),
-          "sum_value" -> Q.dsumD(col("value")))
-        val name = "stream_late_" + System.nanoTime()
-        val q = agg.writeStream.queryName(name).format("memory")
-          .outputMode("append").start()
-        try {
-          q.processAllAvailable() // batch 1: recent half; wm → max−1h
-          StreamFixtures.feed(fx, "lo", srcDir)
-          StreamHarness.settle(q) // batch 2: old half — all late, dropped
-        } finally q.stop()
-        val res = s.table(name)
+        // batch 1: recent half; wm → max−1h; batch 2: old half — all late, dropped
+        StreamHarness.drainFeed(fx, Seq("hi", "lo")) { srcDir =>
+          val src = s.readStream.schema(schema).parquet(srcDir)
+            .select(col("user_id"), col("ts"), col("value"))
+          graft.streaming.Streams.tumblingAgg(
+            src, Seq("user_id"), "1 day", "1 hour",
+            "n" -> count(lit(1)),
+            "sum_value" -> Q.dsumD(col("value")))
+        }
           .select(col("user_id"),
             unix_micros(col("window.start")).as("wstart"),
             col("n"), col("sum_value"))
           .orderBy("user_id", "wstart")
-        StreamFixtures.deleteRecursively(root)
-        res
       },
       Some("""WITH b AS (SELECT min(epoch_us(ts)) AS tmin, max(epoch_us(ts)) AS tmax
                           FROM events)
@@ -616,11 +590,7 @@ object CoreQueries {
             col("value").as("v"),
             (col("event_type") === "error").as("gate"))
           .as[graft.streaming.GatedEvent]
-        val name = "stream_ts_" + System.nanoTime()
-        val sq = graft.streaming.TriggerSlices.tagged(src)
-          .writeStream.queryName(name).format("memory").outputMode("append").start()
-        try sq.processAllAvailable() finally sq.stop()
-        s.table(name)
+        StreamHarness.drain(graft.streaming.TriggerSlices.tagged(src))
           .select(col("k").cast("long").as("user_id"),
             col("windowId").as("window_id"), col("n"),
             col("sum").cast("decimal(38,6)").cast("double").as("sum_value"))
@@ -654,11 +624,7 @@ object CoreQueries {
             graft.core.Tables.tsUsExpr(schema).as("ts"), col("event_id").as("seq"),
             col("value").as("v"), (col("value") >= 50).as("gate"))
           .as[graft.streaming.GatedEvent]
-        val name = "stream_gw_" + System.nanoTime()
-        val sq = graft.streaming.GatedWindows(src)
-          .writeStream.queryName(name).format("memory").outputMode("append").start()
-        try sq.processAllAvailable() finally sq.stop()
-        s.table(name)
+        StreamHarness.drain(graft.streaming.GatedWindows(src))
           .select(col("k").cast("long").as("user_id"),
             col("windowId").as("session_id"), col("n"),
             col("sum").cast("decimal(38,6)").cast("double").as("sum_value"))
@@ -699,11 +665,7 @@ object CoreQueries {
             when(col("event_type") === "purchase", 1).otherwise(0).as("side"),
             col("value").as("v"))
           .as[graft.streaming.ZipEvent]
-        val name = "stream_zj_" + System.nanoTime()
-        val sq = graft.streaming.ZipJoin(src)
-          .writeStream.queryName(name).format("memory").outputMode("append").start()
-        try sq.processAllAvailable() finally sq.stop()
-        s.table(name)
+        StreamHarness.drain(graft.streaming.ZipJoin(src))
           .select(col("k").cast("long").as("user_id"), col("ts"),
             col("left").as("p_val"), col("right").as("c_val"))
           .orderBy("user_id", "ts")
@@ -744,11 +706,7 @@ object CoreQueries {
             when(col("event_type") === "purchase", 1).otherwise(0).as("side"),
             col("value").as("v"))
           .as[graft.streaming.ZipEvent]
-        val name = "stream_tj_" + System.nanoTime()
-        val sq = graft.streaming.TakeJoin(src)
-          .writeStream.queryName(name).format("memory").outputMode("append").start()
-        try sq.processAllAvailable() finally sq.stop()
-        s.table(name)
+        StreamHarness.drain(graft.streaming.TakeJoin(src))
           .select(col("k").cast("long").as("user_id"), col("ts"),
             col("left").as("p_val"), col("right").as("c_val"))
           .orderBy("user_id", "ts")
@@ -777,39 +735,32 @@ object CoreQueries {
              FROM c2 WHERE rn = 1 AND has_left = 1
              ORDER BY user_id, ts""")),
 
-    // ---- per-event EWMA on a live stream via transformWithState
-    // (Spark 4 arbitrary-state API, RocksDB provider) under the gate:
+    // ---- per-event EWMA on a live stream (a KeyedFold) under the gate:
     // the last emission per key equals the terminal EWMA — the same
     // list_reduce oracle as the batch ev_ewma.
     QueryDef(
       "stream_ewma",
       (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
         import s.implicits._
-        StreamHarness.withConf(s,
-          "spark.sql.streaming.stateStore.providerClass" -> StreamHarness.RocksDbProvider) {
-          val schema = graft.core.Tables.cachedSchema(s, s"$dir/events.parquet")
-          val src = s.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet").parquet(dir)
-            .select(col("user_id").cast("string").as("k"),
-              graft.core.Tables.tsUsExpr(schema).as("ts"), col("event_id").as("seq"),
-              col("value").as("v"))
-            .as[graft.streaming.KeyedEvent]
-          val name = "stream_ew_" + System.nanoTime()
-          val sq = graft.streaming.EwmaScan(src, 0.25)
-            .writeStream.queryName(name).format("memory").outputMode("append").start()
-          try sq.processAllAvailable() finally sq.stop()
-          // packed emission (VERDICT r12 #4): the sink holds ~|keys|
-          // array rows per micro-batch; exploded() recovers the
-          // row-for-row per-event contract in batch land, and the
-          // terminal value per key is a partial-agg max_by (map-side
-          // combine, no full-sort window) instead of a 5M-row
-          // row_number shuffle
-          graft.streaming.EwmaScan.exploded(s.table(name))
-            .groupBy(col("k"))
-            .agg(max_by(col("ewma"), struct(col("ts"), col("seq"))).as("ewma"))
-            .select(col("k").cast("long").as("user_id"), col("ewma"))
-            .orderBy("user_id")
-        }
+        val schema = graft.core.Tables.cachedSchema(s, s"$dir/events.parquet")
+        val src = s.readStream.schema(schema)
+          .option("pathGlobFilter", "events.parquet").parquet(dir)
+          .select(col("user_id").cast("string").as("k"),
+            graft.core.Tables.tsUsExpr(schema).as("ts"), col("event_id").as("seq"),
+            col("value").as("v"))
+          .as[graft.streaming.KeyedEvent]
+        // packed emission (VERDICT r12 #4): the sink holds ~|keys|
+        // array rows per micro-batch; exploded() recovers the
+        // row-for-row per-event contract in batch land, and the
+        // terminal value per key is a partial-agg max_by (map-side
+        // combine, no full-sort window) instead of a 5M-row
+        // row_number shuffle
+        graft.streaming.EwmaScan.exploded(
+            StreamHarness.drain(graft.streaming.EwmaScan(src, 0.25)))
+          .groupBy(col("k"))
+          .agg(max_by(col("ewma"), struct(col("ts"), col("seq"))).as("ewma"))
+          .select(col("k").cast("long").as("user_id"), col("ewma"))
+          .orderBy("user_id")
       },
       Some("""SELECT user_id,
              list_reduce(list(value ORDER BY epoch_us(ts), event_id),
@@ -837,14 +788,10 @@ object CoreQueries {
         val joined = side("purchase", "p").join(side("click", "c"),
           expr("""p_uid = c_uid AND
                   c_time BETWEEN p_time - INTERVAL 1 HOUR AND p_time"""))
-        val name = "stream_ssj_" + System.nanoTime()
-        val sq = joined
-          .select(col("p_id"), col("c_id"), col("p_val"), col("c_val"))
-          .writeStream.queryName(name).format("memory").outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try sq.processAllAvailable() finally sq.stop()
-        s.table(name).orderBy("p_id", "c_id")
+        StreamHarness.drain(
+            joined.select(col("p_id"), col("c_id"), col("p_val"), col("c_val")),
+            availableNow = true)
+          .orderBy("p_id", "c_id")
       },
       Some("""SELECT p.event_id AS p_id, c.event_id AS c_id,
              p.value AS p_val, c.value AS c_val
@@ -888,14 +835,10 @@ object CoreQueries {
           expr("""p_uid = c_uid AND
                   c_time BETWEEN p_time - INTERVAL 1 HOUR AND p_time"""),
           "left_outer")
-        val name = "stream_soj_" + System.nanoTime()
-        val sq = joined
-          .select(col("p_id"), col("c_id"), col("p_val"), col("c_val"))
-          .writeStream.queryName(name).format("memory").outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try sq.processAllAvailable() finally sq.stop()
-        s.table(name).orderBy("p_id", "c_id")
+        StreamHarness.drain(
+            joined.select(col("p_id"), col("c_id"), col("p_val"), col("c_val")),
+            availableNow = true)
+          .orderBy("p_id", "c_id")
       },
       Some("""WITH p AS (SELECT * FROM events WHERE event_type='purchase'),
                   c AS (SELECT * FROM events WHERE event_type='click'),
@@ -936,13 +879,7 @@ object CoreQueries {
           "sum_p" -> coalesce(Q.dsum(when(col("tag") === "purchase", col("v"))),
             lit(0).cast("decimal(38,6)")).cast("double"),
           "n_c" -> count(when(col("tag") === "click", 1)))
-        val name = "stream_bb_" + System.nanoTime()
-        val sq = agg.writeStream.queryName(name).format("memory")
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try sq.processAllAvailable() finally sq.stop()
-        s.table(name)
+        StreamHarness.drain(agg, "complete", availableNow = true)
           .select(col("user_id"),
             expr("unix_micros(window.start) div 86400000000").as("window_id"),
             col("n_p"), col("sum_p"), col("n_c"))
@@ -1312,12 +1249,8 @@ object CoreQueries {
             val agg = src
               .groupBy(col("user_id"), session_window(col("event_time"), "1 hour"))
               .agg(count(lit(1)).as("n"), Q.dsumD(col("value")).as("sum_value"))
-            val name = "stream_sw_" + System.nanoTime()
             StreamHarness.withSplitPerFile(s) {
-              val sq = agg.writeStream.queryName(name).format("memory")
-                .outputMode("append")
-                .start()
-              try {
+              StreamHarness.drain(agg, drive = { sq =>
                 StreamHarness.settle(sq)
                 // the sentinel rides WITH the corpus in batch 0, so nothing
                 // may ever be late-dropped; if admission ever spans batches
@@ -1328,9 +1261,8 @@ object CoreQueries {
                   s"stream_session_window: $dropped rows late-dropped by the " +
                     "watermark — corpus and flush sentinel were not admitted " +
                     "in the same micro-batch; sessions were silently lost")
-              } finally sq.stop()
+              })
             }
-            s.table(name)
               .filter(col("user_id") =!= -1L)
               .select(col("user_id"),
                 unix_micros(col("session_window.start")).as("wstart"),
@@ -1375,16 +1307,11 @@ object CoreQueries {
           // sink — fail loud on an undersized maxResultSize (ADVICE r14)
           StreamFixtures.assertDriverCollectCapacity(s, srcDir,
             "stream_ingest_floor")
-          val name = "stream_floor_" + System.nanoTime()
           StreamHarness.withSplitPerFile(s) {
-            val src = s.readStream.schema(schema).parquet(srcDir)
-              .select(col("event_id"), col("user_id"), col("value"))
-            val sq = src.writeStream.queryName(name).format("memory")
-              .outputMode("append")
-              .start()
-            try StreamHarness.settle(sq) finally sq.stop()
-          }
-          s.table(name).orderBy("event_id")
+            StreamHarness.drain(s.readStream.schema(schema).parquet(srcDir)
+              .select(col("event_id"), col("user_id"), col("value")),
+              drive = StreamHarness.settle)
+          }.orderBy("event_id")
         } finally StreamFixtures.deleteRecursively(srcDir)
       },
       Some("""SELECT event_id, user_id, value FROM events
@@ -1666,14 +1593,10 @@ object CoreQueries {
             col("event_type").as("t"))
           .select(expr("tsu div 86400000000").as("day"), col("t"))
           .groupBy("day", "t").agg(count(lit(1)).as("c_dt"))
-        val name = "stream_kl_" + System.nanoTime()
-        val sq = counts.writeStream.queryName(name).format("memory")
-          .outputMode("complete").start()
-        try sq.processAllAvailable() finally sq.stop()
         import s.implicits._
         // localCheckpoint: the memory-sink MemoryPlan does not support
         // self-join attribute dedup — snapshot it into an ExistingRDD
-        val cdt = s.table(name).localCheckpoint()
+        val cdt = StreamHarness.drain(counts, "complete").localCheckpoint()
         val nd = cdt.groupBy("day").agg(sum("c_dt").as("n_d"))
         val ctDf = ctRows.toSeq.toDF("t", "c_t")
         cdt.join(nd, "day").join(broadcast(ctDf), "t")
@@ -1785,13 +1708,7 @@ object CoreQueries {
         val joined = src.join(broadcast(tiers), "user_id")
           .groupBy("tier")
           .agg(count(lit(1)).as("n"), Q.dsumD(col("value")).as("sum_value"))
-        val name = "stream_sj_" + System.nanoTime()
-        val sq = joined.writeStream.queryName(name).format("memory")
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try sq.processAllAvailable() finally sq.stop()
-        s.table(name).orderBy("tier")
+        StreamHarness.drain(joined, "complete", availableNow = true).orderBy("tier")
       },
       Some("""SELECT user_id % 3 AS tier, count(*) AS n,
              sum(value::decimal(38,6))::double AS sum_value
@@ -1811,13 +1728,7 @@ object CoreQueries {
         val deduped = doubled.dropDuplicates("event_id")
           .groupBy("event_type")
           .agg(count(lit(1)).as("n"))
-        val name = "stream_dd_" + System.nanoTime()
-        val sq = deduped.writeStream.queryName(name).format("memory")
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try sq.processAllAvailable() finally sq.stop()
-        s.table(name).orderBy("event_type")
+        StreamHarness.drain(deduped, "complete", availableNow = true).orderBy("event_type")
       },
       Some("""SELECT event_type, count(*) AS n
              FROM events GROUP BY event_type ORDER BY event_type""")),
@@ -1969,30 +1880,21 @@ object CoreQueries {
         import s.implicits._
         val fx = StreamFixtures.eventsHalves(s, dir)
         val schema = StreamFixtures.eventsHalvesSchema(s, dir)
-        val root = StreamFixtures.scratchDir("graft_cep_")
-        val srcDir = s"$root/src"
-        StreamFixtures.feed(fx, "lo", srcDir)
-        val src = s.readStream.schema(schema).parquet(srcDir)
-          .filter(col("event_type").isin("click", "error", "purchase"))
-          .select(col("user_id").cast("string").as("k"), col("ts"),
-            col("seq"),
-            when(col("event_type") === "click", 0)
-              .when(col("event_type") === "error", 1).otherwise(2).as("kind"))
-          .as[graft.streaming.CepEvent]
-        val name = "stream_cep_" + System.nanoTime()
-        val q = graft.streaming.CepPattern(src, 3600L * 1000 * 1000)
-          .writeStream.queryName(name).format("memory").outputMode("append").start()
-        try {
-          q.processAllAvailable() // batch 1: old half — registers park in state
-          StreamFixtures.feed(fx, "hi", srcDir)
-          StreamHarness.settle(q) // batch 2: recent half — cross-batch matches
-        } finally q.stop()
-        val res = s.table(name)
+        // batch 1: old half — registers park in state
+        // batch 2: recent half — cross-batch matches
+        StreamHarness.drainFeed(fx, Seq("lo", "hi")) { srcDir =>
+          val src = s.readStream.schema(schema).parquet(srcDir)
+            .filter(col("event_type").isin("click", "error", "purchase"))
+            .select(col("user_id").cast("string").as("k"), col("ts"),
+              col("seq"),
+              when(col("event_type") === "click", 0)
+                .when(col("event_type") === "error", 1).otherwise(2).as("kind"))
+            .as[graft.streaming.CepEvent]
+          graft.streaming.CepPattern(src, 3600L * 1000 * 1000)
+        }
           .select(col("eventId").as("event_id"), col("k").cast("long").as("user_id"),
             col("pT").as("p_t"), col("clickT").as("click_t"))
           .orderBy("event_id")
-        StreamFixtures.deleteRecursively(root)
-        res
       },
       Some("""WITH u AS (
                SELECT event_id, user_id, epoch_us(ts) AS t, 1 AS side
@@ -2029,29 +1931,19 @@ object CoreQueries {
         import s.implicits._
         val fx = StreamFixtures.eventsHalves(s, dir)
         val schema = StreamFixtures.eventsHalvesSchema(s, dir)
-        val root = StreamFixtures.scratchDir("graft_kleene_")
-        val srcDir = s"$root/src"
-        StreamFixtures.feed(fx, "lo", srcDir)
-        val src = s.readStream.schema(schema).parquet(srcDir)
-          .filter(col("event_type").isin("click", "purchase"))
-          .select(col("user_id").cast("string").as("k"), col("ts"),
-            col("seq"),
-            when(col("event_type") === "click", 0).otherwise(2).as("kind"))
-          .as[graft.streaming.CepEvent]
-        val name = "stream_kl_" + System.nanoTime()
-        val q = graft.streaming.CepKleene(src)
-          .writeStream.queryName(name).format("memory").outputMode("append").start()
-        try {
-          q.processAllAvailable() // batch 1: counters park in state
-          StreamFixtures.feed(fx, "hi", srcDir)
-          StreamHarness.settle(q) // batch 2: counts straddle the boundary
-        } finally q.stop()
-        val res = s.table(name)
+        // batch 1: counters park in state; batch 2: counts straddle the boundary
+        StreamHarness.drainFeed(fx, Seq("lo", "hi")) { srcDir =>
+          val src = s.readStream.schema(schema).parquet(srcDir)
+            .filter(col("event_type").isin("click", "purchase"))
+            .select(col("user_id").cast("string").as("k"), col("ts"),
+              col("seq"),
+              when(col("event_type") === "click", 0).otherwise(2).as("kind"))
+            .as[graft.streaming.CepEvent]
+          graft.streaming.CepKleene(src)
+        }
           .select(col("eventId").as("event_id"), col("k").cast("long").as("user_id"),
             col("nClicks").as("n_clicks"))
           .orderBy("event_id")
-        StreamFixtures.deleteRecursively(root)
-        res
       },
       Some("""WITH u AS (
                SELECT event_id, user_id, epoch_us(ts) AS t, 1 AS side
@@ -2081,30 +1973,20 @@ object CoreQueries {
         import s.implicits._
         val fx = StreamFixtures.eventsHalves(s, dir)
         val schema = StreamFixtures.eventsHalvesSchema(s, dir)
-        val root = StreamFixtures.scratchDir("graft_funnel_")
-        val srcDir = s"$root/src"
-        StreamFixtures.feed(fx, "lo", srcDir)
-        val src = s.readStream.schema(schema).parquet(srcDir)
-          .filter(col("event_type").isin("view", "click", "purchase"))
-          .select(col("user_id").cast("string").as("k"), col("ts"),
-            col("seq"),
-            when(col("event_type") === "view", 0)
-              .when(col("event_type") === "click", 1).otherwise(2).as("kind"))
-          .as[graft.streaming.CepEvent]
-        val name = "stream_fn_" + System.nanoTime()
-        val q = graft.streaming.FunnelTracker(src)
-          .writeStream.queryName(name).format("memory").outputMode("append").start()
-        try {
-          q.processAllAvailable() // batch 1: registers park
-          StreamFixtures.feed(fx, "hi", srcDir)
-          StreamHarness.settle(q) // batch 2: stages complete across batches
-        } finally q.stop()
-        val res = s.table(name)
+        // batch 1: registers park; batch 2: stages complete across batches
+        StreamHarness.drainFeed(fx, Seq("lo", "hi")) { srcDir =>
+          val src = s.readStream.schema(schema).parquet(srcDir)
+            .filter(col("event_type").isin("view", "click", "purchase"))
+            .select(col("user_id").cast("string").as("k"), col("ts"),
+              col("seq"),
+              when(col("event_type") === "view", 0)
+                .when(col("event_type") === "click", 1).otherwise(2).as("kind"))
+            .as[graft.streaming.CepEvent]
+          graft.streaming.FunnelTracker(src)
+        }
           .agg(sum(when(col("stage") === 1, 1L).otherwise(0L)).as("n_view"),
             sum(when(col("stage") === 2, 1L).otherwise(0L)).as("n_click_after"),
             sum(when(col("stage") === 3, 1L).otherwise(0L)).as("n_purchase_after"))
-        StreamFixtures.deleteRecursively(root)
-        res
       },
       Some("""WITH t1 AS (SELECT user_id, min(epoch_us(ts)) AS t1
                      FROM events WHERE event_type = 'view' GROUP BY 1),
@@ -2132,27 +2014,18 @@ object CoreQueries {
         import s.implicits._
         val fx = StreamFixtures.eventsHalves(s, dir)
         val schema = StreamFixtures.eventsHalvesSchema(s, dir)
-        val root = StreamFixtures.scratchDir("graft_spaths_")
-        val srcDir = s"$root/src"
-        StreamFixtures.feed(fx, "lo", srcDir)
-        val src = s.readStream.schema(schema).parquet(srcDir)
-          .select(col("user_id").cast("string").as("k"), col("ts"),
-            col("seq"), col("event_type").as("etype"))
-          .as[graft.streaming.CepEvent2]
-        val name = "stream_sp_" + System.nanoTime()
-        val q = graft.streaming.SessionPaths(src, 1800L * 1000 * 1000)
-          .writeStream.queryName(name).format("memory").outputMode("append").start()
-        try {
-          q.processAllAvailable() // batch 1: open sessions park in state
-          StreamFixtures.feed(fx, "hi", srcDir)
-          StreamHarness.settle(q) // batch 2: straddlers extend, then close
-        } finally q.stop()
-        val res = s.table(name)
+        // batch 1: open sessions park in state
+        // batch 2: straddlers extend, then close
+        StreamHarness.drainFeed(fx, Seq("lo", "hi")) { srcDir =>
+          val src = s.readStream.schema(schema).parquet(srcDir)
+            .select(col("user_id").cast("string").as("k"), col("ts"),
+              col("seq"), col("event_type").as("etype"))
+            .as[graft.streaming.CepEvent2]
+          graft.streaming.SessionPaths(src, 1800L * 1000 * 1000)
+        }
           .groupBy("path").agg(count(lit(1)).as("n"))
           .orderBy(col("n").desc, col("path"))
           .limit(20)
-        StreamFixtures.deleteRecursively(root)
-        res
       },
       Some("""WITH e AS (
                SELECT user_id, epoch_us(ts) AS t, event_id AS seq, event_type
@@ -2187,27 +2060,17 @@ object CoreQueries {
         import s.implicits._
         val fx = StreamFixtures.eventsHalves(s, dir)
         val schema = StreamFixtures.eventsHalvesSchema(s, dir)
-        val root = StreamFixtures.scratchDir("graft_cohort_")
-        val srcDir = s"$root/src"
-        StreamFixtures.feed(fx, "lo", srcDir)
-        val src = s.readStream.schema(schema).parquet(srcDir)
-          .select(col("user_id").cast("string").as("k"), col("ts"),
-            col("seq"), col("value").as("v"))
-          .as[graft.streaming.KeyedEvent]
-        val name = "stream_co_" + System.nanoTime()
-        val q = graft.streaming.CohortTracker(src, 604800000000L)
-          .writeStream.queryName(name).format("memory").outputMode("append").start()
-        try {
-          q.processAllAvailable() // batch 1: cohorts register
-          StreamFixtures.feed(fx, "hi", srcDir)
-          StreamHarness.settle(q) // batch 2: later-week offsets emit
-        } finally q.stop()
-        val res = s.table(name)
+        // batch 1: cohorts register; batch 2: later-week offsets emit
+        StreamHarness.drainFeed(fx, Seq("lo", "hi")) { srcDir =>
+          val src = s.readStream.schema(schema).parquet(srcDir)
+            .select(col("user_id").cast("string").as("k"), col("ts"),
+              col("seq"), col("value").as("v"))
+            .as[graft.streaming.KeyedEvent]
+          graft.streaming.CohortTracker(src, 604800000000L)
+        }
           .groupBy(col("cohortW").as("cohort_w"), col("offsetW").as("offset_w"))
           .agg(count(lit(1)).as("n_users"))
           .orderBy("cohort_w", "offset_w")
-        StreamFixtures.deleteRecursively(root)
-        res
       },
       Some("""WITH fw AS (
                SELECT user_id, min(epoch_us(ts) // 604800000000) AS cohort_w
@@ -2258,13 +2121,8 @@ object CoreQueries {
           count(lit(1)).as("n"),
           max_by(col("v"), col("ts")).as("v_final"),
           sum(col("v")).as("v_sum"))
-        val name = "stream_walk_" + System.nanoTime()
-        val q = agg.writeStream.queryName(name).format("memory")
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.processAllAvailable() finally q.stop()
-        s.table(name).select("k", "n", "v_final", "v_sum").orderBy("k")
+        StreamHarness.drain(agg, "complete", availableNow = true)
+          .select("k", "n", "v_final", "v_sum").orderBy("k")
       },
       Some("""SELECT k, count(*) AS n,
                max_by(v, ts) AS v_final, sum(v)::bigint AS v_sum
@@ -2797,13 +2655,7 @@ object CoreQueries {
           .groupBy("camp")
           .agg(count(lit(1)).as("n_events"),
             sum(col("value").cast("decimal(38,6)")).cast("double").as("sum_value"))
-        val name = "stream_ij_" + System.nanoTime()
-        val sq = agg.writeStream.queryName(name).format("memory")
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try sq.processAllAvailable() finally sq.stop()
-        s.table(name).orderBy("camp")
+        StreamHarness.drain(agg, "complete", availableNow = true).orderBy("camp")
       },
       Some("""WITH b AS (
                SELECT min(epoch_us(ts)) AS tmin, max(epoch_us(ts)) AS tmax

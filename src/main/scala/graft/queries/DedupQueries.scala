@@ -335,12 +335,7 @@ object DedupQueries {
           .select(col("e.band").as("band"), col("e.bh").as("bh"),
             col("docId"), col("sig"))
           .as[graft.streaming.BandDoc]
-        val name = "stream_nd_" + System.nanoTime()
-        val sq = graft.streaming.StreamNearDup(banded, 6)
-          .writeStream.queryName(name).format("memory")
-          .outputMode("append").start()
-        try sq.processAllAvailable() finally sq.stop()
-        s.table(name)
+        StreamHarness.drain(graft.streaming.StreamNearDup(banded, 6))
           .select(col("idA").as("id_a"), col("idB").as("id_b"),
             col("nEq").as("n_eq"))
           .distinct()

@@ -241,11 +241,7 @@ object ParityQueries {
             col("value").as("v"),
             (col("event_type") === "error").as("gate"))
           .as[graft.streaming.GatedEvent]
-        val name = "stream_tsb_" + System.nanoTime()
-        val sq = graft.streaming.TriggerSlices.tagged(src, before = true)
-          .writeStream.queryName(name).format("memory").outputMode("append").start()
-        try sq.processAllAvailable() finally sq.stop()
-        s.table(name)
+        StreamHarness.drain(graft.streaming.TriggerSlices.tagged(src, before = true))
           .select(col("k").cast("long").as("user_id"),
             col("windowId").as("window_id"), col("n"),
             col("sum").cast("decimal(38,6)").cast("double").as("sum_value"))

@@ -675,11 +675,8 @@ object SimilarityQueries {
         val counts = withScores.withColumn("cell", cell)
           .groupBy("cell")
           .agg(count(lit(1)).as("n_routed"), sum("vec_id").as("id_sum"))
-        val name = "stream_ivfapp_" + System.nanoTime()
-        val sq = counts.writeStream.queryName(name).format("memory")
-          .outputMode("complete").start()
-        try sq.processAllAvailable() finally sq.stop()
-        s.table(name).select("cell", "n_routed", "id_sum").orderBy("cell")
+        StreamHarness.drain(counts, "complete")
+          .select("cell", "n_routed", "id_sum").orderBy("cell")
       },
       Some(s"""WITH $embSql,
              base AS (SELECT * FROM emb WHERE vec_id % 2 = 0),
@@ -1318,7 +1315,8 @@ object SimilarityQueries {
       (s, dir) => {
         graft.plans.DotD.register(s)
         emb(s, dir).createOrReplaceTempView("graft_emb")
-        s.sql(
+        // the frame is analyzed before the view is dropped
+        try s.sql(
           """SELECT q_id, rk, vec_id, cos
              FROM (SELECT q_id, vec_id, cos, row_number() OVER (
                      PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rk
@@ -1328,6 +1326,7 @@ object SimilarityQueries {
                          JOIN (SELECT * FROM graft_emb WHERE vec_id < 3) q
                            ON e.vec_id <> q.vec_id))
              WHERE rk <= 5 ORDER BY q_id, rk""")
+        finally s.catalog.dropTempView("graft_emb")
       },
       Some(s"""WITH $embSql,
              q AS (SELECT vec_id AS q_id, v AS qv, n2 AS qn2 FROM emb WHERE vec_id < 3),
@@ -1506,40 +1505,29 @@ object SimilarityQueries {
         val bw = s.sparkContext.broadcast(w)
         val fx = StreamFixtures.embHalves(s, dir)
         val schema = StreamFixtures.embHalvesSchema(s, dir)
-        val root = StreamFixtures.scratchDir("graft_qp_")
-        val srcDir = s"$root/src"
-        StreamFixtures.feed(fx, "lo", srcDir)
-        val agg = s.readStream.schema(schema).parquet(srcDir)
-          .withColumn("v", transform(col("embedding"), _.cast("double")))
-          .withColumn("n2", call_function("dotd", col("v"), col("v")))
-          .filter(col("n2") > 0) // zero-norm guard: identical to the batch side
-          .select(col("label").cast("int").as("_1"),
-            transform(col("v"),
-              x => floor(x / sqrt(col("n2")) * ProbeQ).cast("long")).as("_2"))
-          .as[(Int, Seq[Long])]
-          .map { case (l, xq) =>
-            (l.toLong,
-              if (graft.operators.LinearProbe.predict(bw.value, xq.toArray) == l) 1L
-              else 0L)
-          }
-          .toDF("label", "ok")
-          .groupBy("label")
-          .agg(count(lit(1)).as("n"), sum(col("ok")).as("n_correct"))
-        val name = "stream_qp_" + System.nanoTime()
-        val q = agg.writeStream.queryName(name).format("memory")
-          .outputMode("complete").start()
-        try {
-          q.processAllAvailable() // batch 1: low-id half
-          StreamFixtures.feed(fx, "hi", srcDir)
-          StreamHarness.settle(q) // batch 2: counts accumulate
-        } finally q.stop()
-        val res = s.table(name)
+        // batch 1: low-id half; batch 2: counts accumulate
+        StreamHarness.drainFeed(fx, Seq("lo", "hi"), "complete") { srcDir =>
+          s.readStream.schema(schema).parquet(srcDir)
+            .withColumn("v", transform(col("embedding"), _.cast("double")))
+            .withColumn("n2", call_function("dotd", col("v"), col("v")))
+            .filter(col("n2") > 0) // zero-norm guard: identical to the batch side
+            .select(col("label").cast("int").as("_1"),
+              transform(col("v"),
+                x => floor(x / sqrt(col("n2")) * ProbeQ).cast("long")).as("_2"))
+            .as[(Int, Seq[Long])]
+            .map { case (l, xq) =>
+              (l.toLong,
+                if (graft.operators.LinearProbe.predict(bw.value, xq.toArray) == l) 1L
+                else 0L)
+            }
+            .toDF("label", "ok")
+            .groupBy("label")
+            .agg(count(lit(1)).as("n"), sum(col("ok")).as("n_correct"))
+        }
           .withColumn("acc_pm", expr("n_correct * 1000 DIV n"))
           .select(col("label").cast("long").as("label"), col("n"),
             col("n_correct"), col("acc_pm"))
           .orderBy("label")
-        StreamFixtures.deleteRecursively(root)
-        res
       },
       Some(linearProbeSql(ProbeK, ProbeD, ProbeQ, ProbeSteps))),
 
@@ -1795,12 +1783,7 @@ object SimilarityQueries {
         // 1.2 GiB single-task result against the 1g default)
         StreamFixtures.assertDriverCollectCapacity(
           s, s"$dir/embeddings.parquet", "stream_semdedup")
-        val name = "stream_sd_" + System.nanoTime()
-        val sq = graft.streaming.StreamSemDedup(cv, 0.3)
-          .writeStream.queryName(name).format("memory")
-          .outputMode("append").start()
-        try sq.processAllAvailable() finally sq.stop()
-        s.table(name)
+        StreamHarness.drain(graft.streaming.StreamSemDedup(cv, 0.3))
           .select(col("idA").as("id_a"), col("idB").as("id_b"), col("qcos"))
           .distinct()
           .orderBy("id_a", "id_b")

@@ -1,7 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
@@ -49,11 +50,10 @@ object StreamHarness {
     * catalog keeps the session default (local[32] ⇒ 32).
     *
     * State-backend sweep knob (VERDICT r6 #8): SPARK_GRAFT_STATE_BACKEND=
-    * rocksdb runs the WHOLE streaming catalog on the RocksDB provider
-    * (queries that pin RocksDB themselves, e.g. stream_ewma's
-    * transformWithState, are unaffected). Results must be backend-
-    * independent — the sweep re-checks every hash; SCALE.md records the
-    * per-backend toll.
+    * rocksdb runs the WHOLE streaming catalog on the RocksDB provider; no
+    * query pins a backend itself. Results must be backend-independent —
+    * the sweep re-checks every hash; SCALE.md records the per-backend
+    * toll.
     */
   def withShufflePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
     val rocks = sys.env.get("SPARK_GRAFT_STATE_BACKEND")
@@ -80,6 +80,42 @@ object StreamHarness {
         throw new IllegalArgumentException(
           s"SPARK_GRAFT_STREAM_PARTITIONS must be a positive int, got '$v'"))
     }
+
+  /** Run `ds` into a memory sink under a unique name, drive it (by
+    * default: process everything available) and stop it, then return the
+    * sink's rows. The sink's temp view is dropped before returning, also
+    * when the query fails, so a catalog query leaves no view behind; the
+    * returned frame is already resolved and keeps reading the sink.
+    */
+  def drain(ds: Dataset[_], mode: String = "append", availableNow: Boolean = false,
+      drive: StreamingQuery => Unit = _.processAllAvailable()): DataFrame = {
+    val name = "graft_sink_" + System.nanoTime()
+    val w = ds.writeStream.queryName(name).format("memory").outputMode(mode)
+    val q = (if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start()
+    try {
+      try drive(q) finally q.stop()
+      ds.sparkSession.table(name)
+    } finally ds.sparkSession.catalog.dropTempView(name)
+  }
+
+  /** [[drain]] over a file feed, one micro-batch per fixture part: copy
+    * part `parts.head` of `fixtureRoot` into a fresh source directory,
+    * start the stream `query` builds over that directory and process it,
+    * then feed each further part and [[settle]]. The source directory is
+    * deleted before returning, also when the query fails.
+    */
+  def drainFeed(fixtureRoot: String, parts: Seq[String], mode: String = "append")(
+      query: String => Dataset[_]): DataFrame = {
+    val root = StreamFixtures.scratchDir("graft_feed_")
+    try {
+      val srcDir = s"$root/src"
+      StreamFixtures.feed(fixtureRoot, parts.head, srcDir)
+      drain(query(srcDir), mode, drive = { q =>
+        q.processAllAvailable()
+        parts.tail.foreach { p => StreamFixtures.feed(fixtureRoot, p, srcDir); settle(q) }
+      })
+    } finally StreamFixtures.deleteRecursively(root)
+  }
 
   /** Process a mid-stream file feed to quiescence — closes the
     * `processAllAvailable` no-data race that the sf1-volume gate exposed

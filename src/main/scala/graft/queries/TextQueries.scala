@@ -840,11 +840,7 @@ object TextQueries {
               }
             }.toDF("doc_id", "n_tokens")
         }
-        val name = "stream_bpe_" + System.nanoTime()
-        val sq = out.writeStream.queryName(name).format("memory")
-          .outputMode("append").start()
-        try sq.processAllAvailable() finally sq.stop()
-        s.table(name).orderBy("doc_id")
+        StreamHarness.drain(out).orderBy("doc_id")
       },
       Some(graft.operators.BPE.encodeOracleWith(
         """SELECT w, count(*) AS wn FROM (
@@ -1135,30 +1131,21 @@ object TextQueries {
         import s.implicits._
         val fx = StreamFixtures.docsHalves(s, dir)
         val schema = StreamFixtures.docsHalvesSchema(s, dir)
-        val root = StreamFixtures.scratchDir("graft_scc_")
-        val srcDir = s"$root/src"
-        StreamFixtures.feed(fx, "lo", srcDir)
-        val src = s.readStream.schema(schema).parquet(srcDir)
-          .withColumn("n_tokens", size(split(col("text"), " ")))
-          .filter(col("n_tokens") >= 20 && col("n_tokens") <= 1000)
-          .select(Q.hash60(col("text")).as("h"), col("doc_id").as("ord"),
-            col("lang"), col("n_tokens").cast("long").as("nTokens"))
-          .as[graft.streaming.KeyedDoc]
-        val name = "stream_scc_" + System.nanoTime()
-        val q = graft.streaming.KeepFirst(src)
-          .writeStream.queryName(name).format("memory").outputMode("append").start()
-        try {
-          q.processAllAvailable() // batch 1: low doc_ids seed the registry
-          StreamFixtures.feed(fx, "hi", srcDir)
-          StreamHarness.settle(q) // batch 2: cross-batch dups suppressed
-        } finally q.stop()
-        val res = s.table(name)
+        // batch 1: low doc_ids seed the registry
+        // batch 2: cross-batch dups suppressed
+        StreamHarness.drainFeed(fx, Seq("lo", "hi")) { srcDir =>
+          val src = s.readStream.schema(schema).parquet(srcDir)
+            .withColumn("n_tokens", size(split(col("text"), " ")))
+            .filter(col("n_tokens") >= 20 && col("n_tokens") <= 1000)
+            .select(Q.hash60(col("text")).as("h"), col("doc_id").as("ord"),
+              col("lang"), col("n_tokens").cast("long").as("nTokens"))
+            .as[graft.streaming.KeyedDoc]
+          graft.streaming.KeepFirst(src)
+        }
           .groupBy("lang")
           .agg(count(lit(1)).as("n_docs"),
             Q.dsum(col("nTokens")).cast("long").as("total_tokens"))
           .orderBy("lang")
-        StreamFixtures.deleteRecursively(root)
-        res
       },
       Some(s"""WITH quality AS (
              SELECT *, len(string_split(text, ' ')) AS n_tokens
@@ -1212,36 +1199,24 @@ object TextQueries {
             "evictions between event-time batches")
         val fx = StreamFixtures.docsTtlBatches(s, dir)
         val schema = StreamFixtures.docsTtlBatchesSchema(s, dir)
-        val root = StreamFixtures.scratchDir("graft_scct_")
-        val srcDir = s"$root/src"
-        StreamFixtures.feed(fx, "b1", srcDir)
-        val src = s.readStream.schema(schema).parquet(srcDir)
-          .withColumn("n_tokens", size(split(col("text"), " ")))
-          .filter(col("n_tokens") >= 20 && col("n_tokens") <= 1000)
-          .select(Q.hash60(col("text")).as("h"), col("doc_id").as("ord"),
-            col("lang"), col("n_tokens").cast("long").as("nTokens"),
-            col("ts"))
-          .as[graft.streaming.TsKeyedDoc]
-        val name = "stream_scct_" + System.nanoTime()
-        val q = graft.streaming.KeepFirst.withTtl(src, TtlGate.TtlMs)
-          .writeStream.queryName(name).format("memory")
-          .outputMode("append").start()
-        try {
-          q.processAllAvailable() // b1: grp-0 keys seed the registry
-          StreamFixtures.feed(fx, "b2", srcDir)
-          StreamHarness.settle(q) // b2: wm→T2 > T1+ttl — idle b1 keys evict
-          StreamFixtures.feed(fx, "b3", srcDir)
-          StreamHarness.settle(q) // b3: refreshed keys survive (T3 < T2+ttl)
-          StreamFixtures.feed(fx, "b4", srcDir)
-          StreamHarness.settle(q) // b4: grp-0 replay — evicted keys re-emit
-        } finally q.stop()
-        val res = s.table(name)
+        // b1: grp-0 keys seed the registry
+        // b2: wm→T2 > T1+ttl — idle b1 keys evict
+        // b3: refreshed keys survive (T3 < T2+ttl)
+        // b4: grp-0 replay — evicted keys re-emit
+        StreamHarness.drainFeed(fx, Seq("b1", "b2", "b3", "b4")) { srcDir =>
+          val src = s.readStream.schema(schema).parquet(srcDir)
+            .withColumn("n_tokens", size(split(col("text"), " ")))
+            .filter(col("n_tokens") >= 20 && col("n_tokens") <= 1000)
+            .select(Q.hash60(col("text")).as("h"), col("doc_id").as("ord"),
+              col("lang"), col("n_tokens").cast("long").as("nTokens"),
+              col("ts"))
+            .as[graft.streaming.TsKeyedDoc]
+          graft.streaming.KeepFirst.withTtl(src, TtlGate.TtlMs)
+        }
           .groupBy("lang")
           .agg(count(lit(1)).as("n_docs"),
             Q.dsum(col("nTokens")).cast("long").as("total_tokens"))
           .orderBy("lang")
-        StreamFixtures.deleteRecursively(root)
-        res
       },
       Some(s"""WITH quality AS MATERIALIZED (
              SELECT doc_id, lang,
@@ -1417,34 +1392,23 @@ object TextQueries {
         }
         val fx = StreamFixtures.docsHalves(s, dir)
         val schema = StreamFixtures.docsHalvesSchema(s, dir)
-        val root = StreamFixtures.scratchDir("graft_sdc_")
-        val srcDir = s"$root/src"
-        StreamFixtures.feed(fx, "lo", srcDir)
-        // scanWide: the 8-gram hash explode is the CPU cost — fan the
-        // single-split scan across cores before computing it
-        val src = StreamHarness.scanWide(s,
-            s.readStream.schema(schema).parquet(srcDir))
-          .filter(col("doc_id") % 20 =!= 0 &&
-            size(split(col("text"), " ")) >= 8)
-          .select(col("doc_id"), split(col("text"), " ").as("t"))
-          .select(col("doc_id"), explode(grams8(col("t"))).as("h"))
-          // stream-static: the static index must BROADCAST — without the
-          // hint the planner shuffle-joins, re-exchanging the exploded
-          // stream side every micro-batch (measured 9.6 s → 2.5 s)
-          .join(broadcast(bench), "h")
-          .groupBy("doc_id")
-          .agg(count(lit(1)).as("n_hits"))
-        val name = "stream_sdc_" + System.nanoTime()
-        val q = src.writeStream.queryName(name).format("memory")
-          .outputMode("complete").start()
-        try {
-          q.processAllAvailable() // batch 1: low-id half
-          StreamFixtures.feed(fx, "hi", srcDir)
-          StreamHarness.settle(q) // batch 2: hits accumulate across batches
-        } finally q.stop()
-        val res = s.table(name).orderBy("doc_id")
-        StreamFixtures.deleteRecursively(root)
-        res
+        // batch 1: low-id half; batch 2: hits accumulate across batches
+        StreamHarness.drainFeed(fx, Seq("lo", "hi"), "complete") { srcDir =>
+          // scanWide: the 8-gram hash explode is the CPU cost — fan the
+          // single-split scan across cores before computing it
+          StreamHarness.scanWide(s,
+              s.readStream.schema(schema).parquet(srcDir))
+            .filter(col("doc_id") % 20 =!= 0 &&
+              size(split(col("text"), " ")) >= 8)
+            .select(col("doc_id"), split(col("text"), " ").as("t"))
+            .select(col("doc_id"), explode(grams8(col("t"))).as("h"))
+            // stream-static: the static index must BROADCAST — without the
+            // hint the planner shuffle-joins, re-exchanging the exploded
+            // stream side every micro-batch (measured 9.6 s → 2.5 s)
+            .join(broadcast(bench), "h")
+            .groupBy("doc_id")
+            .agg(count(lit(1)).as("n_hits"))
+        }.orderBy("doc_id")
       },
       Some(s"""WITH base AS (
              SELECT doc_id,
@@ -2348,35 +2312,24 @@ object TextQueries {
         import s.implicits._
         val fx = StreamFixtures.docsHalves(s, dir)
         val schema = StreamFixtures.docsHalvesSchema(s, dir)
-        val root = StreamFixtures.scratchDir("graft_spk_")
-        val srcDir = s"$root/src"
-        StreamFixtures.feed(fx, "lo", srcDir)
-        val src = s.readStream.schema(schema).parquet(srcDir)
-          .select(
-            pmod(Q.hash60(concat(lit("pack|"), col("doc_id"))), lit(32))
-              .cast("int").as("shard"),
-            col("doc_id").as("id"),
-            size(split(col("text"), " ")).as("len"))
-          .as[graft.streaming.PackItem]
-        val packed = graft.streaming.StreamPacking.nextFit(src, 512).toDF()
-        val agg = packed.groupBy("shard", "bin")
-          .agg(count(lit(1)).as("n_docs"),
-            sum(col("len")).cast("long").as("n_tokens"),
-            Q.hash60(concat_ws(" ",
-              transform(sort_array(collect_list(struct(col("start"), col("id")))),
-                x => x.getField("start").cast("string")))).as("bounds_fp"),
-            sum(expr("CAST(len AS BIGINT) * (len - 1) DIV 2")).as("pos_sum"))
-        val name = "stream_spk_" + System.nanoTime()
-        val q = agg.writeStream.queryName(name).format("memory")
-          .outputMode("complete").start()
-        try {
-          q.processAllAvailable() // batch 1: low-id half
-          StreamFixtures.feed(fx, "hi", srcDir)
-          StreamHarness.settle(q) // batch 2: open bins keep filling
-        } finally q.stop()
-        val res = s.table(name).orderBy("shard", "bin")
-        StreamFixtures.deleteRecursively(root)
-        res
+        // batch 1: low-id half; batch 2: open bins keep filling
+        StreamHarness.drainFeed(fx, Seq("lo", "hi"), "complete") { srcDir =>
+          val src = s.readStream.schema(schema).parquet(srcDir)
+            .select(
+              pmod(Q.hash60(concat(lit("pack|"), col("doc_id"))), lit(32))
+                .cast("int").as("shard"),
+              col("doc_id").as("id"),
+              size(split(col("text"), " ")).as("len"))
+            .as[graft.streaming.PackItem]
+          val packed = graft.streaming.StreamPacking.nextFit(src, 512).toDF()
+          packed.groupBy("shard", "bin")
+            .agg(count(lit(1)).as("n_docs"),
+              sum(col("len")).cast("long").as("n_tokens"),
+              Q.hash60(concat_ws(" ",
+                transform(sort_array(collect_list(struct(col("start"), col("id")))),
+                  x => x.getField("start").cast("string")))).as("bounds_fp"),
+              sum(expr("CAST(len AS BIGINT) * (len - 1) DIV 2")).as("pos_sum"))
+        }.orderBy("shard", "bin")
       },
       Some(nfdPackSql("id"))),
 
@@ -2418,36 +2371,25 @@ object TextQueries {
         import s.implicits._
         val fx = StreamFixtures.docsHalves(s, dir)
         val schema = StreamFixtures.docsHalvesSchema(s, dir)
-        val root = StreamFixtures.scratchDir("graft_spk0_")
-        val srcDir = s"$root/src"
-        StreamFixtures.feed(fx, "lo", srcDir)
-        val src = s.readStream.schema(schema).parquet(srcDir)
-          .select(
-            pmod(Q.hash60(concat(lit("pack|"), col("doc_id"))), lit(32))
-              .cast("int").as("shard"),
-            col("doc_id").as("id"),
-            size(split(col("text"), " ")).as("len"))
-          .filter(col("shard") === 0)
-          .as[graft.streaming.PackItem]
-        val packed = graft.streaming.StreamPacking.nextFit(src, 512).toDF()
-        val agg = packed.groupBy("shard", "bin")
-          .agg(count(lit(1)).as("n_docs"),
-            sum(col("len")).cast("long").as("n_tokens"),
-            Q.hash60(concat_ws(" ",
-              transform(sort_array(collect_list(struct(col("start"), col("id")))),
-                x => x.getField("start").cast("string")))).as("bounds_fp"),
-            sum(expr("CAST(len AS BIGINT) * (len - 1) DIV 2")).as("pos_sum"))
-        val name = "stream_spk0_" + System.nanoTime()
-        val q = agg.writeStream.queryName(name).format("memory")
-          .outputMode("complete").start()
-        try {
-          q.processAllAvailable() // batch 1: low-id half
-          StreamFixtures.feed(fx, "hi", srcDir)
-          StreamHarness.settle(q) // batch 2: open bins keep filling
-        } finally q.stop()
-        val res = s.table(name).orderBy("shard", "bin")
-        StreamFixtures.deleteRecursively(root)
-        res
+        // batch 1: low-id half; batch 2: open bins keep filling
+        StreamHarness.drainFeed(fx, Seq("lo", "hi"), "complete") { srcDir =>
+          val src = s.readStream.schema(schema).parquet(srcDir)
+            .select(
+              pmod(Q.hash60(concat(lit("pack|"), col("doc_id"))), lit(32))
+                .cast("int").as("shard"),
+              col("doc_id").as("id"),
+              size(split(col("text"), " ")).as("len"))
+            .filter(col("shard") === 0)
+            .as[graft.streaming.PackItem]
+          val packed = graft.streaming.StreamPacking.nextFit(src, 512).toDF()
+          packed.groupBy("shard", "bin")
+            .agg(count(lit(1)).as("n_docs"),
+              sum(col("len")).cast("long").as("n_tokens"),
+              Q.hash60(concat_ws(" ",
+                transform(sort_array(collect_list(struct(col("start"), col("id")))),
+                  x => x.getField("start").cast("string")))).as("bounds_fp"),
+              sum(expr("CAST(len AS BIGINT) * (len - 1) DIV 2")).as("pos_sum"))
+        }.orderBy("shard", "bin")
       },
       Some(nfdPackSql("id", Some(0)))),
 
@@ -2500,11 +2442,7 @@ object TextQueries {
         val src = s.readStream.schema(schema).parquet(root)
           .as[Multimodal.MediaRow]
         val hashed = Codecs.imageHashes(src).toDF("id", "phash")
-        val name = "stream_imgfp_" + System.nanoTime()
-        val sq = hashed.writeStream.queryName(name).format("memory")
-          .outputMode("append").start()
-        try sq.processAllAvailable() finally sq.stop()
-        s.table(name).orderBy("id")
+        StreamHarness.drain(hashed).orderBy("id")
       },
       Some(s"""$imageFpCte SELECT id, phash FROM ph ORDER BY id""")),
 

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import scala.collection.IndexedSeqView
 import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.{Dataset, Encoder}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -11,7 +12,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * Per key and micro-batch the runner loads the key's state (or `init`),
   * stable-sorts the key's rows by `ordering`, calls `step` per row and
-  * `flush` after the last row of each cycle, then stores the state; a
+  * `flush` after each cycle with the cycle's rows, then stores the state; a
   * null state is no state (`init = null` stores nothing until a row sets
   * one).
   *
@@ -32,8 +33,10 @@ abstract class KeyedFold[K, I, S, O](
     */
   def cycle(row: I): Any = ()
 
-  /** Called after the last row of each cycle, with that row. */
-  def flush(k: K, s: S, last: I, emit: O => Unit): S = s
+  /** Called after the last row of each cycle, with the cycle's rows in
+    * `ordering` (a view over the sorted micro-batch).
+    */
+  def flush(k: K, s: S, rows: IndexedSeqView[I], emit: O => Unit): S = s
 }
 
 /** The one eviction kind: an EVENT-TIME idle TTL. The watermark is taken
@@ -69,12 +72,15 @@ object KeyedFold {
             val out = ArrayBuffer.empty[O]
             val emit: O => Unit = out += _
             var s = state.getOption.getOrElse(fold.init)
+            var start = 0
             var i = 0
             while (i < batch.length) {
               val row = batch(i)
               s = fold.step(k, s, row, emit)
-              if (i + 1 == batch.length || fold.cycle(batch(i + 1)) != fold.cycle(row))
-                s = fold.flush(k, s, row, emit)
+              if (i + 1 == batch.length || fold.cycle(batch(i + 1)) != fold.cycle(row)) {
+                s = fold.flush(k, s, batch.view.slice(start, i + 1), emit)
+                start = i + 1
+              }
               i += 1
             }
             if (s != null) state.update(s) else if (state.exists) state.remove()

@@ -13,15 +13,13 @@ import graft.streaming._
   * (numRowsTotal, stateMemory) from each batch's StreamingQueryProgress,
   * and ASSERTS the plateau: state row count at batch 100 equals batch 50
   * exactly, and state memory grows ≤ 25% after batch 50 (snapshot jitter
-  * allowance; RocksDB families get only a 4x runaway guard because its
-  * memoryUsedBytes counts SST/compaction history, not live state). A
-  * family whose state tracked the stream length (the bug class this
-  * guards) fails loudly.
+  * allowance). A family whose state tracked the stream length (the bug
+  * class this guards) fails loudly.
   *
   *   sbt -batch "runMain graft.tools.StateSoak"
   *
   * Families and why their state must flatten:
-  *   - ewma: one Double register per key (transformWithState/RocksDB)
+  *   - ewma: one Double register per key
   *   - zip_join: one (left,right) register per key
   *   - pack: one (bin,fill) register per shard
   *   - neardup: per-bucket signature history, FIFO cap 32 here
@@ -48,42 +46,32 @@ object StateSoak {
     val Batches = 100
 
     /** Drive `out` for `Batches` batches, feeding batch b via `feed`. */
-    def soak[I, O](name: String, rocksdb: Boolean = false)(
+    def soak[I, O](name: String)(
         mk: MemoryStream[I] => Dataset[O])(feed: (MemoryStream[I], Int) => Unit)(
         implicit enc: org.apache.spark.sql.Encoder[I]): Curve = {
-      val bk = "spark.sql.streaming.stateStore.providerClass"
-      val prev = spark.conf.getOption(bk)
-      if (rocksdb) spark.conf.set(bk,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      val src = MemoryStream[I]
+      val q = mk(src).writeStream
+        .queryName(s"soak_$name").format("noop").outputMode("append").start()
+      val rows = Vector.newBuilder[Long]
+      val mem = Vector.newBuilder[Long]
       try {
-        val src = MemoryStream[I]
-        val q = mk(src).writeStream
-          .queryName(s"soak_$name").format("noop").outputMode("append").start()
-        val rows = Vector.newBuilder[Long]
-        val mem = Vector.newBuilder[Long]
-        try {
-          for (b <- 1 to Batches) {
-            feed(src, b)
-            // settle: closes the processAllAvailable no-data race on
-            // file feeds into a running query (see StreamHarness.settle)
-            graft.queries.StreamHarness.settle(q)
-            val p = q.lastProgress
-            val so = p.stateOperators
-            rows += so.map(_.numRowsTotal).sum
-            mem += so.map(_.memoryUsedBytes).sum
-          }
-        } finally q.stop()
-        Curve(rows.result(), mem.result())
-      } finally prev match {
-        case Some(v) => spark.conf.set(bk, v)
-        case None => spark.conf.unset(bk)
-      }
+        for (b <- 1 to Batches) {
+          feed(src, b)
+          // settle: closes the processAllAvailable no-data race on
+          // file feeds into a running query (see StreamHarness.settle)
+          graft.queries.StreamHarness.settle(q)
+          val p = q.lastProgress
+          val so = p.stateOperators
+          rows += so.map(_.numRowsTotal).sum
+          mem += so.map(_.memoryUsedBytes).sum
+        }
+      } finally q.stop()
+      Curve(rows.result(), mem.result())
     }
 
     val curves = scala.collection.mutable.LinkedHashMap[String, Curve]()
-    val rocksFamilies = Set("ewma")
 
-    curves("ewma") = soak[KeyedEvent, EwmaBatchOut]("ewma", rocksdb = true)(
+    curves("ewma") = soak[KeyedEvent, EwmaBatchOut]("ewma")(
       src => EwmaScan(src.toDS(), 0.2)) { (src, b) =>
       src.addData((0 until 10).flatMap(k => (0 until 5).map(i =>
         KeyedEvent(s"k$k", b * 1000L + i, b * 100L + i, (b * 31 + k * 7 + i) % 100 / 10.0))))
@@ -163,20 +151,13 @@ object StateSoak {
       // equal still-growing snapshots
       if (name.endsWith("_ttl") && c.rows(99) > 200)
         failed ::= s"$name: TTL eviction not biting (${c.rows(99)}/1000 keys live at batch 100)"
-      // RocksDB's memoryUsedBytes counts SST files + memtable + version
-      // history, which grows with commit count until compaction reclaims
-      // it asynchronously — live state here is 10 doubles. Rows stay
-      // strict for every family; the memory plateau bound is 25% for the
-      // HDFS provider (real byte-counted state) and only a runaway guard
-      // (4x) for RocksDB.
       val memAllow =
-        if (rocksFamilies(name)) 4.0
         // TTL eviction is EVENT-TIME and deterministic (Streams.scala
         // withTtl/TtlCounter docs) — the 2x headroom covers the state
         // store's snapshot/commit overhead varying across eviction
         // batches (delta files straddle the m50 sample point), not any
         // eviction nondeterminism. Row counts above stay strict.
-        else if (name.endsWith("_ttl")) 2.0
+        if (name.endsWith("_ttl")) 2.0
         else 1.25
       if (m100 > m50 * memAllow)
         failed ::= f"$name: state memory grew ${m100 / m50}%.2fx after batch 50"

@@ -1,11 +1,15 @@
 package graft
 
-/** Catalog query bodies leave the session conf as they found it. Bench and
-  * Verify run the whole catalog on one session, so a query that writes
-  * session conf changes what every later query runs under. Covers the
-  * queries that used to write conf themselves: per-query
-  * `nanosAsLong` sets (now a session default) and the set-then-unset
-  * state-store and session-window flags (now `StreamHarness.withConf`).
+/** Catalog query bodies leave the session conf and temp views as they
+  * found them. Bench and Verify run the whole catalog on one session, so a
+  * query that writes session conf changes what every later query runs
+  * under. The conf case covers the queries that used to write conf
+  * themselves: per-query `nanosAsLong` sets (now a session default) and
+  * the set-then-unset state-store and session-window flags (now
+  * `StreamHarness.withConf`). The view case covers the streaming queries'
+  * memory sinks (one temp view each, holding the result on the driver
+  * heap; `StreamHarness.drain` drops it) and the SQL-surface queries'
+  * registered views.
   */
 class QueryConfSpec extends SparkSpec {
 
@@ -39,5 +43,19 @@ class QueryConfSpec extends SparkSpec {
       changed shouldBe empty
       spark.conf.getAll shouldBe initial
     } finally spark.conf.unset(provider)
+  }
+
+  test("query bodies leave the session temp views unchanged (stream_ and sql_)") {
+    def views = spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
+    val changed = SparkEntry.queries.keys.toSeq.sorted
+      .filter(n => n.startsWith("stream_") || n.startsWith("sql_"))
+      .flatMap { n =>
+        val before = views
+        SparkEntry.queries(n)(spark, dir).collect()
+        val after = views
+        (after -- before).toSeq.sorted.map(v => s"$n: left $v") ++
+          (before -- after).toSeq.sorted.map(v => s"$n: dropped $v")
+      }
+    changed shouldBe empty
   }
 }

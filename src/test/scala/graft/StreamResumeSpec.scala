@@ -73,11 +73,12 @@ class StreamResumeSpec extends SparkSpec {
       .foreach(Files.deleteIfExists(_))
   }
 
-  test("transformWithState (EWMA) value-state survives a restart") {
+  test("EWMA value-state survives a restart (RocksDB state)") {
     // Same two-incarnation harness, the OTHER state backend: EwmaScan runs
-    // on transformWithState + the RocksDB provider. The post-restart
-    // emissions depend on the pre-restart running value — bit-exact
-    // equality with a driver-side fold proves ValueState round-tripped.
+    // on the same KeyedFold runner as CountSlices, here on the RocksDB
+    // provider. The post-restart emissions depend on the pre-restart
+    // running value — bit-exact equality with a driver-side fold proves
+    // the per-key state round-tripped.
     val s = spark
     import s.implicits._
     val lambda = 0.25
@@ -107,12 +108,12 @@ class StreamResumeSpec extends SparkSpec {
       try q.processAllAvailable() finally q.stop()
     }
 
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    graft.queries.StreamHarness.withConf(s,
+      "spark.sql.streaming.stateStore.providerClass" ->
+        graft.queries.StreamHarness.RocksDbProvider) {
       feed("h1"); incarnation()
       feed("h2"); incarnation()
-    } finally s.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    }
 
     val got = graft.streaming.EwmaScan.exploded(s.read.parquet(s"$root/out"))
       .orderBy("seq").select("seq", "ewma").as[(Long, Double)].collect().toSeq

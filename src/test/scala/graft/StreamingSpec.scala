@@ -548,57 +548,49 @@ class StreamingSpec extends SparkSpec {
     got shouldBe Seq((0L, 5L, 3L, 35.0), (5000000L, 5L, 2L, 25.0))
   }
 
-  test("transformWithState EWMA scan matches the Scala recurrence (RocksDB state)") {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val vals = Seq(1.0, 2.0, 4.0, 8.0, 3.0)
-      val events = vals.zipWithIndex.map { case (v, i) =>
-        KeyedEvent("k", i.toLong, i.toLong, v)
-      }
-      val mem = MemoryStream[KeyedEvent](spark)
-      mem.addData(events.take(3): _*)
-      mem.addData(events.drop(3): _*)
-      runToCompletion(
-        EwmaScan(mem.toDS(), 0.25).writeStream.outputMode("append"), "ewmascan")
-      // packed emission: recover the per-event rows, then the original
-      // per-event assertion holds unchanged
-      val got = EwmaScan.exploded(spark.table("ewmascan")).orderBy("seq")
-        .select("ewma").as[Double].collect().toSeq
-      val expect = vals.tail.scanLeft(vals.head)((acc, x) => 0.25 * x + 0.75 * acc)
-      got shouldBe expect
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+  test("EWMA scan matches the Scala recurrence") {
+    val vals = Seq(1.0, 2.0, 4.0, 8.0, 3.0)
+    val events = vals.zipWithIndex.map { case (v, i) =>
+      KeyedEvent("k", i.toLong, i.toLong, v)
+    }
+    val mem = MemoryStream[KeyedEvent](spark)
+    mem.addData(events.take(3): _*)
+    mem.addData(events.drop(3): _*)
+    runToCompletion(
+      EwmaScan(mem.toDS(), 0.25).writeStream.outputMode("append"), "ewmascan")
+    // packed emission: recover the per-event rows, then the original
+    // per-event assertion holds unchanged
+    val got = EwmaScan.exploded(spark.table("ewmascan")).orderBy("seq")
+      .select("ewma").as[Double].collect().toSeq
+    val expect = vals.tail.scanLeft(vals.head)((acc, x) => 0.25 * x + 0.75 * acc)
+    got shouldBe expect
   }
 
   test("packed EWMA emission law: sink rows scale with KEYS per batch, " +
     "exploded rows with events") {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      // 5 keys × 8 events in 2 batches: the packed sink must hold
-      // ≤ keys·batches rows (the VERDICT r12 #4 claim — emission cost
-      // no longer scales with events), while exploded() recovers every
-      // per-event row
-      val events = for (k <- 0 until 5; i <- 0 until 8)
-        yield KeyedEvent(s"k$k", i.toLong * 1000L, (k * 8 + i).toLong, (i + k).toDouble)
-      val mem = MemoryStream[KeyedEvent](spark)
-      mem.addData(events.filter(_.ts < 4000L): _*)
-      mem.addData(events.filter(_.ts >= 4000L): _*)
-      runToCompletion(
-        EwmaScan(mem.toDS(), 0.25).writeStream.outputMode("append"), "ewmapack")
-      val packed = spark.table("ewmapack")
-      assert(packed.count() <= 5L * 2, "packed sink must carry ~|keys| rows per batch")
-      val rows = EwmaScan.exploded(packed)
-      rows.count() shouldBe events.size.toLong
-      // per-event values still the exact recurrence, per key
-      val got = rows.orderBy("k", "ts").select("k", "ewma")
-        .as[(String, Double)].collect().toSeq
-      val expect = (0 until 5).flatMap { k =>
-        val vs = (0 until 8).map(i => (i + k).toDouble)
-        vs.tail.scanLeft(vs.head)((a, x) => 0.25 * x + 0.75 * a).map((s"k$k", _))
-      }
-      got shouldBe expect
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    // 5 keys × 8 events in 2 batches: the packed sink must hold
+    // ≤ keys·batches rows (the VERDICT r12 #4 claim — emission cost
+    // no longer scales with events), while exploded() recovers every
+    // per-event row
+    val events = for (k <- 0 until 5; i <- 0 until 8)
+      yield KeyedEvent(s"k$k", i.toLong * 1000L, (k * 8 + i).toLong, (i + k).toDouble)
+    val mem = MemoryStream[KeyedEvent](spark)
+    mem.addData(events.filter(_.ts < 4000L): _*)
+    mem.addData(events.filter(_.ts >= 4000L): _*)
+    runToCompletion(
+      EwmaScan(mem.toDS(), 0.25).writeStream.outputMode("append"), "ewmapack")
+    val packed = spark.table("ewmapack")
+    assert(packed.count() <= 5L * 2, "packed sink must carry ~|keys| rows per batch")
+    val rows = EwmaScan.exploded(packed)
+    rows.count() shouldBe events.size.toLong
+    // per-event values still the exact recurrence, per key
+    val got = rows.orderBy("k", "ts").select("k", "ewma")
+      .as[(String, Double)].collect().toSeq
+    val expect = (0 until 5).flatMap { k =>
+      val vs = (0 until 8).map(i => (i + k).toDouble)
+      vs.tail.scanLeft(vs.head)((a, x) => 0.25 * x + 0.75 * a).map((s"k$k", _))
+    }
+    got shouldBe expect
   }
 
   test("append-mode session window emits each session EXACTLY once and " +
