@@ -12,7 +12,11 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *
   * then `SELECT fnv64(text) FROM docs` works from SQL as well as the DSL.
   * It also sets graft's session defaults ([[GraftExtensions.Defaults]])
-  * and injects graft's plan rules, [[SmallSortSinglePartition]] among them.
+  * and injects graft's plan rules. Among them, [[SmallShuffleSinglePartition]]
+  * plans a shuffle as one partition wherever AQE's coalescing would leave
+  * one (input at most `coalescePartitions.minPartitionSize` under
+  * parallelism-first, else `advisoryPartitionSizeInBytes`) and drops the
+  * exchange after it; it adds no conf of its own.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -47,8 +51,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // (resolution phase: the builtin SessionWindowing rule must still see
     // and expand the SessionWindow expression this rule introduces)
     ext.injectResolutionRule(_ => RewriteGapSessions)
-    // small global sorts: one-partition exchange, no range-sampling job
-    ext.injectQueryStagePrepRule(SmallSortSinglePartition)
+    // small shuffles: one partition up front, no exchange after them
+    ext.injectQueryStagePrepRule(SmallShuffleSinglePartition)
   }
 }
 

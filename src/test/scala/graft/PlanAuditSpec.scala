@@ -5,6 +5,10 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning, SinglePartition}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.{ShuffledHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.functions.col
 
 import graft.queries.StreamHarness
@@ -26,6 +30,13 @@ class PlanAuditSpec extends SparkSpec {
     df.collect() // materialize so AQE's final plan is in place
     df.queryExecution.executedPlan.toString
   }
+
+  /** `body` with the small-shuffle rule's gate closed: these audits pin
+    * the partitioned shape that runs at scale, which the sf0.001 fixture
+    * would otherwise plan as single-partition exchanges
+    * (`plans.SmallShuffleSinglePartition`). */
+  private def atScale[T](body: => T): T =
+    StreamHarness.withConf(spark, "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1b")(body)
 
   test("q6_forecast: filters push down and the scan prunes to 3 columns") {
     val plan = finalPlan("q6_forecast")
@@ -105,7 +116,7 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("q17_small_quantity: correlated-avg rejoin keys on l_partkey both sides") {
-    val plan = finalPlan("q17_small_quantity")
+    val plan = atScale(finalPlan("q17_small_quantity"))
     withClue(plan) {
       // the per-part aggregate and the fact co-partition on l_partkey —
       // no second aggregation shuffle on a derived key
@@ -127,9 +138,7 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("dedup_ngram_jaccard: the inverted index joins on the int64 shingle hash") {
-    val df = SparkEntry.queries("dedup_ngram_jaccard")(spark, dir)
-    df.collect()
-    val plan = df.queryExecution.executedPlan.toString
+    val plan = atScale(finalPlan("dedup_ngram_jaccard"))
     withClue(plan) {
       // candidate self-join keys are the xxhash64 longs (#NNL), not strings
       plan should include regex "hashpartitioning\\(sh#\\d+L"
@@ -197,9 +206,7 @@ class PlanAuditSpec extends SparkSpec {
 
   test("doc_heavy_tokens: the recount pass filters candidates BEFORE its " +
     "exchange — only candidate rows shuffle") {
-    val df = SparkEntry.queries("doc_heavy_tokens")(spark, dir)
-    df.collect()
-    val plan = finalSection(df.queryExecution.executedPlan.toString)
+    val plan = finalSection(atScale(finalPlan("doc_heavy_tokens")))
     withClue(plan) {
       // the isInCollection candidate gate sits below the aggregate's
       // exchange: a Filter containing the token column appears, and the
@@ -211,9 +218,7 @@ class PlanAuditSpec extends SparkSpec {
 
   test("ev_twap: lead-window and final agg share the user_id partitioning " +
     "— exactly one hash exchange") {
-    val df = SparkEntry.queries("ev_twap")(spark, dir)
-    df.collect()
-    val plan = finalSection(df.queryExecution.executedPlan.toString)
+    val plan = finalSection(atScale(finalPlan("ev_twap")))
     withClue(plan) {
       "hashpartitioning\\(user_id".r.findAllIn(plan).size shouldBe 1
     }
@@ -303,11 +308,9 @@ class PlanAuditSpec extends SparkSpec {
 
   test("ord_scd2: both window passes and the rollup share ONE customer-key " +
     "exchange") {
-    val df = SparkEntry.queries("ord_scd2")(spark, dir)
-    df.collect()
     // AQE's toString echoes the initial plan below the final one — audit
     // only the final section or every exchange double-counts
-    val plan = finalSection(df.queryExecution.executedPlan.toString)
+    val plan = finalSection(atScale(finalPlan("ord_scd2")))
     withClue(plan) {
       // one hash exchange on o_custkey feeds lag + running sum + groupBy;
       // the only other exchange is the final ORDER BY's range partition
@@ -350,9 +353,7 @@ class PlanAuditSpec extends SparkSpec {
 
   test("doc_repeated_spans: narrow hash frames only — the shared-span set " +
     "joins back by hash, text never shuffles") {
-    val df = SparkEntry.queries("doc_repeated_spans")(spark, dir)
-    df.collect()
-    val plan = finalSection(df.queryExecution.executedPlan.toString)
+    val plan = finalSection(atScale(finalPlan("doc_repeated_spans")))
     withClue(plan) {
       // every exchange carries (doc_id|h)-keyed longs; none carries text
       val exchanges = "Exchange hashpartitioning\\(([a-z_]+)".r
@@ -364,9 +365,7 @@ class PlanAuditSpec extends SparkSpec {
 
   test("doc_bpe_pairs: the pair explosion runs over the distinct-WORD " +
     "frame, not the token stream") {
-    val df = SparkEntry.queries("doc_bpe_pairs")(spark, dir)
-    df.collect()
-    val plan = df.queryExecution.executedPlan.toString
+    val plan = atScale(finalPlan("doc_bpe_pairs"))
     withClue(plan) {
       // corpus → word-frequency aggregate BEFORE any pair generation:
       // the explode of 2-char pairs sits above the w-keyed aggregate
@@ -380,9 +379,7 @@ class PlanAuditSpec extends SparkSpec {
 
   test("doc_bpe_encode: merges apply over the distinct-word frame and " +
     "join back as a broadcast — never per corpus token") {
-    val df = SparkEntry.queries("doc_bpe_encode")(spark, dir)
-    df.collect()
-    val plan = df.queryExecution.executedPlan.toString
+    val plan = atScale(finalPlan("doc_bpe_encode"))
     withClue(plan) {
       // the word→n_toks map joins back to doc word occurrences broadcast
       plan should include("BroadcastHashJoin [w")
@@ -432,9 +429,7 @@ class PlanAuditSpec extends SparkSpec {
 
   test("doc_seq_pack: items shuffle ONCE on the shard key into the " +
     "sorted-group packer; the boundary window partitions per bin") {
-    val df = SparkEntry.queries("doc_seq_pack")(spark, dir)
-    df.collect()
-    val plan = df.queryExecution.executedPlan.toString
+    val plan = atScale(finalPlan("doc_seq_pack"))
     withClue(plan) {
       // the packer consumes a shard-keyed exchange + within-partition
       // sort (flatMapSortedGroups) — no driver collect anywhere
@@ -620,9 +615,10 @@ class PlanAuditSpec extends SparkSpec {
     "aggregation, one fact exchange, no fact-sized window pass; values " +
     "identical to the untagged lag/cumsum formulation") {
     import org.apache.spark.sql.functions.{col, count, lag, lit, max, min, sum, when}
-    val df = SparkEntry.queries("ev_sessions_gap")(spark, dir)
-    val got = df.collect()
-    val plan = finalSection(df.queryExecution.executedPlan.toString)
+    val (got, plan) = atScale {
+      val df = SparkEntry.queries("ev_sessions_gap")(spark, dir)
+      (df.collect(), finalSection(df.queryExecution.executedPlan.toString))
+    }
     withClue(plan) {
       // the rewritten plan session-aggregates natively (partial agg →
       // one user_id exchange → sort → MergingSessions → final agg)...
@@ -690,17 +686,18 @@ class PlanAuditSpec extends SparkSpec {
     got.map(_.toString).toSeq shouldBe expected.map(_.toString).toSeq
   }
 
-  // plans.SmallSortSinglePartition: a global sort over an input of at most
-  // one advisory partition is exchanged into one partition, so Spark runs
-  // no range-sampling job, and the sorted rows do not change.
+  // plans.SmallShuffleSinglePartition: a hash or range exchange over an
+  // input AQE would coalesce into one partition is planned as one
+  // partition, the exchange after it is dropped, and the rows and their
+  // order do not change.
 
   private val batchHistory = Seq(
     "ev_slice_count", "ev_slice_time", "ev_slice_hopping", "ev_slice_trigger_after",
     "ev_window_scan", "ev_asof_take", "ev_join_zip", "ev_bind_bucket", "ev_ewma",
     "ev_fold_all")
 
-  /** Rows of `df` with the small-sort rule held off: it fires only while
-    * AQE coalesces partitions. */
+  /** Rows of `df` with the small-shuffle rule held off: it fires only
+    * while AQE coalesces partitions. */
   private def ruleOff(df: => DataFrame): Seq[Row] =
     StreamHarness.withConf(spark, "spark.sql.adaptive.coalescePartitions.enabled" -> "false")(
       df.collect().toSeq)
@@ -733,16 +730,39 @@ class PlanAuditSpec extends SparkSpec {
     } finally sc.removeSparkListener(listener)
   }
 
+  private object Plans extends AdaptiveSparkPlanHelper
+
+  /** Partitionings of the shuffles in the final plan of an executed `df`. */
+  private def shuffles(df: DataFrame): Seq[Partitioning] =
+    Plans.collect(df.queryExecution.executedPlan) { case e: ShuffleExchangeExec => e.outputPartitioning }
+
+  /** The partitioning of each side of each shuffled join in the final plan. */
+  private def joinSides(df: DataFrame): Seq[Seq[Partitioning]] =
+    Plans.collect(df.queryExecution.executedPlan) {
+      case j: SortMergeJoinExec => j.children.map(_.outputPartitioning)
+      case j: ShuffledHashJoinExec => j.children.map(_.outputPartitioning)
+    }
+
+  private val exchangeLine = "\\bExchange [^\\n]*".r
+
   test("ev_slice_count: the final sort's exchange is one partition, not range partitions") {
     val plan = finalPlan("ev_slice_count")
     withClue(plan) {
       plan should include("Exchange SinglePartition")
       plan should not include "Exchange rangepartitioning("
+      // the key's hash exchange became one partition and the final
+      // orderBy's exchange went away: one exchange in the final plan
+      exchangeLine.findAllIn(finalSection(plan)).toSeq match {
+        case Seq(only) => only should startWith("Exchange SinglePartition")
+        case other => fail(s"expected one exchange, got $other")
+      }
     }
   }
 
   test("ev_slice_count: the action runs no range-sampling job") {
-    jobsOf(SparkEntry.queries("ev_slice_count")(spark, dir).collect()) shouldBe 3
+    // the scan stage and the result stage; with coalescing off, the hash
+    // stage, the range-sampling job, the range stage and the result
+    jobsOf(SparkEntry.queries("ev_slice_count")(spark, dir).collect()) shouldBe 2
     jobsOf(ruleOff(SparkEntry.queries("ev_slice_count")(spark, dir))) shouldBe 4
   }
 
@@ -756,13 +776,86 @@ class PlanAuditSpec extends SparkSpec {
     spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled") shouldBe "true"
   }
 
+  /** ev_slice_count's final plan under the scoped confs. */
+  private def sliceCountPlan(kvs: (String, String)*): String =
+    finalSection(StreamHarness.withConf(spark, kvs: _*)(finalPlan("ev_slice_count")))
+
+  private val parallelismFirst = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
+  private val minPartitionSize = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+  private val advisory = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+
   test("a sort input larger than the advisory partition size keeps the range exchange") {
-    val plan = StreamHarness.withConf(spark,
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1b")(finalPlan("ev_slice_count"))
+    // without parallelism-first, AQE coalesces up to the advisory size
+    val plan = sliceCountPlan(parallelismFirst -> "false", advisory -> "1b")
     withClue(plan) {
+      plan should include("Exchange hashpartitioning(user_id")
       plan should include("Exchange rangepartitioning(")
       plan should not include "Exchange SinglePartition"
     }
+    // ...and the minimum partition size no longer gates it
+    sliceCountPlan(parallelismFirst -> "false", minPartitionSize -> "1b") should
+      include("Exchange SinglePartition")
+  }
+
+  test("under parallelism-first the gate is the minimum partition size, not the advisory size") {
+    val plan = sliceCountPlan(minPartitionSize -> "1b")
+    withClue(plan) {
+      plan should include("Exchange hashpartitioning(user_id")
+      plan should include("Exchange rangepartitioning(")
+      plan should not include "Exchange SinglePartition"
+    }
+    sliceCountPlan(advisory -> "1b") should include("Exchange SinglePartition")
+    spark.conf.get(parallelismFirst) shouldBe "true"
+  }
+
+  /** events sort-merge joined to a local per-user label table, in event order. */
+  private def labelledEvents(): DataFrame = {
+    import spark.implicits._
+    val events = graft.core.Tables.events(spark, dir)
+    val labels = events.select("user_id").distinct().collect().map(_.getLong(0)).sorted
+      .map(u => (u, s"u$u")).toSeq.toDF("user_id", "label")
+    events.join(labels, "user_id").orderBy("event_id")
+  }
+
+  private def shuffledJoin[T](kvs: (String, String)*)(body: => T): T =
+    StreamHarness.withConf(spark, ("spark.sql.autoBroadcastJoinThreshold" -> "-1") +: kvs: _*)(body)
+
+  test("a join of two small inputs puts both sides in one partition, with the rows " +
+    "and order of the rule held off") {
+    val (rows, parts, sides) = shuffledJoin() {
+      val df = labelledEvents()
+      (df.collect().toSeq, shuffles(df), joinSides(df))
+    }
+    withClue(s"shuffles $parts, join sides $sides") {
+      sides should not be empty
+      all(sides.flatten.map(_.numPartitions)) shouldBe 1
+      parts should not be empty
+      all(parts) shouldBe SinglePartition
+    }
+    rows should not be empty
+    rows shouldBe shuffledJoin()(ruleOff(labelledEvents()))
+  }
+
+  test("a join with one side above the gate keeps matching hash partitioning on both sides") {
+    val (small, large) = shuffledJoin() {
+      val j = labelledEvents().queryExecution.optimizedPlan.collectFirst {
+        case j: org.apache.spark.sql.catalyst.plans.logical.Join => j }.get
+      Seq(j.left, j.right).map(_.stats.sizeInBytes).sorted match {
+        case Seq(a, b) => (a, b)
+      }
+    }
+    large should be > small * 4
+    val (rows, parts, sides) = shuffledJoin(minPartitionSize -> s"${small * 2}b") {
+      val df = labelledEvents()
+      (df.collect().toSeq, shuffles(df), joinSides(df))
+    }
+    withClue(s"gate ${small * 2}b, shuffles $parts, join sides $sides") {
+      sides should not be empty
+      all(sides.flatten) shouldBe a[HashPartitioning]
+      parts should not contain SinglePartition
+      parts.count(_.isInstanceOf[HashPartitioning]) shouldBe 2
+    }
+    rows shouldBe shuffledJoin()(ruleOff(labelledEvents()))
   }
 
   test("an orderBy over an empty and over a one-row frame returns the same rows " +
