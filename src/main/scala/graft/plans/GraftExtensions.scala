@@ -14,9 +14,10 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * It also sets graft's session defaults ([[GraftExtensions.Defaults]])
   * and injects graft's plan rules. Among them, [[SmallShuffleSinglePartition]]
   * plans a shuffle as one partition wherever AQE's coalescing would leave
-  * one (input at most `coalescePartitions.minPartitionSize` under
-  * parallelism-first, else `advisoryPartitionSizeInBytes`) and drops the
-  * exchange after it; it adds no conf of its own.
+  * one (input, and every operator above it, at most
+  * `coalescePartitions.minPartitionSize` under parallelism-first, else
+  * `advisoryPartitionSizeInBytes`) and drops the exchange after it; it
+  * adds no conf of its own.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -5,7 +5,8 @@ import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Dist
   HashPartitioning, Partitioning, PartitioningCollection, RangePartitioning, SinglePartition}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ENSURE_REQUIREMENTS,
+  ShuffleExchangeExec}
 import org.apache.spark.sql.internal.SQLConf
 
 /** AQE stage-prep rule: a shuffle whose input AQE would coalesce into one
@@ -23,12 +24,18 @@ import org.apache.spark.sql.internal.SQLConf
   *     it is at most the size under which AQE's own coalescing leaves one
   *     partition: `coalescePartitions.minPartitionSize` while
   *     `coalescePartitions.parallelismFirst` is on (the default),
-  *     `advisoryPartitionSizeInBytes` otherwise. AQE refines that size
-  *     from runtime statistics as upstream stages materialize;
+  *     `advisoryPartitionSizeInBytes` otherwise. `SinglePartition`
+  *     satisfies every later distribution but a broadcast, so neither
+  *     this rule nor `EnsureRequirements` on a re-plan would shuffle again
+  *     above it: the estimate of every operator above the exchange, up to
+  *     the root or to a broadcast or repartition, must be within the same
+  *     size, or a join or explode that multiplies the rows would run in
+  *     that one task. AQE refines the sizes from runtime statistics as
+  *     upstream stages materialize;
   *  2. drops an `EnsureRequirements` exchange whose child already reports
-  *     `SinglePartition`, which satisfies every distribution but a
-  *     broadcast, so the window, aggregate and final sort above a small
-  *     exchange run in the same task;
+  *     `SinglePartition`, under the same size test, so the window,
+  *     aggregate and final sort above a small exchange run in the same
+  *     task;
   *  3. keeps every parent's requirement met: the children of an operator
   *     that co-partitions them (sort-merge and shuffled-hash joins,
   *     cogroup) are rewritten all together or not at all, so no join
@@ -54,8 +61,17 @@ case class SmallShuffleSinglePartition(session: SparkSession) extends Rule[Spark
       child.collectFirst { case p if p.logicalLink.isDefined => p.logicalLink.get }
         .exists(_.stats.sizeInBytes <= limit)
 
-    def rewrite(plan: SparkPlan): SparkPlan = {
-      val rewritten = plan.children.map(rewrite)
+    // `fitsAbove`: every operator between the root and `plan` fits the gate
+    // too. A single partition satisfies every later distribution, so
+    // everything above it up to a broadcast or a repartition runs in that
+    // one task, even where a join or an explode multiplies the rows.
+    def rewrite(plan: SparkPlan, fitsAbove: Boolean): SparkPlan = {
+      val fits = plan match {
+        case _: BroadcastExchangeLike => true
+        case e: ShuffleExchangeExec if e.shuffleOrigin != ENSURE_REQUIREMENTS => true
+        case p => fitsAbove && p.logicalLink.forall(_.stats.sizeInBytes <= limit)
+      }
+      val rewritten = plan.children.map(rewrite(_, fits))
       val required = plan.requiredChildDistribution
       def meets(child: SparkPlan, d: Distribution) = child.outputPartitioning.satisfies(d)
       val coPartitioned = required.count(_.isInstanceOf[ClusteredDistribution]) > 1
@@ -68,18 +84,18 @@ case class SmallShuffleSinglePartition(session: SparkSession) extends Rule[Spark
           if (keeps) now else old
         }
       plan.withNewChildren(children) match {
-        case e: ShuffleExchangeExec
-            if e.shuffleOrigin == ENSURE_REQUIREMENTS && single(e.child.outputPartitioning) =>
+        case e: ShuffleExchangeExec if e.shuffleOrigin == ENSURE_REQUIREMENTS &&
+            single(e.child.outputPartitioning) && fitsAbove && small(e.child) =>
           e.child
         case e @ ShuffleExchangeExec(_: HashPartitioning | _: RangePartitioning, child,
-            ENSURE_REQUIREMENTS, _) if small(child) =>
+            ENSURE_REQUIREMENTS, _) if fitsAbove && small(child) =>
           val one = e.copy(outputPartitioning = SinglePartition)
           one.copyTagsFrom(e)
           one
         case other => other
       }
     }
-    rewrite(plan)
+    rewrite(plan, fitsAbove = true)
   }
 
   // a join's partitioning collection holds each side's; one single side

@@ -808,21 +808,35 @@ class PlanAuditSpec extends SparkSpec {
     spark.conf.get(parallelismFirst) shouldBe "true"
   }
 
-  /** events sort-merge joined to a local per-user label table, in event order. */
-  private def labelledEvents(): DataFrame = {
+  /** A local table of one label per user of events. */
+  private def labels(): DataFrame = {
     import spark.implicits._
-    val events = graft.core.Tables.events(spark, dir)
-    val labels = events.select("user_id").distinct().collect().map(_.getLong(0)).sorted
-      .map(u => (u, s"u$u")).toSeq.toDF("user_id", "label")
-    events.join(labels, "user_id").orderBy("event_id")
+    graft.core.Tables.events(spark, dir).select("user_id").distinct().collect()
+      .map(_.getLong(0)).sorted.map(u => (u, s"u$u")).toSeq.toDF("user_id", "label")
   }
+
+  /** events sort-merge joined to the labels, in event order. */
+  private def labelledEvents(): DataFrame =
+    graft.core.Tables.events(spark, dir).join(labels(), "user_id").orderBy("event_id")
+
+  /** The labels of the users seen in events: a semi join, whose estimate is
+    * the label side's. */
+  private def seenLabels(): DataFrame =
+    labels().join(graft.core.Tables.events(spark, dir), Seq("user_id"), "left_semi")
+      .orderBy("user_id")
 
   private def shuffledJoin[T](kvs: (String, String)*)(body: => T): T =
     StreamHarness.withConf(spark, ("spark.sql.autoBroadcastJoinThreshold" -> "-1") +: kvs: _*)(body)
 
-  test("a join of two small inputs puts both sides in one partition, with the rows " +
-    "and order of the rule held off") {
-    val (rows, parts, sides) = shuffledJoin() {
+  /** The largest logical estimate in `df`'s optimized plan. */
+  private def largestEstimate(df: DataFrame): BigInt =
+    df.queryExecution.optimizedPlan.collect { case p => p.stats.sizeInBytes }.max
+
+  test("a join of two small inputs with a small output puts both sides in one " +
+    "partition, with the rows and order of the rule held off") {
+    // the join's own estimate and those above it count: open the gate to all
+    val gate = minPartitionSize -> s"${shuffledJoin()(largestEstimate(labelledEvents())) * 2}b"
+    val (rows, parts, sides) = shuffledJoin(gate) {
       val df = labelledEvents()
       (df.collect().toSeq, shuffles(df), joinSides(df))
     }
@@ -833,29 +847,80 @@ class PlanAuditSpec extends SparkSpec {
       all(parts) shouldBe SinglePartition
     }
     rows should not be empty
-    rows shouldBe shuffledJoin()(ruleOff(labelledEvents()))
+    rows shouldBe shuffledJoin(gate)(ruleOff(labelledEvents()))
   }
 
-  test("a join with one side above the gate keeps matching hash partitioning on both sides") {
+  test("a join whose output fits the gate but one side does not keeps matching " +
+    "hash partitioning on both sides") {
     val (small, large) = shuffledJoin() {
-      val j = labelledEvents().queryExecution.optimizedPlan.collectFirst {
+      val j = seenLabels().queryExecution.optimizedPlan.collectFirst {
         case j: org.apache.spark.sql.catalyst.plans.logical.Join => j }.get
-      Seq(j.left, j.right).map(_.stats.sizeInBytes).sorted match {
-        case Seq(a, b) => (a, b)
-      }
+      (j.stats.sizeInBytes max j.left.stats.sizeInBytes, j.right.stats.sizeInBytes)
     }
     large should be > small * 4
     val (rows, parts, sides) = shuffledJoin(minPartitionSize -> s"${small * 2}b") {
-      val df = labelledEvents()
+      val df = seenLabels()
       (df.collect().toSeq, shuffles(df), joinSides(df))
     }
     withClue(s"gate ${small * 2}b, shuffles $parts, join sides $sides") {
       sides should not be empty
       all(sides.flatten) shouldBe a[HashPartitioning]
-      parts should not contain SinglePartition
       parts.count(_.isInstanceOf[HashPartitioning]) shouldBe 2
     }
-    rows shouldBe shuffledJoin()(ruleOff(labelledEvents()))
+    rows should not be empty
+    rows shouldBe shuffledJoin()(ruleOff(seenLabels()))
+  }
+
+  /** Per-k sums of a small input, broadcast-joined to a frame that fans
+    * each k out to many rows, then summed again on another key. */
+  private def fanOut(): DataFrame = {
+    import org.apache.spark.sql.functions.{broadcast, sum}
+    val sums = spark.range(0, 1000).select((col("id") % 10).as("k"), col("id").as("v"))
+      .groupBy("k").agg(sum("v").as("s"))
+    val fan = spark.range(0, 200000).select((col("id") % 10).as("k"), (col("id") % 7).as("k2"))
+    sums.join(broadcast(fan), "k").groupBy("k2").agg(sum("s").as("t")).orderBy("k2")
+  }
+
+  test("a small exchange under a row-multiplying join above the gate keeps its " +
+    "partitions, and so does the exchange above the join") {
+    val sizes = fanOut().queryExecution.optimizedPlan.collect {
+      case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a.stats.sizeInBytes
+    }
+    val gate = spark.sessionState.conf.getConf(
+      org.apache.spark.sql.internal.SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
+    // the per-k sums' input is under the gate, the sums over the join above it
+    withClue(s"aggregate estimates $sizes, gate $gate") {
+      sizes.min should be <= BigInt(gate)
+      sizes.max should be > BigInt(gate)
+    }
+    val df = fanOut()
+    val rows = df.collect().toSeq
+    val parts = shuffles(df)
+    // one partition under the join would put the join and everything above
+    // it in that one task: EnsureRequirements plans no exchange above a
+    // single partition, not even on a re-plan
+    withClue(s"shuffles $parts") {
+      parts.collect { case h: HashPartitioning => h.expressions.flatMap(_.references.map(_.name)) } should
+        contain theSameElementsAs Seq(Seq("k"), Seq("k2"))
+    }
+    rows should have size 7
+    rows shouldBe ruleOff(fanOut())
+  }
+
+  test("mm_audio_fp / mm_video_mp4 at sf0.01: the sort over a typed map of the " +
+    "media blobs keeps its range exchange and its job count") {
+    // the typed map's estimate derives from the blob scan, above the 1 MB
+    // gate at sf0.01, although the map's output is a few KiB: the final
+    // orderBy keeps its range exchange and sampling job (one job more than
+    // under the advisory-size gate the range-only rule had). Pinned so the
+    // count cannot grow unnoticed.
+    val sf001 = "/root/testdata/sf0.01"
+    for ((name, expected) <- Seq("mm_audio_fp" -> 3, "mm_video_mp4" -> 4)) withClue(name) {
+      val df = SparkEntry.queries(name)(spark, sf001)
+      jobsOf(df.collect()) shouldBe expected
+      exchangeLine.findAllIn(finalSection(df.queryExecution.executedPlan.toString)).toSeq
+        .count(_.contains("rangepartitioning(")) shouldBe 1
+    }
   }
 
   test("an orderBy over an empty and over a one-row frame returns the same rows " +

@@ -1,10 +1,10 @@
 """A/B of two commits on the repository benchmark, in one host window.
 
     python3 tools/ab.py --parent HEAD~1 --change HEAD --pairs 5 --seed 1
-    python3 tools/ab.py --workload batch_history --pairs 10 --json ab.json
+    python3 tools/ab.py --workload stream_drain --pairs 10
 
-Checks out both commits the same way (`git worktree` by default, a local
-`git clone` with `--checkout clone`), builds each with its own
+Checks out both commits the same way, each into its own local `git clone`
+under `--work`, builds each with its own
 `graftbench/build.py`, then runs each side's own `graftbench/run.py`
 alternately, pair by pair (parent first in even pairs, change first in odd
 ones), so host drift falls on both sides alike. Every run is printed as it
@@ -32,21 +32,11 @@ def git(*args, cwd=ROOT):
                           capture_output=True).stdout.strip()
 
 
-def checkout(sha, path, how):
+def checkout(sha, path):
     if os.path.exists(path):
         sys.exit(f"ab: {path} exists; remove it or pass another --work")
-    if how == "worktree":
-        git("worktree", "add", "--detach", path, sha)
-    else:
-        git("clone", "--quiet", "--no-checkout", ROOT, path)
-        git("checkout", "--quiet", "--detach", sha, cwd=path)
-
-
-def remove(path, how):
-    if how == "worktree":
-        git("worktree", "remove", "--force", path)
-    else:
-        shutil.rmtree(path)
+    git("clone", "--quiet", "--no-checkout", ROOT, path)
+    git("checkout", "--quiet", "--detach", sha, cwd=path)
 
 
 def run(side, path, workload, seed, trace):
@@ -91,8 +81,7 @@ def summarize(pairs, metrics):
                    and y["metrics"][name] != x["metrics"][name])
         bound = m.get("bound")
         spread = max(ia / ma if ma else 0.0, ib / mb if mb else 0.0)
-        rows.append({"metric": name, "unit": m["unit"], "better": m["better"],
-                     "parent_median": ma, "change_median": mb,
+        rows.append({"metric": name, "parent_median": ma, "change_median": mb,
                      "parent_iqr": ia, "change_iqr": ib,
                      "delta_pct": 100 * (mb - ma) / ma if ma else None,
                      "change_wins": wins, "pairs": len(done),
@@ -128,10 +117,8 @@ def main():
     ap.add_argument("--pairs", type=int, default=5)
     ap.add_argument("--seed", type=int, default=1)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    ap.add_argument("--checkout", choices=("worktree", "clone"), default="worktree")
     ap.add_argument("--work", default=os.path.join(ROOT, ".ab_build"),
                     help="directory for the two checkouts (default .ab_build/)")
-    ap.add_argument("--json", help="also write every run and the summary here")
     args = ap.parse_args()
     workloads = args.workload or [w["name"] for w in bench["workloads"]]
     metrics = bench["per_layer" if args.trace else "end_to_end"]
@@ -140,14 +127,11 @@ def main():
     paths = {s: os.path.join(args.work, s) for s in sides}
     os.makedirs(args.work, exist_ok=True)
     print(f"# ab parent={sides['parent'][:12]} change={sides['change'][:12]} "
-          f"pairs={args.pairs} seed={args.seed} trace={args.trace} checkout={args.checkout}")
+          f"pairs={args.pairs} seed={args.seed} trace={args.trace}")
     made = []
-    report = {"parent": sides["parent"], "change": sides["change"], "seed": args.seed,
-              "pairs": args.pairs, "trace": args.trace, "checkout": args.checkout,
-              "workloads": {}}
     try:
         for s, sha in sides.items():
-            checkout(sha, paths[s], args.checkout)
+            checkout(sha, paths[s])
             made.append(paths[s])
             b = subprocess.run([sys.executable, "graftbench/build.py"], cwd=paths[s],
                                text=True, capture_output=True)
@@ -168,14 +152,9 @@ def main():
             rows = summarize(pairs, metrics)
             bad = sum(1 for p in pairs for r in p if not r["ok"])
             print(f"\n{table(w, rows)}\n\nruns not ok: {bad} of {2 * len(pairs)}\n", flush=True)
-            report["workloads"][w] = {"runs": [list(p) for p in pairs], "summary": rows,
-                                      "runs_not_ok": bad}
     finally:
         for p in made:
-            remove(p, args.checkout)
-    if args.json:
-        with open(args.json, "w") as f:
-            json.dump(report, f, indent=1)
+            shutil.rmtree(p)
 
 
 if __name__ == "__main__":
