@@ -3,6 +3,7 @@ package graft.plans
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution,
   HashPartitioning, Partitioning, PartitioningCollection, RangePartitioning, SinglePartition}
+import org.apache.spark.sql.catalyst.plans.logical.Command
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ENSURE_REQUIREMENTS,
@@ -29,7 +30,8 @@ import org.apache.spark.sql.internal.SQLConf
   *     this rule nor `EnsureRequirements` on a re-plan would shuffle again
   *     above it: the estimate of every operator above the exchange, up to
   *     the root or to a broadcast or repartition, must be within the same
-  *     size, or a join or explode that multiplies the rows would run in
+  *     size (a write command's estimate is a placeholder and does not
+  *     count), or a join or explode that multiplies the rows would run in
   *     that one task. AQE refines the sizes from runtime statistics as
   *     upstream stages materialize;
   *  2. drops an `EnsureRequirements` exchange whose child already reports
@@ -69,7 +71,11 @@ case class SmallShuffleSinglePartition(session: SparkSession) extends Rule[Spark
       val fits = plan match {
         case _: BroadcastExchangeLike => true
         case e: ShuffleExchangeExec if e.shuffleOrigin != ENSURE_REQUIREMENTS => true
-        case p => fitsAbove && p.logicalLink.forall(_.stats.sizeInBytes <= limit)
+        case p => fitsAbove && p.logicalLink.forall {
+          // a write consumes the rows it is given; its estimate is a placeholder
+          case _: Command => true
+          case l => l.stats.sizeInBytes <= limit
+        }
       }
       val rewritten = plan.children.map(rewrite(_, fits))
       val required = plan.requiredChildDistribution
