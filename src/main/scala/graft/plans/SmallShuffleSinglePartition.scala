@@ -63,10 +63,8 @@ case class SmallShuffleSinglePartition(session: SparkSession) extends Rule[Spark
       child.collectFirst { case p if p.logicalLink.isDefined => p.logicalLink.get }
         .exists(_.stats.sizeInBytes <= limit)
 
-    // `fitsAbove`: every operator between the root and `plan` fits the gate
-    // too. A single partition satisfies every later distribution, so
-    // everything above it up to a broadcast or a repartition runs in that
-    // one task, even where a join or an explode multiplies the rows.
+    // `fitsAbove`: every operator between the root and `plan`, up to a
+    // broadcast or a repartition, fits the gate too (step 1 above)
     def rewrite(plan: SparkPlan, fitsAbove: Boolean): SparkPlan = {
       val fits = plan match {
         case _: BroadcastExchangeLike => true
