@@ -1,7 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 /** Driver bench contract: run the catalog on SPARK_GRAFT_SF_DIR, print ONE
   * JSON line with total + per-query seconds.
@@ -11,6 +11,8 @@ import java.nio.file.{Files, Paths}
   * same commit minutes later; the median-of-3 estimator did not survive a
   * window where all three runs were slammed):
   *
+  *   - each run writes the query to the noop sink, so every output column
+  *     is computed;
   *   - every query gets an untimed warmup (JIT + codegen compilation), then
   *     one timed run;
   *   - every streaming query (micro-batch state-store commits are the most
@@ -43,10 +45,9 @@ import java.nio.file.{Files, Paths}
   * slam inflates both sides of the pairs it lands on and cancels in
   * their ratio; it cannot cancel across legs measured hours apart).
   * `spark` counts only oracle-backed queries so the two totals cover
-  * the identical query set. If the worker dies mid-run the harness
-  * falls back to the old post-hoc monolithic duck leg, so the artifact
-  * always carries a duck side. SPARK_GRAFT_SKIP_DUCK=1 skips the DuckDB
-  * leg entirely; SPARK_GRAFT_PAIRED=0 forces the old post-hoc protocol.
+  * the identical query set. If the worker dies or a pair is missing, the
+  * artifact carries no duck side and no ratio, and `duck_missing` says
+  * why. SPARK_GRAFT_SKIP_DUCK=1 skips the DuckDB leg entirely.
   *
   * Handoff hardening (round-1 BENCH had `parsed: null` — the JSON line was
   * buried in sbt stdout): the JSON is ALSO written to `BENCH.json` in the
@@ -56,35 +57,9 @@ import java.nio.file.{Files, Paths}
   */
 object Bench {
   def main(args: Array[String]): Unit = {
-    // system-property overrides let an in-JVM orchestrator (BenchSf1)
-    // retarget the run; env vars stay the driver contract
-    val sfDir = sys.props.get("graft.sfDir")
-      .orElse(sys.env.get("SPARK_GRAFT_SF_DIR"))
+    val sfDir = sys.env.get("SPARK_GRAFT_SF_DIR")
       .getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // local-mode heartbeat hardening — see Verify.scala: a scale-load
-      // full-GC pause past 120 s wedges the context for no safety gain
-      .config("spark.network.timeout", "3600s")
-      .config("spark.executor.heartbeatInterval", "60s")
-    // tmpfs scratch for streaming checkpoints (offset/commit logs + state
-    // snapshots are many small fsync-ed files — on-disk /tmp charges each
-    // of the ~27 stream queries a fixed IO toll; a RAM-backed scratch is
-    // the standard local-bench setup and does not change any result)
-    Scratch.dir().foreach(d =>
-      builder.config("spark.sql.streaming.checkpointLocation", s"$d/ckpt"))
-    // NIO atomic checkpoint writes (local paths only; cluster runs keep
-    // the Hadoop default) — the FileContext path costs 31 ms per
-    // offset/commit/state-delta publish even on tmpfs, a fixed per-batch
-    // toll with nothing to do with the operators under test
-    builder.config("spark.sql.streaming.checkpointFileManagerClass",
-      classOf[graft.streaming.LocalNioCheckpointFileManager].getName)
-    val spark = builder.getOrCreate()
+    val spark = LocalSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // fixture-schema canary: fail once, loudly, on testdata drift
     graft.core.Preflight.check(spark, sfDir)
@@ -98,14 +73,11 @@ object Bench {
     val prior = priorQueryValues()
     // PAIRED protocol (VERDICT r13 #2): a persistent duck worker times
     // each query's oracle leg immediately after its Spark leg (strictly
-    // sequential — the driver thread blocks on the reply). Disable with
-    // SPARK_GRAFT_PAIRED=0 (or SKIP_DUCK) to get the Spark-only loop and
-    // the old post-hoc duck leg.
+    // sequential — the driver thread blocks on the reply)
     val skipDuck = sys.env.get("SPARK_GRAFT_SKIP_DUCK").exists(_.nonEmpty)
-    val paired = !skipDuck &&
-      !sys.env.get("SPARK_GRAFT_PAIRED").contains("0")
-    val duckServer = if (paired) Some(new DuckServer(sfDir)) else None
-    val duckPaired = scala.collection.mutable.Map.empty[String, Double]
+    val duckServer = if (skipDuck) None else Some(new DuckServer(sfDir))
+    // query -> (min seconds, every timed run) of its DuckDB leg
+    val duckPaired = scala.collection.mutable.Map.empty[String, (Double, Seq[Double])]
     val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
       try {
         // cleanup between runs: drop query-internal persists
@@ -122,11 +94,15 @@ object Bench {
           // outside every timed() interval.
           System.gc()
         }
-        fn(spark, sfDir).count() // warmup: JIT + codegen
+        // every output column is materialized, as Verify writes it and
+        // the DuckDB leg fetches it: under a count() Catalyst prunes
+        // projections, aggregates and the final sort away
+        def run(): Unit = fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        run() // warmup: JIT + codegen
         cleanup()
         def timed(): Double = {
           val t0 = System.nanoTime()
-          fn(spark, sfDir).count()
+          run()
           val dt = (System.nanoTime() - t0) / 1e9
           cleanup()
           dt
@@ -171,29 +147,24 @@ object Bench {
     require(views.isEmpty, s"temp views leaked by the catalog run: ${views.mkString(", ")}")
     spark.stop()
 
-    // Head-to-head over the identical oracle SQL + parquet. Paired path:
-    // the per-query legs already ran interleaved above; use the worker's
-    // summary only when it covered the IDENTICAL query set (a dead worker
-    // or per-query oracle error leaves holes — a total over fewer queries
-    // is not comparable to sparkComparable), else fall back to the old
-    // post-hoc monolithic leg.
+    // Head-to-head over the identical oracle SQL + parquet: the per-query
+    // legs already ran interleaved above. A duck total over fewer queries
+    // is not comparable to sparkComparable, so a dead worker or a
+    // per-query oracle error leaves the artifact without a duck side, and
+    // `duck_missing` says why.
     val oracle = SparkEntry.oracleSql
     val okMap = ok.toMap
     val comparableNames = ok.map(_._1).filter(oracle.contains)
     val sparkComparable = comparableNames.map(okMap).sum
-    val pairedSummary = duckServer.flatMap(_.finish())
-    val pairedComplete = duckServer.isDefined &&
-      comparableNames.forall(duckPaired.contains)
-    val duckRun: Option[(Double, String)] =
-      if (skipDuck) None
-      else if (pairedComplete) pairedSummary.orElse {
-        // summary line lost but every per-query reply arrived: rebuild
-        val qs = duckPaired.toSeq.sortBy(_._1)
-          .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-        val tot = duckPaired.values.sum
-        Some((tot, f"""{"total":$tot%.2f,"queries":$qs,"runs":{}}"""))
-      }
-      else runDuck(sfDir, comparableNames)
+    val duckMissing: Option[String] = duckServer match {
+      case None => Some("SPARK_GRAFT_SKIP_DUCK is set")
+      case Some(srv) =>
+        srv.finish()
+        val lost = comparableNames.filterNot(duckPaired.contains)
+        if (lost.isEmpty) None
+        else Some(srv.failure.getOrElse(
+          s"no DuckDB time for ${lost.size} queries: ${lost.take(5).mkString(", ")}"))
+    }
 
     val qs = ok.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
@@ -213,7 +184,7 @@ object Bench {
     // monolithic totals are not. (Sub-ms duck legs are excluded: a 0.000
     // rounded denominator is floor noise, not a measurement.)
     val pairedStat =
-      if (pairedComplete) {
+      if (duckMissing.isEmpty) {
         def medianOf(rs: Seq[Double]): Option[Double] =
           if (rs.isEmpty) None
           else Some(
@@ -225,7 +196,7 @@ object Bench {
         // emitted as paired_heavy_min_duck)
         val heavyMinDuck = 0.1
         val pairs = comparableNames
-          .map(n => (n, okMap(n), duckPaired(n)))
+          .map(n => (n, okMap(n), duckPaired(n)._1))
           .filter(_._3 > 0.0) // sub-ms duck legs: floor noise, not data
         val ratios = pairs.map { case (_, s, d) => s / d }.sorted
         // HEAVY pairs (duck leg >= heavyMinDuck): the all-pairs median is
@@ -261,16 +232,26 @@ object Bench {
     // pairStats (totals + paired statistics) is kept separate from
     // duck_detail (the big per-query oracle map) so the compact stdout
     // line below can carry every headline number without the maps
-    val (pairStats, pairDetail) = duckRun match {
-      case Some((d, detail)) if d > 0 =>
-        val ratio =
-          if (fullCatalog) f""","ratio":${sparkComparable / d}%.3f""" else ""
-        // duck_detail = duck_bench.py's own JSON ({"total","queries"}) so
-        // oracle-side outliers (e.g. doc_bpe_train's unrolled CTE) are
-        // visible per-query instead of silently flattering the total
-        (f""","spark":$sparkComparable%.2f,"duck":$d%.2f$ratio$pairedStat""",
-          s""","duck_detail":$detail""")
-      case _ => ("", "")
+    val (pairStats, pairDetail) = duckMissing match {
+      case Some(why) =>
+        (s""","duck_missing":${jsonMapper.writeValueAsString(why)}""", "")
+      case None =>
+        val names = comparableNames.sorted
+        val duckTotal = names.map(duckPaired(_)._1).sum
+        if (duckTotal <= 0) ("", "")
+        else {
+          val ratio =
+            if (fullCatalog) f""","ratio":${sparkComparable / duckTotal}%.3f""" else ""
+          // duck_detail carries the oracle leg per query so oracle-side
+          // outliers (e.g. doc_bpe_train's unrolled CTE) are visible
+          // instead of silently flattering the total
+          val dq = names.map(n => "\"" + n + "\":" + duckPaired(n)._1).mkString("{", ",", "}")
+          val dr = names.filter(duckPaired(_)._2.size > 1)
+            .map(n => "\"" + n + "\":[" + duckPaired(n)._2.mkString(",") + "]")
+            .mkString("{", ",", "}")
+          (f""","spark":$sparkComparable%.2f,"duck":$duckTotal%.2f$ratio$pairedStat""",
+            f""","duck_detail":{"total":$duckTotal%.2f,"queries":$dq,"runs":$dr}""")
+        }
     }
     val json =
       s"""{"metric":"total","value":$total,"unit":"sec","full_catalog":$fullCatalog,"queries":$qs,"runs":$rs,"failed":$fs,"n_ok":${ok.size},"n_failed":${failed.size}$pairStats$pairDetail,"sf":"$sfDir"}"""
@@ -280,84 +261,24 @@ object Bench {
     // driver capture shows `parsed: null`. This line carries every
     // headline statistic but none of the per-query maps (<600 chars), so
     // a backwards line scan of any tail finds a parseable artifact; the
-    // maps live in BENCH.json / BENCH_FULL_r{N}.json (canonical).
+    // maps live in BENCH.json (canonical).
     val jsonCompact =
       s"""{"metric":"total","value":$total,"unit":"sec","full_catalog":$fullCatalog,"n_ok":${ok.size},"n_failed":${failed.size}$pairStats,"sf":"$sfDir","detail":"BENCH.json"}"""
-    if (args.isEmpty) {
-      Files.writeString(Paths.get("BENCH.json"), json)
-      // self-contained per-round snapshot (VERDICT r5 #3): the driver's
-      // BENCH_r{N} capture truncates to an unparseable tail, so Bench
-      // itself writes the full artifact under the round name. Round =
-      // newest driver correctness snapshot + 1 (the driver writes
-      // CORRECTNESS_r{N} at END of round N, so during round N the max on
-      // disk is N-1); re-runs within a round overwrite idempotently.
-      roundSnapshotName().foreach(p => Files.writeString(Paths.get(p), json))
-      // BENCH_FULL_r{N} twin (VERDICT r10 #8): the driver's end-of-round
-      // capture OVERWRITES BENCH_r{N}.json with a 2000-char stdout tail
-      // (r07-r10 are unparseable at HEAD; r09/r10's full data had to be
-      // mined from git), and the end-of-round driver-invoked Bench run
-      // additionally mislabels itself N+1 (CORRECTNESS_r{N} exists by
-      // then, flipping the anchor). This name is one the driver never
-      // writes, so the round's last full consolidated artifact —
-      // complete queries/runs/duck_detail maps — survives to HEAD.
-      roundSnapshotName().foreach(p =>
-        Files.writeString(Paths.get(p.replace("BENCH_r", "BENCH_FULL_r")), json))
-    }
-    sys.props.get("graft.benchOut")
-      .orElse(sys.env.get("SPARK_GRAFT_BENCH_OUT"))
-      .foreach(p => Files.writeString(Paths.get(p), json))
+    // a partial run (named queries) must not replace the catalog artifact
+    if (args.isEmpty) Files.writeString(Paths.get("BENCH.json"), json)
+    sys.env.get("SPARK_GRAFT_BENCH_OUT").foreach(p => Files.writeString(Paths.get(p), json))
     // FINAL line = the full contract line (metric/value/unit/queries/sf):
     // the driver's round-over-round PERF comparison needs the per-query
     // seconds map in the parseable stdout artifact (VERDICT r15 "what's
     // wrong" #1 — PERF_r15.per_query stayed empty because the final
     // compact line carried totals only). The compact twin keeps printing
     // FIRST so a human scanning stdout still sees the headline numbers
-    // without the maps; BENCH.json / BENCH_FULL_r{N}.json remain the
-    // canonical on-disk artifacts for any capture too bounded to hold
-    // the ~8 KB full line.
+    // without the maps; BENCH.json remains the canonical on-disk artifact
+    // for any capture too bounded to hold the ~8 KB full line.
     System.out.flush()
     println(jsonCompact)
     println(json)
     System.out.flush()
-  }
-
-  /** `BENCH_r{N}.json` zero-padded to two digits (the r01..r05
-    * convention; VERDICT r5 #8). The current round N is anchored on
-    * VERDICT.md's "round M" header (written by the judge at the END of
-    * round M, so it reads M for the whole of round M+1) — NOT on
-    * max(CORRECTNESS_r*)+1, which flips mid-round the moment the driver
-    * writes CORRECTNESS_r{N} and mislabeled round-6's final bench as
-    * BENCH_r07 (VERDICT r6 #2). Fallback when VERDICT.md is absent
-    * (round 1) or unparseable: max correctness round + 1 as before.
-    * None outside a round workspace (no snapshots, no verdict). */
-  private def roundSnapshotName(): Option[String] =
-    currentRound().map(n => f"BENCH_r$n%02d.json")
-
-  /** The round number this session is building (see roundSnapshotName's
-    * scaladoc for the anchoring rules); shared with tools.BenchSf1 for
-    * the BENCH_SF1_r{N} artifact.
-    */
-  private[graft] def currentRound(): Option[Int] = {
-    val verdictRound =
-      try {
-        val p = Paths.get("VERDICT.md")
-        if (Files.exists(p))
-          "round\\s+(\\d+)".r
-            .findFirstMatchIn(Files.readString(p).linesIterator.take(3).mkString(" "))
-            .map(_.group(1).toInt + 1)
-        else None
-      } catch { case _: Throwable => None }
-    val correctnessRound = {
-      val re = "CORRECTNESS_r(\\d+)\\.json".r
-      Option(new java.io.File(".").listFiles()).toSeq.flatten
-        .flatMap(f => re.findFirstMatchIn(f.getName).map(_.group(1).toInt))
-        .maxOption.map(_ + 1)
-    }
-    // max of the two anchors, not verdict-first: a judge round that
-    // leaves VERDICT.md's header stale (round 9 did — the header still
-    // read "round 8" while CORRECTNESS_r09 existed) would otherwise
-    // relabel the NEXT round's bench over the committed r09 artifact
-    (verdictRound ++ correctnessRound).maxOption
   }
 
   /** Per-query seconds from the working-dir BENCH.json (the previous
@@ -370,8 +291,7 @@ object Bench {
       val p = Paths.get("BENCH.json")
       if (!Files.exists(p)) Map.empty
       else {
-        val om = new com.fasterxml.jackson.databind.ObjectMapper()
-        val q = om.readTree(Files.readAllBytes(p)).get("queries")
+        val q = jsonMapper.readTree(Files.readAllBytes(p)).get("queries")
         if (q == null) Map.empty
         else {
           val b = Map.newBuilder[String, Double]
@@ -381,6 +301,8 @@ object Bench {
       }
     } catch { case _: Throwable => Map.empty }
 
+  private val jsonMapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
   /** Persistent `duck_bench.py --serve` worker for the PAIRED protocol
     * (VERDICT r13 #2): each query's DuckDB leg runs seconds after its
     * Spark leg, in the same host window, while the Spark driver thread
@@ -388,106 +310,56 @@ object Bench {
     * monolithic legs hours apart let the VM's ±25-40% window drift
     * dominate the headline ratio (r13 spent a day re-proving a "1.44×
     * regression" was drift); adjacent pairs subtract the window out.
-    * Any failure (missing script, worker death, malformed reply) flips
-    * `dead` and the caller falls back to the old post-hoc monolithic
-    * leg, so the artifact always carries a duck side.
+    * Any failure (missing script, worker death, malformed reply) stops
+    * the worker's service and is kept in `failure`.
     */
   private final class DuckServer(sfDir: String) {
-    private val om = new com.fasterxml.jackson.databind.ObjectMapper()
     private val oraclePath = Files.createTempFile("graft_oracle", ".json")
     Files.writeString(oraclePath, Oracle.dumpJson(SparkEntry.oracleSql))
-    var dead = false
-    private val proc: Option[java.lang.Process] =
-      try {
-        val script =
-          sys.env.getOrElse("SPARK_GRAFT_DUCK_BENCH", "tools/duck_bench.py")
-        if (!Files.exists(Paths.get(script))) { dead = true; None }
-        else {
-          val single = if (sys.props.get("graft.duckSingle").isDefined)
-            Seq("--single") else Seq.empty
-          val cmd = Seq("python3", script, "--serve") ++ single ++
-            Seq(sfDir, oraclePath.toString)
-          Some(new ProcessBuilder(cmd: _*)
-            .redirectError(ProcessBuilder.Redirect.INHERIT)
-            .start())
+    /** Why the worker stopped serving; None while it serves. */
+    var failure: Option[String] = None
+    private val proc: Option[java.lang.Process] = {
+      val script = sys.env.getOrElse("SPARK_GRAFT_DUCK_BENCH", "tools/duck_bench.py")
+      if (!Files.exists(Paths.get(script))) {
+        failure = Some(s"DuckDB worker script $script not found"); None
+      } else
+        try Some(new ProcessBuilder("python3", script, "--serve", sfDir, oraclePath.toString)
+          .redirectError(ProcessBuilder.Redirect.INHERIT)
+          .start())
+        catch { case e: Throwable =>
+          failure = Some(s"DuckDB worker did not start: ${e.getClass.getSimpleName}"); None
         }
-      } catch { case _: Throwable => dead = true; None }
+    }
     private val rd = proc.map(p => new java.io.BufferedReader(
       new java.io.InputStreamReader(p.getInputStream)))
     private val wr = proc.map(p => new java.io.PrintWriter(p.getOutputStream, true))
     // handshake: the worker prints {"ready": true} once its views exist
-    if (!dead) dead = !readJson().exists(_.path("ready").asBoolean(false))
+    if (failure.isEmpty && !readJson().exists(_.path("ready").asBoolean(false)))
+      failure = Some("DuckDB worker sent no ready line")
 
     private def readJson(): Option[com.fasterxml.jackson.databind.JsonNode] =
-      try rd.flatMap(r => Option(r.readLine())).map(om.readTree)
-      catch { case _: Throwable => dead = true; None }
+      try rd.flatMap(r => Option(r.readLine())).map(jsonMapper.readTree)
+      catch { case _: Throwable => None }
 
-    /** Time `name`'s oracle leg now (blocking); None on worker failure
-      * or oracle error — the pair is dropped, the worker keeps serving.
+    /** Time `name`'s oracle leg now (blocking): its min seconds and every
+      * timed run. None on worker failure or oracle error — the pair is
+      * dropped, and after an oracle error the worker keeps serving.
       */
-    def time(name: String): Option[Double] =
-      if (dead) None
+    def time(name: String): Option[(Double, Seq[Double])] =
+      if (failure.isDefined) None
       else {
         wr.foreach(_.println(name))
         readJson() match {
-          case Some(n) if n.has("sec") => Some(n.get("sec").asDouble())
-          case Some(_) => None // per-query oracle error: keep serving
-          case None => dead = true; None
+          case Some(n) if n.has("sec") =>
+            Some((n.get("sec").asDouble(), n.get("runs").elements().asScala.map(_.asDouble()).toSeq))
+          case Some(_) => None
+          case None => failure = Some(s"DuckDB worker stopped replying at $name"); None
         }
       }
 
-    /** Send EXIT and read the {"total","queries","runs"} summary line. */
-    def finish(): Option[(Double, String)] = {
-      val out =
-        if (dead) None
-        else {
-          wr.foreach(_.println("EXIT"))
-          readJson().filter(_.has("total"))
-            .map(n => (n.get("total").asDouble(), n.toString))
-        }
-      try { proc.foreach(_.waitFor()); Files.deleteIfExists(oraclePath) }
+    /** Close the worker's stdin (its signal to exit) and wait for it. */
+    def finish(): Unit =
+      try { wr.foreach(_.close()); proc.foreach(_.waitFor()); Files.deleteIfExists(oraclePath) }
       catch { case _: Throwable => () }
-      out
-    }
   }
-
-  /** Run tools/duck_bench.py on the same sfDir over the named oracle
-    * queries; returns (total seconds, duck's full JSON line — including the
-    * per-query map), or None if the leg can't run (missing python/duckdb
-    * must not invalidate the Spark artifact). Post-hoc monolithic
-    * protocol — the fallback when the paired DuckServer dies mid-run.
-    */
-  private def runDuck(sfDir: String, names: Seq[String]): Option[(Double, String)] =
-    try {
-      val oraclePath = Files.createTempFile("graft_oracle", ".json")
-      Files.writeString(oraclePath, Oracle.dumpJson(SparkEntry.oracleSql))
-      val script = sys.env.getOrElse("SPARK_GRAFT_DUCK_BENCH", "tools/duck_bench.py")
-      if (!Files.exists(Paths.get(script))) return None
-      // graft.duckSingle (set by tools.BenchSf1): the pre-r11 one-cold-run
-      // duck protocol — the sf1 artifact's judge bar is comparability
-      // with the r8 single-run table, and warm+min-of-N at 10× volume
-      // costs hours of oracle time
-      val single = if (sys.props.get("graft.duckSingle").isDefined)
-        Seq("--single") else Seq.empty
-      val cmd = Seq("python3", script, sfDir, oraclePath.toString) ++
-        single ++ names
-      val p = new ProcessBuilder(cmd: _*).redirectErrorStream(false).start()
-      val out = new String(p.getInputStream.readAllBytes())
-      p.waitFor()
-      Files.deleteIfExists(oraclePath)
-      if (p.exitValue() != 0) None
-      else {
-        // take the LAST brace-wrapped line that carries "total" (ADVICE
-        // r5: an earlier brace-wrapped python/duckdb diagnostic must not
-        // be mistaken for the result), and read the total from THAT line
-        val line = out.linesIterator.map(_.trim).filter(l =>
-          l.startsWith("{") && l.endsWith("}") && l.contains("\"total\""))
-          .toSeq.lastOption
-        for {
-          l <- line
-          total <- """"total":\s*([0-9.]+)""".r.findFirstMatchIn(l)
-            .map(_.group(1).toDouble)
-        } yield (total, l)
-      }
-    } catch { case _: Throwable => None }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,29 +7,9 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     // optional extra args: run only these query names (debug aid)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // NIO atomic checkpoint writes for the local run (31 ms -> 0.05 ms
-      // per offset/commit/state-delta publish; see
-      // streaming.LocalNioCheckpointFileManager). Running the WHOLE
-      // streaming catalog under it here IS its correctness gate.
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        classOf[graft.streaming.LocalNioCheckpointFileManager].getName)
-      // Local-mode heartbeat hardening (CORRECTNESS_SF100_r14 find 2,
-      // recurred in the r15 stream_semdedup retry): a 48g driver JVM
-      // under scale-gate load can pause >120 s in one full GC; the
-      // HeartbeatReceiver then removes the SAME-JVM executor and the
-      // context wedges throwing RpcEndpointNotFoundException forever.
-      // In local mode the heartbeat protects nothing (executor death IS
-      // driver death), so an hour-scale timeout only removes the wedge.
-      .config("spark.network.timeout", "3600s")
-      .config("spark.executor.heartbeatInterval", "60s")
-      .getOrCreate()
+    // the whole streaming catalog running on LocalSession's NIO
+    // checkpoint manager here is that manager's correctness gate
+    val spark = LocalSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // fixture-schema canary: one loud failure on testdata drift, never a
     // catalog of per-query stack traces (VERDICT r4 #4)

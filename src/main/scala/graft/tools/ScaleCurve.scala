@@ -10,7 +10,7 @@ import graft.core._
   * size. Near-linear growth is the measurable form of the SCALE.md
   * arguments (keyed partitioning ⇒ wall-clock tracks rows/partitions).
   *
-  *   sbt -batch "runMain graft.tools.ScaleCurve 1000000 10000000"
+  *   SPARK_GRAFT_CPUS=32 sbt -batch "runMain graft.tools.ScaleCurve 1000000 10000000"
   */
 object ScaleCurve {
 
@@ -39,12 +39,7 @@ object ScaleCurve {
   def main(args: Array[String]): Unit = {
     val sizes = if (args.nonEmpty) args.map(_.toLong).toSeq
                 else Seq(1000000L, 10000000L)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     for (n <- sizes) {

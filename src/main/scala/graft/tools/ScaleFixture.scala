@@ -37,20 +37,13 @@ object ScaleFixture {
     val Array(src, out, factorS) = args
     val factor = factorS.toInt
     require(factor >= 1)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     build(spark, src, out, factor)
     spark.stop()
   }
 
-  /** The fixture synthesis, callable in-JVM (tools.BenchSf1). */
-  def build(spark: SparkSession, src: String, out: String, factor: Int): Unit = {
+  private def build(spark: SparkSession, src: String, out: String, factor: Int): Unit = {
 
     def t(name: String): DataFrame = spark.read.parquet(s"$src/$name.parquet")
     def maxOf(df: DataFrame, c: String): Long =

@@ -30,15 +30,9 @@ object StateSoak {
   private final case class Curve(rows: Vector[Long], mem: Vector[Long])
 
   def main(args: Array[String]): Unit = {
-    val builder: SparkSession.Builder = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+    val spark: SparkSession = graft.LocalSession.builder()
       .config("spark.sql.shuffle.partitions", 2)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    graft.Scratch.dir().foreach(d =>
-      builder.config("spark.sql.streaming.checkpointLocation", s"$d/ckpt"))
-    val spark = builder.getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext

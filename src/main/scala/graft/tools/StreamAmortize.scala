@@ -15,7 +15,7 @@ import graft.queries.{Q, StreamFixtures, StreamHarness}
   * steady-state deployment cost, and the first-drop wall minus the
   * marginal IS the fixed per-JOB term.
   *
-  *   SPARK_DRIVER_MEM=24g sbt -batch "runMain graft.tools.StreamAmortize <sfDir> [K]"
+  *   SPARK_GRAFT_CPUS=32 SPARK_DRIVER_MEM=24g sbt -batch "runMain graft.tools.StreamAmortize <sfDir> [K]"
   *
   * Drops are time-ordered (each drop covers a later event-time range),
   * so the 0-second watermark advances monotonically batch-over-batch:
@@ -38,21 +38,7 @@ object StreamAmortize {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val k = args.lift(1).map(_.toInt).getOrElse(10)
     require(k >= 2, "need K >= 2 drops for a marginal measurement")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // local-mode heartbeat hardening — see Verify.scala
-      .config("spark.network.timeout", "3600s")
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        classOf[graft.streaming.LocalNioCheckpointFileManager].getName)
-    graft.Scratch.dir().foreach(d =>
-      builder.config("spark.sql.streaming.checkpointLocation", s"$d/ckpt"))
-    val spark = builder.getOrCreate()
+    val spark = graft.LocalSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val results = Seq(

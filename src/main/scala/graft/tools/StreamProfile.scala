@@ -1,15 +1,15 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.streaming.StreamingQueryListener._
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** Phase profiler for the streaming catalog's per-query toll (VERDICT r7
-  * #2): runs named stream_* queries repeatedly under the Bench session
-  * config, capturing wall-clock per run plus Spark's own per-batch
-  * durationMs breakdown (triggerExecution / queryPlanning / walCommit /
-  * addBatch / getBatch / latestOffset / commitOffsets) from the
+  * #2): runs named stream_* queries repeatedly on `graft.LocalSession`,
+  * capturing wall-clock per run plus Spark's own per-batch durationMs
+  * breakdown (triggerExecution / queryPlanning / walCommit / addBatch /
+  * getBatch / latestOffset / commitOffsets) from the
   * StreamingQueryListener. The residual (wall − Σ triggerExecution) is the
   * query START/STOP overhead: analysis, checkpoint-dir resolution, the
   * MicroBatchExecution thread spin-up, and stop/teardown.
@@ -19,26 +19,7 @@ import scala.collection.mutable
 object StreamProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    graft.Scratch.dir().foreach(d =>
-      builder.config("spark.sql.streaming.checkpointLocation", s"$d/ckpt"))
-    if (!sys.env.contains("SPARK_GRAFT_NO_NIO_CKPT"))
-      builder.config("spark.sql.streaming.checkpointFileManagerClass",
-        classOf[graft.streaming.LocalNioCheckpointFileManager].getName)
-    // A/B experiment hook: SPARK_GRAFT_EXTRA_CONF="k=v;k=v" layers
-    // candidate session configs (e.g. session-window local merge,
-    // RocksDB changelog checkpointing) over the bench baseline.
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(';').foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      builder.config(k.trim, v.trim)
-    })
-    val spark = builder.getOrCreate()
+    val spark = graft.LocalSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val progress = mutable.ArrayBuffer.empty[(String, Long, Map[String, Long])]
@@ -47,8 +28,7 @@ object StreamProfile {
       override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
       override def onQueryProgress(e: QueryProgressEvent): Unit =
         progress.synchronized {
-          val d = e.progress.durationMs.entrySet().iterator().asScala
-            .map(kv => kv.getKey -> kv.getValue.toLong).toMap
+          val d = e.progress.durationMs.asScala.map { case (k, v) => k -> v.toLong }.toMap
           val st = e.progress.stateOperators.map(so =>
             s"upd=${so.allUpdatesTimeMs} rm=${so.allRemovalsTimeMs} " +
               s"commit=${so.commitTimeMs} rows=${so.numRowsTotal}").mkString("; ")
@@ -56,53 +36,6 @@ object StreamProfile {
           if (st.nonEmpty) println(s"[state] batch=${e.progress.batchId} $st")
         }
     })
-
-    // `_exp` mode: decompose the toll with three synthetic runs over the
-    // same events source — (a) batch agg, (b) stateless stream passthrough,
-    // (c) stateful stream agg — so source/sink/state costs separate.
-    if (args.contains("_exp")) {
-      import org.apache.spark.sql.functions._
-      val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
-      for (i <- 1 to 4) {
-        val t0 = System.nanoTime()
-        val b = spark.read.schema(schema)
-          .option("pathGlobFilter", "events.parquet").parquet(sfDir)
-          .groupBy("user_id").agg(count(lit(1)).as("n"))
-          .count()
-        println(f"[exp] run=$i batch_agg rows=$b wall=${(System.nanoTime() - t0) / 1e9}%.3f")
-        for ((label, mkDf) <- Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)](
-          "stateless_stream" -> (df => df.select(col("event_id"))),
-          "stateful_stream" -> (df =>
-            df.groupBy("user_id").agg(count(lit(1)).as("n"))))) {
-          val mode = if (label.startsWith("stateless")) "append" else "complete"
-          graft.queries.StreamHarness.withShufflePartitions(spark,
-            graft.queries.StreamHarness.StreamPartitions) {
-            val t1 = System.nanoTime()
-            val src = spark.readStream.schema(schema)
-              .option("pathGlobFilter", "events.parquet").parquet(sfDir)
-            val name = s"exp_${label}_" + System.nanoTime()
-            val q = mkDf(src).writeStream.queryName(name).format("memory")
-              .outputMode(mode)
-              .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-              .start()
-            val t2 = System.nanoTime()
-            try q.processAllAvailable() finally {
-              val t3 = System.nanoTime()
-              q.stop()
-              val t4 = System.nanoTime()
-              val n = spark.table(name).count()
-              val t5 = System.nanoTime()
-              println(f"[exp] run=$i $label rows=$n " +
-                f"start=${(t2 - t1) / 1e9}%.3f process=${(t3 - t2) / 1e9}%.3f " +
-                f"stop=${(t4 - t3) / 1e9}%.3f read=${(t5 - t4) / 1e9}%.3f " +
-                f"wall=${(t5 - t1) / 1e9}%.3f")
-            }
-            spark.catalog.dropTempView(name)
-          }
-        }
-      }
-      spark.stop(); return
-    }
 
     val names = if (args.nonEmpty) args.toSeq else Seq("stream_tumbling")
     for (name <- names) {
@@ -129,12 +62,5 @@ object StreamProfile {
       }
     }
     spark.stop()
-  }
-
-  private implicit class IterAsScala[A](it: java.util.Iterator[A]) {
-    def asScala: Iterator[A] = new Iterator[A] {
-      def hasNext: Boolean = it.hasNext
-      def next(): A = it.next()
-    }
   }
 }

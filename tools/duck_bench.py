@@ -2,14 +2,13 @@
 """Head-to-head baseline: run every oracle SQL from a Verify dump in DuckDB
 (single-threaded) over the same parquet tables.
 
-Usage: duck_bench.py [--single] [--serve] SFDIR ORACLE_JSON [name ...]
+Usage: duck_bench.py [--serve] SFDIR ORACLE_JSON [name ...]
 
 --serve (VERDICT r13 #2, paired interleaved legs): instead of running a
 fixed list, print {"ready": true} and then serve query names line-by-line
 from stdin — for each, run the same timing protocol and print one JSON
 line {"query": name, "sec": s, "runs": [...]} (or {"query", "error"}).
-On "EXIT"/EOF, print the usual {"total", "queries", "runs"} summary over
-everything served and exit. graft.Bench drives this so each (spark, duck)
+On "EXIT"/EOF, exit. graft.Bench drives this so each (spark, duck)
 pair is measured seconds apart in ONE window, instead of two monolithic
 legs hours apart whose ratio the ±25-40% VM drift dominates.
 
@@ -27,9 +26,9 @@ the same round):
     (contention only inflates a run; the fastest observation is closest
     to steady-state cost).
 
-Prints one JSON line: {"total": sec, "queries": {name: sec},
-"runs": {name: [sec, ...]}} — "runs" carries the full vector for every
-multi-run query so both legs' spreads are quotable side by side.
+Without --serve, prints one JSON line: {"total": sec, "queries":
+{name: sec}, "runs": {name: [sec, ...]}} — "runs" carries the full vector
+for every multi-run query so both legs' spreads are quotable side by side.
 """
 import json
 import sys
@@ -42,12 +41,7 @@ TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
 
 
 def main() -> None:
-    # --single: one cold run per query, no warmup — the pre-r11 protocol,
-    # kept for the sf1-equivalent artifact (BENCH_SF1_r{N}) whose judge
-    # bar is comparability with the r8 single-run table, and whose duck
-    # leg at 10x volume would cost hours under warm+min-of-N.
     argv = [a for a in sys.argv[1:] if not a.startswith("--")]
-    single = "--single" in sys.argv[1:]
     serve = "--serve" in sys.argv[1:]
     sfdir, oracle_path = argv[0], argv[1]
     only = set(argv[2:])
@@ -65,9 +59,6 @@ def main() -> None:
             con.execute(sql).fetchall()
             return round(time.monotonic() - t0, 3)
 
-        if single:
-            t = timed()
-            return t, [t]
         con.execute(sql).fetchall()  # warmup: untimed, as the Spark leg
         # ADVICE r11: every query gets >= 2 timed runs (min-of-N like the
         # Spark leg); expensive ones get a third up front, and the spread
@@ -78,18 +69,6 @@ def main() -> None:
         while len(runs) < 5 and max(runs) > 2.0 * min(runs):
             runs.append(timed())
         return min(runs), runs
-
-    times = {}
-    multi = {}
-
-    def record(name, sec, runs):
-        times[name] = sec
-        if len(runs) > 1:
-            multi[name] = runs
-
-    def summary():
-        return json.dumps({"total": round(sum(times.values()), 2),
-                           "queries": times, "runs": multi})
 
     if serve:
         print(json.dumps({"ready": True}), flush=True)
@@ -108,18 +87,20 @@ def main() -> None:
                 print(json.dumps({"query": name,
                                   "error": type(e).__name__}), flush=True)
                 continue
-            record(name, sec, runs)
             print(json.dumps({"query": name, "sec": sec, "runs": runs}),
                   flush=True)
-        print(summary(), flush=True)
         return
 
+    times = {}
+    multi = {}
     for name, sql in sorted(sqls.items()):
         if only and name not in only:
             continue
-        sec, runs = measure(sql)
-        record(name, sec, runs)
-    print(summary())
+        times[name], runs = measure(sql)
+        if len(runs) > 1:
+            multi[name] = runs
+    print(json.dumps({"total": round(sum(times.values()), 2),
+                      "queries": times, "runs": multi}))
 
 
 if __name__ == "__main__":
