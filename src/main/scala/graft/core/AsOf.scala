@@ -29,6 +29,27 @@ object AsOf {
 
   private val Side = "__side"
 
+  /** The one carry: union `l` (side 1) with `r` (side 0), a column
+    * missing on one side null-padded, and replace each of `vals` by its
+    * latest non-null value over (`part`; ts, side, seq) — right rows
+    * before left rows at equal ts.
+    */
+  private def carry(
+      l: DataFrame,
+      r: DataFrame,
+      part: Seq[Column],
+      vals: Seq[String],
+      tsCol: String,
+      seqCol: String): DataFrame = {
+    val w = Window
+      .partitionBy(part: _*)
+      .orderBy(col(tsCol), col(Side), col(seqCol))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    vals.foldLeft(l.unionByName(r, allowMissingColumns = true)) { (d, n) =>
+      d.withColumn(n, last(col(n), ignoreNulls = true).over(w))
+    }
+  }
+
   /** Left-fires as-of: one output row per LEFT row, carrying the latest
     * right-side values with right.ts <= left.ts (scespet `take`/`sample`,
     * MacroTerm.scala:209-230). Rows on the right not yet seen → null.
@@ -62,15 +83,8 @@ object AsOf {
       (jk.map(col) :+ col(tsCol) :+ col(seqCol) :+ col(Side)) ++
         rightVals.map { case (n, e) => e.as(n) }: _*)
 
-    val u = l.unionByName(r, allowMissingColumns = true)
-    val w = Window
-      .partitionBy(jk.map(col): _*)
-      .orderBy(col(tsCol), col(Side), col(seqCol))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val carried = rightVals.foldLeft(u) { case (d, (n, _)) =>
-      d.withColumn(n, last(col(n), ignoreNulls = true).over(w))
-    }
-    carried.filter(col(Side) === 1).drop(Side).drop(jk: _*)
+    carry(l, r, jk.map(col), rightVals.map(_._1), tsCol, seqCol)
+      .filter(col(Side) === 1).drop(Side).drop(jk: _*)
   }
 
   /** [[take]] with a STALENESS BOUND (beyond reference; the shape real
@@ -123,14 +137,7 @@ object AsOf {
         leftVals.map { case (n, _) => lit(null).as(n) } ++
         rightVals.map { case (n, e) => e.as(n) }: _*)
 
-    val u = l.unionByName(r)
-    val cum = Window
-      .partitionBy(key.map(col): _*)
-      .orderBy(col(tsCol), col(Side), col(seqCol))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val carried = (leftVals ++ rightVals).foldLeft(u) { case (d, (n, _)) =>
-      d.withColumn(n, last(col(n), ignoreNulls = true).over(cum))
-    }
+    val carried = carry(l, r, key.map(col), (leftVals ++ rightVals).map(_._1), tsCol, seqCol)
     // one emission per atomic cycle: keep the last row of each (key, ts)
     val perCycle = Window
       .partitionBy((key :+ tsCol).map(col): _*)

@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 /** Multi-input buckets — scespet's
   * `bucketStream(b).bind(s1)(adder1).bind(s2)(adder2).reset(slice).last()`
   * builder chain (EnvTermBuilder.scala:113-134, MacroTerm.scala:360-390,
-  * SlicedBucket.scala:22-85 `JoinValueRendezvous`).
+  * SlicedBucket.scala:22-85 `JoinValueRendezvous`), written
+  * `.reset(slice).reduce(...)` here.
   *
   * Spark-first re-expression (SURVEY §3.3): tag each bound input, union
   * them (missing columns null-padded), assign window ids from the slice
@@ -15,7 +16,7 @@ import org.apache.spark.sql.functions._
   * rendezvous — all inputs firing at one timestamp delivered before a
   * single `calculate()` — becomes grouping: rows sharing (key, window)
   * land in the same group by construction; for cycle-sensitive stats
-  * (e.g. "count cycles where BOTH inputs fired") use [[BoundBuckets.reduceByCycle]],
+  * (e.g. "count cycles where BOTH inputs fired") use [[Sliced.reduceByCycle]],
   * which pre-collapses each (key, ts) atomic cycle first.
   *
   * Scale: the union is a zero-shuffle concatenation of scans; the single
@@ -56,61 +57,17 @@ object Buckets {
       seqCol: String) {
     def bind(tag: String, df: DataFrame)(vals: (String, Column)*): Builder =
       copy(binds = binds :+ Bind(tag, df, vals))
-    /** Seal with a slice spec (scespet `.reset(spec)`). */
-    def reset(slice: Slice): BoundBuckets =
-      BoundBuckets(taggedUnion(keys, binds, tsCol, seqCol), keys, slice, tsCol, seqCol)
+    /** Seal with a slice spec (scespet `.reset(spec)`): the tagged union
+      * cut into `window_id` buckets. scespet's `.last()` is its `reduce`,
+      * `.all()` its `scan` (PartialBuiltSlicedBucket, MacroTerm.scala:360-390).
+      */
+    def reset(slice: Slice): Sliced = {
+      val union = taggedUnion(keys, binds, tsCol, seqCol)
+      Sliced(WindowKernel.withWindowId(union, keys, slice, tsCol, seqCol),
+        keys, WindowKernel.WindowId, tsCol, seqCol)
+    }
   }
 
   /** Tag-dispatch helper for aggregation expressions. */
   def fromTag(tag: String, c: Column): Column = when(col(Tag) === tag, c)
-}
-
-/** Sealed multi-input bucket stream: `.last(aggs)` = reduce per slice,
-  * `.all(out, agg)` = cumulative scan per slice (scespet
-  * PartialBuiltSlicedBucket.last/all, MacroTerm.scala:360-390).
-  */
-final case class BoundBuckets(
-    union: DataFrame,
-    keys: Seq[String],
-    slice: Slice,
-    tsCol: String,
-    seqCol: String) {
-
-  private def withId: DataFrame =
-    WindowKernel.withWindowId(union, keys, slice, tsCol, seqCol)
-
-  private def groupCols = (keys :+ WindowKernel.WindowId).map(col)
-
-  /** LAST emit mode: one row per (key, window). */
-  def last(aggs: (String, Column)*): DataFrame =
-    withId.groupBy(groupCols: _*)
-      .agg(aggs.head._2.as(aggs.head._1), aggs.tail.map { case (n, e) => e.as(n) }: _*)
-
-  /** CUMULATIVE emit mode: running value within each (key, window). */
-  def all(out: String, agg: Column): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(groupCols: _*)
-      .orderBy(col(tsCol), col(seqCol))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)
-    withId.withColumn(out, agg.over(w))
-  }
-
-  /** Rendezvous-exact reduce: first collapse each atomic cycle — all rows
-    * sharing (key, ts) — with `cycleAggs` (one row per engine cycle, like
-    * the reference's single `calculate()` per cycle,
-    * SlowGraphWalk.java:82-92), then aggregate cycles per (key, window)
-    * with `bucketAggs`.
-    */
-  def reduceByCycle(
-      cycleAggs: Seq[(String, Column)],
-      bucketAggs: Seq[(String, Column)]): DataFrame = {
-    val cycles = withId
-      .groupBy((keys :+ WindowKernel.WindowId :+ tsCol).map(col): _*)
-      .agg(cycleAggs.head._2.as(cycleAggs.head._1),
-        cycleAggs.tail.map { case (n, e) => e.as(n) }: _*)
-    cycles.groupBy(groupCols: _*)
-      .agg(bucketAggs.head._2.as(bucketAggs.head._1),
-        bucketAggs.tail.map { case (n, e) => e.as(n) }: _*)
-  }
 }

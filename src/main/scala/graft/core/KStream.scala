@@ -254,8 +254,7 @@ final case class KStream(
     * VectTerm.reduce, :487-493); a single row when there are no keys.
     */
   def reduceAll(aggs: (String, Column)*): DataFrame =
-    df.groupBy(keyCols: _*)
-      .agg(aggs.head._2.as(aggs.head._1), aggs.tail.map { case (n, e) => e.as(n) }: _*)
+    namedAgg(df.groupBy(keyCols: _*), "reduceAll", aggs)
 
   /** Gap-based sessionization (beyond reference; the classic event-
     * analytics windowing scespet lacks): a new session opens when the
@@ -267,8 +266,6 @@ final case class KStream(
     */
   def sessionize(maxGap: Long, as: String = "session_id"): KStream = {
     val w = Window.partitionBy(keyCols: _*).orderBy(col(tsCol), col(seqCol))
-    val cum = Window.partitionBy(keyCols: _*).orderBy(col(tsCol), col(seqCol))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val opened = df.withColumn("__new",
       when(lag(col(tsCol), 1).over(w).isNull ||
         col(tsCol) - lag(col(tsCol), 1).over(w) > maxGap, 1L).otherwise(0L))
@@ -279,21 +276,29 @@ final case class KStream(
     // exchange+sort with MergingSessionsExec instead of two fact-sized
     // window passes plus a second exchange.
     graft.plans.GapSessionTag.register(df.sparkSession)
+    val opens = sum(col("__new")).over(WindowKernel.cumulative(keys, tsCol, seqCol))
     val sid = call_function("graft_session_tag",
-      (sum(col("__new")).over(cum) +: lit(maxGap) +: col(tsCol) +:
-        col(seqCol) +: keyCols): _*)
+      (opens +: lit(maxGap) +: col(tsCol) +: col(seqCol) +: keyCols): _*)
     KStream(
       opened.withColumn(as, sid).drop("__new"),
       keys :+ as, tsCol, seqCol)
   }
 
-  /** Capture a slice spec (MacroTerm.group, :262-265). */
-  def group(slice: Slice): GroupedKStream = GroupedKStream(this, slice)
-
-  /** Boolean-gated window (MacroTerm.window, :242-259; VectTerm.window,
-    * :530-543).
+  /** Per-key × per-slice buckets, `.group(spec).reduce(...)/.scan(...)`
+    * (MacroTerm.group, :262-265; GroupedVectTerm, VectTerm.scala:609-696).
     */
-  def window(gate: Column): WindowedKStream = WindowedKStream(this, gate)
+  def group(slice: Slice): Sliced =
+    Sliced(WindowKernel.withWindowId(df, keys, slice, tsCol, seqCol),
+      keys, WindowKernel.WindowId, tsCol, seqCol)
+
+  /** Per-key boolean-gated windows (MacroTerm.window, :242-259;
+    * VectTerm.window, :530-543): WindowedBucket semantics, a close edge
+    * excludes its datum (WindowedReduce.scala:55-58).
+    */
+  def window(gate: Column): Sliced =
+    Sliced(
+      WindowKernel.withSessions(df, keys, gate, tsCol, seqCol).filter(col("in_window")),
+      keys, "session_id", tsCol, seqCol)
 
   /** Either-fires temporal zip per key (MacroTerm.join, :190-204;
     * VectTerm.join, :454-456 / VectorJoin.scala).
@@ -378,52 +383,4 @@ final case class KStream(
         Seq(col("__fk")), registry.keys.map(col), rightVals, tsCol, seqCol)
         .drop("__fk"),
       keys, tsCol, seqCol)
-}
-
-/** Per-key × per-slice aggregation: `.group(spec).scan(...)/.reduce(...)`
-  * (GroupedTerm, MacroTerm.scala:327-335; GroupedVectTerm,
-  * VectTerm.scala:609-696). `reduce` is the LAST emit-mode, one row per
-  * slice (types.scala:144-148 "Fold"); `scan` the CUMULATIVE one, a
-  * running value within each slice ("Scan").
-  */
-final case class GroupedKStream(s: KStream, slice: Slice) {
-  private def withId: DataFrame =
-    WindowKernel.withWindowId(s.df, s.keys, slice, s.tsCol, s.seqCol)
-
-  def reduce(aggs: (String, Column)*): DataFrame =
-    withId
-      .groupBy((s.keys :+ WindowKernel.WindowId).map(col): _*)
-      .agg(aggs.head._2.as(aggs.head._1), aggs.tail.map { case (n, e) => e.as(n) }: _*)
-
-  def scan(out: String, agg: Column): DataFrame = {
-    val w = Window
-      .partitionBy((s.keys :+ WindowKernel.WindowId).map(col): _*)
-      .orderBy(col(s.tsCol), col(s.seqCol))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    withId.withColumn(out, agg.over(w))
-  }
-}
-
-/** Per-key boolean windows: `.window(gate).reduce(...)` — WindowedBucket
-  * semantics (WindowedBucket_Continuous/LastValue; close-edge precedence
-  * WindowedReduce.scala:55-58).
-  */
-final case class WindowedKStream(s: KStream, gate: Column) {
-  private def sessions: DataFrame =
-    WindowKernel
-      .withSessions(s.df, s.keys, gate, s.tsCol, s.seqCol)
-      .filter(col("in_window"))
-
-  def reduce(aggs: (String, Column)*): DataFrame =
-    sessions
-      .groupBy((s.keys :+ "session_id").map(col): _*)
-      .agg(aggs.head._2.as(aggs.head._1), aggs.tail.map { case (n, e) => e.as(n) }: _*)
-
-  def scan(out: String, agg: Column): DataFrame = {
-    val w = Window
-      .partitionBy((s.keys :+ "session_id").map(col): _*)
-      .orderBy(col(s.tsCol), col(s.seqCol))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    sessions.withColumn(out, agg.over(w))
-  }
 }

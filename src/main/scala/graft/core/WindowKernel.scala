@@ -92,6 +92,18 @@ object WindowKernel {
       .orderBy(col(tsCol), col(seqCol))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
 
+  private def tsBigint(tsCol: String): String = s"CAST(`$tsCol` AS BIGINT)"
+
+  /** SQL for `floorDiv(x, d) + plus`, the flooring division DuckDB's `//`
+    * and the streaming `window()` use. Spark `div` truncates toward zero,
+    * which equals floor only for nonnegative operands, so
+    * floorDiv(x, d) == truncDiv(x, d) + (x % d < 0 ? -1 : 0) for d > 0.
+    * Exact int64 arithmetic: double floor(x/d) would lose precision past
+    * 2^53 for epoch-nano axes.
+    */
+  private def floorDivSql(x: String, d: Long, plus: Long = 0L): String =
+    s"($x div ${d}L) + (CASE WHEN $x % ${d}L < 0 THEN ${plus - 1}L ELSE ${plus}L END)"
+
   /** Add `window_id` per the slice spec. */
   def withWindowId(
       df: DataFrame,
@@ -101,26 +113,15 @@ object WindowKernel {
       seqCol: String = "seq"): DataFrame = slice match {
 
     case Slice.Tumbling(width) =>
-      // Integer `div`, NOT floor(a/b): double division loses precision for
-      // epoch-nano ts beyond 2^53 and would disagree with an exact oracle.
-      // Contract: ts >= 0 (epoch time) — `div` truncates toward zero, so a
-      // negative ts would disagree with DuckDB's flooring `//`.
-      df.withColumn(WindowId, expr(s"CAST(`$tsCol` AS BIGINT) div ${width}L"))
+      df.withColumn(WindowId, expr(floorDivSql(tsBigint(tsCol), width)))
 
     case Slice.Hopping(width, step) =>
-      // covering hop ids: w_max = floorDiv(ts, step),
-      // w_min = floorDiv(ts - width, step) + 1. BOTH bounds need the
-      // floor correction (ADVICE r7): Spark `div` truncates toward zero,
-      // which equals floor only for nonnegative operands — ts itself can
-      // be negative (pre-epoch axes), not just (ts - width) near t=0.
-      // Exact int64 arithmetic throughout: double floor(a/b) would lose
-      // precision past 2^53 for epoch-nano axes.
-      val t = s"CAST(`$tsCol` AS BIGINT)"
-      val a = s"($t - ${width}L)"
-      // floorDiv(x, step) == truncDiv(x, step) + (x % step < 0 ? -1 : 0)
+      // covering hop ids: w_min = floorDiv(ts - width, step) + 1,
+      // w_max = floorDiv(ts, step) — ts itself can be negative (pre-epoch
+      // axes), not just (ts - width) near t=0 (ADVICE r7)
+      val t = tsBigint(tsCol)
       df.withColumn(WindowId, explode(expr(
-        s"sequence(($a div ${step}L) + (CASE WHEN $a % ${step}L < 0 THEN 0L ELSE 1L END), " +
-          s"($t div ${step}L) + (CASE WHEN $t % ${step}L < 0 THEN -1L ELSE 0L END))")))
+        s"sequence(${floorDivSql(s"($t - ${width}L)", step, 1L)}, ${floorDivSql(t, step)})")))
 
     case Slice.Count(n) =>
       val w = part(keys).orderBy(col(tsCol), col(seqCol))
@@ -167,11 +168,6 @@ object WindowKernel {
     val prev = lag(g, 1, false).over(ordered)
     val rising = (g && !prev).cast("long")
     df.withColumn("in_window", g)
-      .withColumn(
-        "session_id",
-        sum(rising).over(
-          part(keys)
-            .orderBy(col(tsCol), col(seqCol))
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .withColumn("session_id", sum(rising).over(cumulative(keys, tsCol, seqCol)))
   }
 }

@@ -28,17 +28,19 @@ package graft
   *   .bind("t", trades.df)("px" -> col("px"))
   *   .bind("q", quotes.df)("bid" -> col("bid"))
   *   .reset(Slice.Tumbling(60L * 1000000))
-  *   .last("n_t" -> count(Buckets.fromTag("t", col("px"))))
+  *   .reduce("n_t" -> count(Buckets.fromTag("t", col("px"))))
   * }}}
   *
   * Slice specs ([[Slice]]): `Tumbling` (time), `Count` (every N events),
   * `TriggerCol` (data-driven, BEFORE/AFTER alignment), `Termination`,
-  * `Never`; boolean-gated windows via `.window(gate)`. Emit modes:
-  * `reduce`/`last` = one row per bucket, `scan`/`all` = running value per
-  * event. Streaming twins live in [[graft.streaming]].
+  * `Never`; boolean-gated windows via `.window(gate)`. `group`, `window`
+  * and `Buckets(...).reset` all return a [[Sliced]] frame, whose emit modes
+  * are `reduce` = one row per bucket (scespet `.last()`) and `scan` =
+  * running value per event (scespet `.all()`). Streaming twins live in
+  * [[graft.streaming]].
   */
 package object core {
-  import org.apache.spark.sql.DataFrame
+  import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset}
 
   /** A single stream: a [[KStream]] with no keys. */
   type EStream = KStream
@@ -46,5 +48,17 @@ package object core {
   object EStream {
     def apply(df: DataFrame, tsCol: String = "ts", seqCol: String = "seq"): EStream =
       KStream(df, Nil, tsCol, seqCol)
+  }
+
+  /** `grouped.agg` with one output column per (name, aggregate) pair, in
+    * order. `call` names the operator in the error an empty list raises.
+    */
+  private[graft] def namedAgg(
+      grouped: RelationalGroupedDataset,
+      call: String,
+      aggs: Seq[(String, Column)]): DataFrame = {
+    require(aggs.nonEmpty, s"$call needs at least one (name -> aggregate) pair")
+    val named = aggs.map { case (n, e) => e.as(n) }
+    grouped.agg(named.head, named.tail: _*)
   }
 }

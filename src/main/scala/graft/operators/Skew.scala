@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.namedAgg
 
 /** Skew mitigation utilities for hot keys at scale.
   *
@@ -33,13 +34,7 @@ object Skew {
       merges: Seq[(String, Column)]): DataFrame = {
     require(salt > 0)
     val salted = df.withColumn("__salt", pmod(spark_partition_id() + monotonically_increasing_id(), lit(salt)))
-    val phase1 = salted
-      .groupBy((keys :+ "__salt").map(col): _*)
-      .agg(partials.head._2.as(partials.head._1),
-        partials.tail.map { case (n, e) => e.as(n) }: _*)
-    phase1
-      .groupBy(keys.map(col): _*)
-      .agg(merges.head._2.as(merges.head._1),
-        merges.tail.map { case (n, e) => e.as(n) }: _*)
+    val phase1 = namedAgg(salted.groupBy((keys :+ "__salt").map(col): _*), "saltedAgg", partials)
+    namedAgg(phase1.groupBy(keys.map(col): _*), "saltedAgg", merges)
   }
 }

@@ -412,7 +412,7 @@ object CoreQueries {
             // state and shuffle) and composes hops from the slice-sized
             // sink with the query's own final watermark — ≡ the direct
             // form's append emission (law-tested at factors 2 and 10).
-            val agg = graft.streaming.SlicedHopping.slices(
+            val agg = graft.streaming.Streams.tumblingAgg(
               src, Seq("user_id"), "1 hour", "0 seconds",
               "n" -> count(lit(1)), "sv" -> Q.dsum(col("value")))
             StreamHarness.drain(agg, availableNow = true, drive = { q =>
@@ -895,7 +895,8 @@ object CoreQueries {
 
     // ---- §2.5/§3.3 multi-input bound buckets --------------------------
     // bucketStream(stats).bind(purchases)(addP).bind(clicks)(addC)
-    //   .reset(1.day).last() — tagged union + one grouped aggregation.
+    //   .reset(1.day).last() — tagged union + one grouped aggregation
+    //   (`Sliced.reduce`, scespet's `.last()`).
     QueryDef(
       "ev_bind_bucket",
       (s, dir) => {
@@ -906,7 +907,7 @@ object CoreQueries {
           .bind("c", all.filter(col("event_type") === "click"))(
             "v" -> col("value"))
           .reset(Slice.Tumbling(86400L * 1000 * 1000))
-          .last(
+          .reduce(
             "n_p" -> count(Buckets.fromTag("p", col("v"))),
             "sum_p" -> coalesce(Q.dsum(Buckets.fromTag("p", col("v"))),
               lit(0).cast("decimal(38,6)")).cast("double"),
@@ -921,7 +922,7 @@ object CoreQueries {
              FROM events WHERE event_type IN ('purchase','click')
              GROUP BY 1, 2 ORDER BY user_id, window_id""")),
 
-    // ---- multi-input bucket CUMULATIVE emission (Buckets.all — the
+    // ---- multi-input bucket CUMULATIVE emission (`Sliced.scan` — the
     // scespet `.all()` emit mode): per EVENT, the running per-tag count
     // within the (user, day) bucket across the tagged union.
     QueryDef(
@@ -934,7 +935,7 @@ object CoreQueries {
           .bind("c", all.filter(col("event_type") === "click"))(
             "v" -> col("value"))
           .reset(Slice.Tumbling(86400L * 1000 * 1000))
-          .all("run_p", count(Buckets.fromTag("p", col("v"))))
+          .scan("run_p", count(Buckets.fromTag("p", col("v"))))
           .select(col("seq").as("event_id"), col("user_id"),
             col(WindowKernel.WindowId), col("run_p"))
           .orderBy("event_id")

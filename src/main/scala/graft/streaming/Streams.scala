@@ -3,6 +3,7 @@ package graft.streaming
 import scala.collection.IndexedSeqView
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import graft.core.namedAgg
 
 /** Structured Streaming execution of the graft operator semantics.
   *
@@ -31,9 +32,8 @@ object Streams {
     val withTime = events
       .withColumn("event_time", timestamp_micros(col("ts")))
       .withWatermark("event_time", delay)
-    withTime
-      .groupBy(window(col("event_time"), width) +: keys.map(col): _*)
-      .agg(aggs.head._2.as(aggs.head._1), aggs.tail.map { case (n, e) => e.as(n) }: _*)
+    namedAgg(withTime.groupBy(window(col("event_time"), width) +: keys.map(col): _*),
+      "tumblingAgg", aggs)
   }
 }
 
@@ -51,7 +51,9 @@ object Streams {
   * OUTSIDE the stateful path, on the slice-sized (not event-sized)
   * output. At a 24h/1h sliding spec that is 24× less state and 24× fewer
   * state-store puts; the composition join is over windows×keys rows —
-  * noise next to the event volume.
+  * noise next to the event volume. The in-stream leg is
+  * [[Streams.tumblingAgg]] at `step` width (output: window struct, keys,
+  * the named partials).
   *
   * Contract: `width = h × step` (exact multiple), aggregates must be
   * MERGEABLE with the supplied merge expressions (count→sum, sum→sum,
@@ -64,23 +66,13 @@ object Streams {
   */
 object SlicedHopping {
 
-  /** The in-stream leg: tumbling slice aggregation at `step` width.
-    * Output schema: window(struct) + keys + the named partials.
-    */
-  def slices(
-      events: DataFrame,
-      keys: Seq[String],
-      step: String,
-      delay: String,
-      aggs: (String, Column)*): DataFrame =
-    Streams.tumblingAgg(events, keys, step, delay, aggs: _*)
-
   /** The post-sink composition: explode each slice to the hops it
     * covers (hop starts `slice_start − i·step`, i ∈ [0, h)), keep hops
     * finalized by `watermarkUs`, and merge partials with the supplied
     * merge expressions (applied over the grouped partial columns).
-    * `sink` is the memory/file sink table of [[slices]] — slice-sized,
-    * so this is a narrow batch job regardless of event volume.
+    * `sink` is the memory/file sink table of the in-stream leg,
+    * [[Streams.tumblingAgg]] at `step` width — slice-sized, so this is a
+    * narrow batch job regardless of event volume.
     */
   def compose(
       sink: DataFrame,
@@ -97,10 +89,7 @@ object SlicedHopping {
       explode(array((0 until h).map(i =>
         col("slice_start") - lit(i.toLong * stepUs)): _*)))
       .filter(col("wstart") + lit(widthUs) <= lit(watermarkUs))
-    exploded
-      .groupBy(col("wstart") +: keys.map(col): _*)
-      .agg(merges.head._2.as(merges.head._1),
-        merges.tail.map { case (n, e) => e.as(n) }: _*)
+    namedAgg(exploded.groupBy(col("wstart") +: keys.map(col): _*), "compose", merges)
   }
 
   /** The query's own final event-time watermark in epoch-µs (what the
@@ -124,6 +113,10 @@ final case class KeyedEvent(k: String, ts: Long, seq: Long, v: Double)
 final case class CountBucket(
     k: String, windowId: Long, n: Long, sum: Double, mn: Double, mx: Double)
 
+/** The one streaming slice state, shared by [[CountSlices]],
+  * [[TriggerSlices]] and [[GatedWindows]]: the open bucket's id and its
+  * running count, sum, min and max.
+  */
 private final case class CountSliceState(
     windowId: Long, n: Long, sum: Double, mn: Double, mx: Double) {
   def add(v: Double): CountSliceState =
@@ -255,34 +248,25 @@ object TriggerSlices {
 /** Boolean-gated windows on a live stream (scespet `window(stream[Boolean])`,
   * MacroTerm.scala:242-259): a bucket opens on a false→true gate edge and
   * closes on true→false; the closing (gate=false) event is EXCLUDED
-  * (close precedence, WindowedReduce.scala:55-58). Batch twin:
-  * `WindowKernel.withSessions`.
+  * (close precedence, WindowedReduce.scala:55-58). The fold is the count
+  * slices' state: a window is open exactly when it holds an event
+  * (`n > 0`), and session ids start at 1, as the batch twin's do:
+  * `KStream.window(gate)` (`session_id` from `WindowKernel.withSessions`).
   */
 final case class GatedEvent(k: String, ts: Long, seq: Long, v: Double, gate: Boolean)
-private final case class GateState(
-    open: Boolean, sessionId: Long, n: Long, sum: Double, mn: Double, mx: Double)
 
 object GatedWindows {
 
   def apply(events: Dataset[GatedEvent]): Dataset[CountBucket] = {
     import events.sparkSession.implicits._
     KeyedFold.run(events,
-      new KeyedFold[String, GatedEvent, GateState, CountBucket](
-        _.k, Ordering.by(e => (e.ts, e.seq)),
-        GateState(open = false, 0L, 0L, 0.0, Double.MaxValue, Double.MinValue)) {
-        def step(k: String, s: GateState, e: GatedEvent,
-                 emit: CountBucket => Unit): GateState = (s.open, e.gate) match {
-          case (false, true) => // open edge: session starts WITH this event
-            GateState(open = true, s.sessionId + 1, 1L, e.v, e.v, e.v)
-          case (true, true) =>
-            s.copy(n = s.n + 1, sum = s.sum + e.v,
-              mn = math.min(s.mn, e.v), mx = math.max(s.mx, e.v))
-          case (true, false) => // close edge excludes its event
-            emit(CountBucket(k, s.sessionId, s.n, s.sum, s.mn, s.mx))
-            s.copy(open = false, n = 0L, sum = 0.0,
-              mn = Double.MaxValue, mx = Double.MinValue)
-          case (false, false) => s
-        }
+      new KeyedFold[String, GatedEvent, CountSliceState, CountBucket](
+        _.k, Ordering.by(e => (e.ts, e.seq)), CountSliceState.First.next) {
+        def step(k: String, s: CountSliceState, e: GatedEvent,
+                 emit: CountBucket => Unit): CountSliceState =
+          if (e.gate) s.add(e.v)
+          else if (s.n > 0) { emit(s.bucket(k)); s.next } // close edge excludes its event
+          else s
       })
   }
 }

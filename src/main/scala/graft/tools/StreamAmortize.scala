@@ -210,7 +210,7 @@ object StreamAmortize {
           // the state pass is the deployment-marginal cost; the
           // post-sink hop composition is a slice-sized batch job the
           // catalog entry measures separately
-          val agg = graft.streaming.SlicedHopping.slices(
+          val agg = graft.streaming.Streams.tumblingAgg(
             src, Seq("user_id"), "1 hour", "0 seconds",
             "n" -> count(lit(1)), "sv" -> Q.dsum(col("value")))
           val name = "amz_sl_" + System.nanoTime()

@@ -8,7 +8,8 @@ import graft.core._
 /** Randomized differential check of the multi-input bucket core: arbitrary
   * keyed two-stream inputs with colliding timestamps, tumbling resets —
   * engine output vs an in-memory brute force, for all three emit modes
-  * (`last`, `all`, `reduceByCycle`). Goldens pin the reference fixtures;
+  * (`reduce` = scespet `last`, `scan` = `all`, and `reduceByCycle`).
+  * Goldens pin the reference fixtures;
   * this pins the general contract.
   */
 // (ts, key, value): ts collides freely across and within streams —
@@ -40,7 +41,7 @@ class BucketsPropertySpec extends SparkSpec {
         .bind("a", as.toDF())("v" -> col("v"))
         .bind("b", bs.toDF())("v" -> col("v"))
         .reset(Slice.Tumbling(w))
-        .last(
+        .reduce(
           "sum_a" -> sum(Buckets.fromTag("a", col("v"))),
           "n_a" -> count(Buckets.fromTag("a", col("v"))),
           "sum_b" -> sum(Buckets.fromTag("b", col("v"))),
@@ -69,7 +70,7 @@ class BucketsPropertySpec extends SparkSpec {
         .bind("a", as.toDF())("v" -> col("v"))
         .bind("b", bs.toDF())("v" -> col("v"))
         .reset(Slice.Tumbling(w))
-        .all("run", sum(col("v")))
+        .scan("run", sum(col("v")))
         .select(col("seq"), col("run"))
         .as[(Long, Long)].collect().toMap
 

@@ -21,7 +21,7 @@ class BucketsSpec extends SparkSpec {
       .bind("x", xs)("v" -> col("x"))
       .bind("y", ys)("v" -> col("y"))
       .reset(Slice.Termination)
-      .last(
+      .reduce(
         "nx" -> count(Buckets.fromTag("x", col("v"))),
         "ny" -> count(Buckets.fromTag("y", col("v"))),
         "sum_all" -> sum(col("v")))
@@ -59,7 +59,7 @@ class BucketsSpec extends SparkSpec {
       .bind("x", xs)("v" -> col("x"))
       .bind("y", ys)("v" -> col("y"))
       .reset(Slice.Count(3))
-      .last("s" -> sum(col("v")))
+      .reduce("s" -> sum(col("v")))
       .orderBy("window_id").select("s").as[Long].collect().toSeq
     got shouldBe expected
   }
@@ -69,7 +69,7 @@ class BucketsSpec extends SparkSpec {
       .bind("x", xs)("v" -> col("x"))
       .bind("y", ys)("v" -> col("y"))
       .reset(Slice.Termination)
-      .all("run", sum(col("v")))
+      .scan("run", sum(col("v")))
       .orderBy("ts", "seq").select("run").as[Long].collect().toSeq
     // merged order by (ts, seq): x@0, y@0, x@1, x@2, y@2, x@3, x@4, y@4, x@5
     got shouldBe Seq(1L, 11L, 12L, 13L, 23L, 24L, 25L, 35L, 36L)
@@ -168,7 +168,7 @@ class BucketsSpec extends SparkSpec {
       .bind("a", a)("v" -> col("x"))
       .bind("b", b)("v" -> col("y"))
       .reset(Slice.Termination)
-      .last("s" -> sum(col("v")), "n" -> count(lit(1)))
+      .reduce("s" -> sum(col("v")), "n" -> count(lit(1)))
       .orderBy("k").select("k", "s", "n")
       .as[(String, Long, Long)].collect().toSeq
     got shouldBe Seq(("k1", 6L, 2L), ("k2", 2L, 1L))

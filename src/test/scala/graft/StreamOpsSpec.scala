@@ -4,7 +4,8 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.core._
 import graft.functions.Reducers
-import graft.streaming.{CountSlices, KeyedEvent}
+import graft.operators.Skew
+import graft.streaming.{CountSlices, KeyedEvent, SlicedHopping, Streams}
 
 /** EStream/KStream combinator goldens (map/filter/filterType/by/valueSet/
   * fold_all — TestSingleTerms, TestMultiTerms) and the order-dependent
@@ -140,5 +141,30 @@ class StreamOpsSpec extends SparkSpec {
         CountSlices(MemoryStream[KeyedEvent](spark).toDS(), n))
         .getMessage should include("positive slice size")
     }
+  }
+
+  test("an empty aggregate list fails fast and names the call") {
+    // not a `head of empty list` from inside the builder
+    val byName = KStream(trades, Seq("name"))
+    val bucketed = Buckets(Seq("name"))
+      .bind("t", trades)("p" -> col("price"))
+      .reset(Slice.Termination)
+    val slices = Streams.tumblingAgg(trades, Seq("name"), "2 seconds", "0 seconds",
+      "n" -> count(lit(1)))
+    val calls: Seq[(String, () => Any)] = Seq(
+      "reduceAll" -> (() => byName.reduceAll()),
+      "reduce" -> (() => byName.group(Slice.Count(2)).reduce()),
+      "reduce" -> (() => byName.window(col("qty") > 1).reduce()),
+      "reduce" -> (() => bucketed.reduce()),
+      "reduceByCycle" -> (() => bucketed.reduceByCycle(Nil, Seq("n" -> count(lit(1))))),
+      "reduceByCycle" -> (() => bucketed.reduceByCycle(Seq("n" -> count(lit(1))), Nil)),
+      "tumblingAgg" -> (() => Streams.tumblingAgg(trades, Seq("name"), "2 seconds", "0 seconds")),
+      "compose" -> (() => SlicedHopping.compose(slices, Seq("name"), 4000000L, 2000000L, 0L)),
+      "saltedAgg" -> (() => Skew.saltedAgg(trades, Seq("name"), 2, Nil, Seq("n" -> sum(col("n"))))))
+    for ((call, f) <- calls)
+      withClue(call) {
+        (the[IllegalArgumentException] thrownBy f())
+          .getMessage should include(s"$call needs at least one")
+      }
   }
 }

@@ -77,6 +77,51 @@ class StreamingSpec extends SparkSpec {
         col("sum"), col("mn"), col("mx"))
       .orderBy("k", "windowId").as[CountBucket].collect().toSeq
     streamed shouldBe batch
+
+    // the same feed with a seeded random gate through the three gated
+    // folds, bucket ids included; only buckets a fold has closed compare
+    // (a key's last bucket may still be open). Every ts is distinct here,
+    // so each atomic cycle is one event.
+    val gateRnd = new scala.util.Random(7)
+    val gated = sorted.map(e => GatedEvent(e.k, e.ts, e.seq, e.v, gateRnd.nextInt(3) == 0))
+    def drained(name: String,
+        fold: org.apache.spark.sql.Dataset[GatedEvent] => org.apache.spark.sql.Dataset[CountBucket])
+        : Seq[CountBucket] = {
+      val memG = MemoryStream[GatedEvent](spark)
+      memG.addData(gated.take(100): _*)
+      memG.addData(gated.slice(100, 200): _*)
+      memG.addData(gated.drop(200): _*)
+      runToCompletion(fold(memG.toDS()).writeStream.outputMode("append"), name)
+      spark.table(name).orderBy("k", "windowId").as[CountBucket].collect().toSeq
+    }
+    val byKey = gated.groupBy(_.k)
+    val triggers = byKey.map { case (k, es) => k -> es.count(_.gate).toLong }
+    val closes = byKey.map { case (k, es) =>
+      k -> es.sliding(2).count(p => p.size == 2 && p(0).gate && !p(1).gate).toLong
+    }
+    def closedBatch(sliced: Sliced, closed: CountBucket => Boolean): Seq[CountBucket] =
+      sliced
+        .reduce("n" -> count(lit(1)), "sum" -> sum(col("v")),
+          "mn" -> min(col("v")), "mx" -> max(col("v")))
+        .select(col("k"), col(sliced.id).as("windowId"), col("n"),
+          col("sum"), col("mn"), col("mx"))
+        .orderBy("k", "windowId").as[CountBucket].collect().toSeq
+        .filter(closed)
+    val gatedBatch = KStream(gated.toDF(), Seq("k"))
+    withClue("TriggerSlices AFTER") {
+      drained("triggerslices_after_prop", TriggerSlices.tagged(_)) shouldBe
+        closedBatch(gatedBatch.group(Slice.TriggerCol(col("gate"), Align.After)),
+          b => b.windowId < triggers(b.k))
+    }
+    withClue("TriggerSlices BEFORE") {
+      drained("triggerslices_before_prop", TriggerSlices.tagged(_, before = true)) shouldBe
+        closedBatch(gatedBatch.group(Slice.TriggerCol(col("gate"), Align.Before)),
+          b => b.windowId < triggers(b.k))
+    }
+    withClue("GatedWindows") {
+      drained("gatedwindows_prop", GatedWindows(_)) shouldBe
+        closedBatch(gatedBatch.window(col("gate")), b => b.windowId <= closes(b.k))
+    }
   }
 
   test("CepPattern: SEQ(click→purchase) within window, negation veto, " +
@@ -696,7 +741,7 @@ class StreamingSpec extends SparkSpec {
       val memS = MemoryStream[KeyedEvent](spark)
       memS.addData(events.take(200): _*)
       memS.addData(events.drop(200): _*)
-      val sl = SlicedHopping.slices(memS.toDF(), Seq("k"), stepS, "0 seconds",
+      val sl = Streams.tumblingAgg(memS.toDF(), Seq("k"), stepS, "0 seconds",
         "n" -> count(lit(1)), "sv" -> graft.queries.Q.dsum(col("v")))
       val name = s"hop_sliced_$widthUs"
       val sq = sl.writeStream.queryName(name).format("memory")

@@ -116,23 +116,26 @@ class WindowKernelSpec extends SparkSpec {
   test("hopping slices: NEGATIVE timestamps floor on both hop bounds (ADVICE r7)") {
     // pre-epoch axis: Spark `div` truncates toward zero, so w_max needs
     // the same floor correction as w_min — without it a negative-ts row
-    // gains a spurious extra window vs the floorDiv oracle (and DuckDB //)
+    // gains a spurious extra window vs the floorDiv oracle (and DuckDB //).
+    // A tumbling slice is the hop whose step is its width: same oracle.
     val ts = Seq(-21L, -15L, -14L, -7L, -3L, -1L, 0L, 2L, 6L)
     val rows = ts.zipWithIndex.map { case (t, i) => (t, i.toLong, 1) }
-    val (width, step) = (7L, 3L)
-    val expected = rows
-      .flatMap { case (t, _, v) =>
-        val wMin = Math.floorDiv(t - width, step) + 1
-        val wMax = Math.floorDiv(t, step)
-        (wMin to wMax).map(w => w -> v.toLong)
-      }
-      .groupBy(_._1).view.mapValues(_.map(_._2).sum).toSeq.sortBy(_._1)
-    val got = EStream(rows.toDF("ts", "seq", "v"))
-      .group(Slice.Hopping(width, step))
-      .reduce("s" -> sum(col("v")))
-      .orderBy("window_id")
-      .select("window_id", "s").as[(Long, Long)].collect().toSeq
-    got shouldBe expected
+    for ((slice, width, step) <- Seq(
+        (Slice.Hopping(7L, 3L), 7L, 3L), (Slice.Tumbling(7L), 7L, 7L))) {
+      val expected = rows
+        .flatMap { case (t, _, v) =>
+          val wMin = Math.floorDiv(t - width, step) + 1
+          val wMax = Math.floorDiv(t, step)
+          (wMin to wMax).map(w => w -> v.toLong)
+        }
+        .groupBy(_._1).view.mapValues(_.map(_._2).sum).toSeq.sortBy(_._1)
+      val got = EStream(rows.toDF("ts", "seq", "v"))
+        .group(slice)
+        .reduce("s" -> sum(col("v")))
+        .orderBy("window_id")
+        .select("window_id", "s").as[(Long, Long)].collect().toSeq
+      withClue(slice) { got shouldBe expected }
+    }
   }
 
   test("boolean window: open/close bracketed sums; close edge excludes its datum (WindowedReduce:55-58)") {
