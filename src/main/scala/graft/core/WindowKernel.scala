@@ -78,6 +78,9 @@ object Align {
   * order dependence inherited from the reference's single-threaded
   * semantics; Spark plans it as a single-partition window. Use keyed
   * variants at scale (the reference's own big examples are all keyed).
+  * On an input within the small-shuffle gate that is one file split,
+  * keyed or not, the key's exchange runs as a `Coalesce 1` in the scan's
+  * own task (`plans.SmallShuffleSinglePartition`).
   */
 object WindowKernel {
 

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.plans.SmallShuffleSinglePartition
+
 /** Distributed cumulative aggregation over a GLOBAL total order — the
   * two-pass prefix technique for scespet's unkeyed scans (`fold_all`,
   * `mapVector` cross-key totals), which otherwise plan as one-reducer
@@ -21,6 +23,11 @@ import org.apache.spark.sql.functions._
   * Non-associative folds (EWMA-style) keep the single-partition window —
   * that sequential dependency is semantic, not a plan choice.
   *
+  * An input within the small-shuffle gate
+  * (`plans.SmallShuffleSinglePartition.gate`: one AQE would coalesce into
+  * one partition anyway) runs the one ordered window the two passes
+  * reproduce instead, which over a one-split scan plans with no exchange.
+  *
   * Determinism note: both consumers of the range exchange (the running
   * window and the per-partition totals) are built from the identical
   * lineage, so Spark's exchange reuse executes the partitioning once —
@@ -36,9 +43,6 @@ object DistributedScan {
       tsCol: String,
       seqCol: String,
       aggs: Seq[(String, Column, String)]): DataFrame = {
-    val P = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val pid = "__scan_pid"
-
     def aggOf(cmb: String)(c: Column): Column = cmb match {
       case "sum" => sum(c)
       case "min" => min(c)
@@ -52,17 +56,28 @@ object DistributedScan {
       case "max" => greatest(run, off)
     }
 
+    // running values in (ts, seq) order within `part`
+    def running(in: DataFrame, part: Seq[Column]): DataFrame = {
+      val w = Window.partitionBy(part: _*).orderBy(col(tsCol), col(seqCol))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      aggs.foldLeft(in) { case (d, (out, contrib, cmb)) =>
+        d.withColumn(out, aggOf(cmb)(contrib).over(w))
+      }
+    }
+
+    // an input AQE would leave in one partition: the one ordered window
+    val conf = df.sparkSession.sessionState.conf
+    if (SmallShuffleSinglePartition.gate(conf)
+        .exists(df.queryExecution.optimizedPlan.stats.sizeInBytes <= _))
+      return running(df, Nil)
+
+    val pid = "__scan_pid"
     val parted = df
-      .repartitionByRange(P, col(tsCol), col(seqCol))
+      .repartitionByRange(conf.numShufflePartitions, col(tsCol), col(seqCol))
       .withColumn(pid, spark_partition_id())
 
     // pass 1: within-partition running values — parallel across partitions
-    val wIn = Window.partitionBy(col(pid))
-      .orderBy(col(tsCol), col(seqCol))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val withRun = aggs.foldLeft(parted) { case (d, (out, contrib, cmb)) =>
-      d.withColumn(out, aggOf(cmb)(contrib).over(wIn))
-    }
+    val withRun = running(parted, Seq(col(pid)))
 
     // pass 2: one total per partition → EXCLUSIVE prefix offsets (P rows)
     val totals = parted.groupBy(col(pid)).agg(

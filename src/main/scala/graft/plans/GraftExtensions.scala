@@ -16,8 +16,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * plans a shuffle as one partition wherever AQE's coalescing would leave
   * one (input, and every operator above it, at most
   * `coalescePartitions.minPartitionSize` under parallelism-first, else
-  * `advisoryPartitionSizeInBytes`) and drops the exchange after it; it
-  * adds no conf of its own.
+  * `advisoryPartitionSizeInBytes`), runs it as a `CoalesceExec(1)` with
+  * no stage of its own where its input is a one-split file scan, and
+  * drops the exchange after either; it adds no conf of its own.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -52,8 +53,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // (resolution phase: the builtin SessionWindowing rule must still see
     // and expand the SessionWindow expression this rule introduces)
     ext.injectResolutionRule(_ => RewriteGapSessions)
-    // small shuffles: one partition up front, no exchange after them
-    ext.injectQueryStagePrepRule(SmallShuffleSinglePartition)
+    // small shuffles: one partition up front, none over a one-split scan,
+    // no exchange after them
+    ext.injectQueryStagePrepRule(SmallShuffleSinglePartition(_))
   }
 }
 

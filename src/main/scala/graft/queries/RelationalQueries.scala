@@ -633,17 +633,22 @@ object RelationalQueries {
     // is impossible), so the verified contract is the published error
     // bound: |approx − exact| / exact within 10% (Spark rsd=2%, DuckDB's
     // HLL is sub-1% — both deterministic given the data). The exact count
-    // rides along so the driver pins the real value too.
+    // rides along so the driver pins the real value too. Both read one
+    // (event_type, user_id) frame: an HLL depends only on the distinct
+    // input set, and a distinct aggregate next to the sketch would make
+    // Spark's distinct rewrite shuffle a sketch buffer per (type, user).
     QueryDef(
       "ev_approx_distinct",
       (s, dir) =>
         Tables.events(s, dir)
+          .select("event_type", "user_id").distinct()
           .groupBy("event_type")
           .agg(
-            countDistinct(col("user_id")).as("n_exact"),
-            (abs(approx_count_distinct(col("user_id"), 0.02) -
-              countDistinct(col("user_id"))).cast("double") /
-              countDistinct(col("user_id")) <= 0.1).as("approx_ok"))
+            count(col("user_id")).as("n_exact"),
+            approx_count_distinct(col("user_id"), 0.02).as("approx"))
+          .select(col("event_type"), col("n_exact"),
+            (abs(col("approx") - col("n_exact")).cast("double") / col("n_exact") <= 0.1)
+              .as("approx_ok"))
           .orderBy("event_type"),
       Some("""SELECT event_type, count(DISTINCT user_id) AS n_exact,
              abs(approx_count_distinct(user_id) - count(DISTINCT user_id))::double

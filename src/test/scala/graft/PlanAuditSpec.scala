@@ -83,9 +83,9 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("ev_fold_all: distributed scan plan — range exchange, no global window") {
-    val df = SparkEntry.queries("ev_fold_all")(spark, dir)
-    df.collect()
-    val plan = df.queryExecution.executedPlan.toString
+    // at fixture scale the input is within the small-shuffle gate and runs
+    // the one ordered window (DistributedScanSpec)
+    val plan = atScale(finalPlan("ev_fold_all"))
     withClue(plan) {
       plan should include("rangepartitioning(ts")
       plan should include regex "windowspecdefinition\\(__scan_pid"
@@ -566,9 +566,7 @@ class PlanAuditSpec extends SparkSpec {
 
   test("li_pareto_share: the global revenue cumsum is the two-pass " +
     "DistributedScan — no single-partition window over the part universe") {
-    val df = SparkEntry.queries("li_pareto_share")(spark, dir)
-    df.collect()
-    val plan = df.queryExecution.executedPlan.toString
+    val plan = atScale(finalPlan("li_pareto_share"))
     withClue(plan) {
       // pass 1 windows partition by the scan pid, never empty-partition
       plan should include regex "windowspecdefinition\\(__scan_pid"
@@ -772,26 +770,30 @@ class PlanAuditSpec extends SparkSpec {
     }
   }
 
-  test("ev_slice_count: the final sort's exchange is one partition, not range partitions") {
+  test("ev_slice_count: no exchange in the final plan") {
     // collected, and written to parquet as Verify and the benchmark's cold
     // pass do: the write command's placeholder estimate must not count
     for (plan <- Seq(finalPlan("ev_slice_count"), writePlan("ev_slice_count"))) withClue(plan) {
-      plan should include("Exchange SinglePartition")
-      plan should not include "Exchange rangepartitioning("
-      // the key's hash exchange became one partition and the final
-      // orderBy's exchange went away: one exchange in the final plan
-      exchangeLine.findAllIn(finalSection(plan)).toSeq match {
-        case Seq(only) => only should startWith("Exchange SinglePartition")
-        case other => fail(s"expected one exchange, got $other")
-      }
+      // the key's hash exchange reads one partition, so it became a
+      // coalesce, and the final orderBy's exchange went away
+      finalSection(plan) should include("Coalesce 1")
+      exchangeLine.findAllIn(finalSection(plan)).toSeq shouldBe empty
     }
   }
 
   test("ev_slice_count: the action runs no range-sampling job") {
-    // the scan stage and the result stage; with coalescing off, the hash
-    // stage, the range-sampling job, the range stage and the result
-    jobsOf(SparkEntry.queries("ev_slice_count")(spark, dir).collect()) shouldBe 2
+    // one job; with coalescing off, the hash stage, the range-sampling
+    // job, the range stage and the result
+    jobsOf(SparkEntry.queries("ev_slice_count")(spark, dir).collect()) shouldBe 1
     jobsOf(ruleOff(SparkEntry.queries("ev_slice_count")(spark, dir))) shouldBe 4
+  }
+
+  test("each batch_history query runs one job, the three over a union of two " +
+    "one-split scans two") {
+    // a union's input is two partitions, so its key exchange stays a stage
+    val unions = Set("ev_asof_take", "ev_join_zip", "ev_bind_bucket")
+    val jobs = batchHistory.map(n => n -> jobsOf(SparkEntry.queries(n)(spark, dir).collect()))
+    jobs shouldBe batchHistory.map(n => n -> (if (unions(n)) 2 else 1))
   }
 
   test("the batch_history queries return the same rows in the same order with " +
@@ -822,7 +824,7 @@ class PlanAuditSpec extends SparkSpec {
     }
     // ...and the minimum partition size no longer gates it
     sliceCountPlan(parallelismFirst -> "false", minPartitionSize -> "1b") should
-      include("Exchange SinglePartition")
+      include("Coalesce 1")
   }
 
   test("under parallelism-first the gate is the minimum partition size, not the advisory size") {
@@ -832,7 +834,7 @@ class PlanAuditSpec extends SparkSpec {
       plan should include("Exchange rangepartitioning(")
       plan should not include "Exchange SinglePartition"
     }
-    sliceCountPlan(advisory -> "1b") should include("Exchange SinglePartition")
+    sliceCountPlan(advisory -> "1b") should include("Coalesce 1")
     spark.conf.get(parallelismFirst) shouldBe "true"
   }
 
@@ -953,14 +955,26 @@ class PlanAuditSpec extends SparkSpec {
 
   test("an orderBy over an empty and over a one-row frame returns the same rows " +
     "with the small-sort rule held off") {
+    // also a keyed window, whose exchange over the one-split scan is a coalesce
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{count, lit}
     val events = graft.core.Tables.events(spark, dir)
     val first = events.select("event_id").head().getLong(0)
     for ((label, keep) <- Seq("empty" -> (col("event_id") < 0),
         "one row" -> (col("event_id") === first))) withClue(label) {
-      def q = events.where(keep).orderBy(col("ts").desc, col("event_id"))
-      val on = q.collect().toSeq
-      on should have size (if (label == "empty") 0 else 1)
-      on shouldBe ruleOff(q)
+      def sorted = events.where(keep).orderBy(col("ts").desc, col("event_id"))
+      def keyed = events.where(keep)
+        .withColumn("n", count(lit(1)).over(Window.partitionBy("user_id").orderBy("ts", "event_id")))
+        .orderBy("event_id")
+      for ((name, q) <- Seq("sorted" -> (() => sorted), "keyed" -> (() => keyed))) withClue(name) {
+        val df = q()
+        val on = df.collect().toSeq
+        on should have size (if (label == "empty") 0 else 1)
+        on shouldBe ruleOff(q())
+        // the key's exchange over the one-split scan runs as a coalesce
+        if (name == "keyed")
+          finalSection(df.queryExecution.executedPlan.toString) should include("Coalesce 1")
+      }
     }
   }
 }
