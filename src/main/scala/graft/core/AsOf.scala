@@ -24,9 +24,9 @@ import org.apache.spark.sql.functions._
   * Scale: one shuffle on the key + one sort — the same cost profile as a
   * sort-merge join, fully parallel across keys. For an un-keyed as-of the
   * window is single-partition (inherent to the semantics); prefer keyed.
-  * The union reads two inputs, so even when each is a one-split scan
-  * within the small-shuffle gate the key's exchange stays a stage of one
-  * partition (`plans.SmallShuffleSinglePartition`).
+  * When each side is a one-split scan within the small-shuffle gate, the
+  * union and the key's exchange run as a `Coalesce 1` in one task, with
+  * no stage of their own (`plans.SmallShuffleSinglePartition`).
   */
 object AsOf {
 

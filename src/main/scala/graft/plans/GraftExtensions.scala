@@ -17,7 +17,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * one (input, and every operator above it, at most
   * `coalescePartitions.minPartitionSize` under parallelism-first, else
   * `advisoryPartitionSizeInBytes`), runs it as a `CoalesceExec(1)` with
-  * no stage of its own where its input is a one-split file scan, and
+  * no stage of its own where its input reads one-split file scans
+  * through narrow operators (a union of them too), and
   * drops the exchange after either; it adds no conf of its own.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
@@ -53,7 +54,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // (resolution phase: the builtin SessionWindowing rule must still see
     // and expand the SessionWindow expression this rule introduces)
     ext.injectResolutionRule(_ => RewriteGapSessions)
-    // small shuffles: one partition up front, none over a one-split scan,
+    // small shuffles: one partition up front, none over one-split scans,
     // no exchange after them
     ext.injectQueryStagePrepRule(SmallShuffleSinglePartition(_))
   }

@@ -22,8 +22,8 @@ import org.apache.spark.sql.internal.SQLConf
   * on the key, a sort and a window, and then the final `orderBy`'s range
   * exchange. On a small input AQE coalesces both exchanges to one task
   * each, so the second one costs a stage and a job (the range sampling
-  * pass) and buys no parallelism; over a one-split scan the first one
-  * also only copies the rows from one task into another. The rule
+  * pass) and buys no parallelism; over a small file scan the first one
+  * also only copies the rows from its scan tasks into one. The rule
   *
   *  1. turns a hash or range exchange that `EnsureRequirements` added into
   *     `SinglePartition` when the size of the nearest logical plan under
@@ -39,11 +39,13 @@ import org.apache.spark.sql.internal.SQLConf
   *     upstream stages materialize;
   *  2. replaces such an exchange, or a `SinglePartition` one that
   *     `EnsureRequirements` planned, under the same size test, by
-  *     `CoalesceExec(1)` when its input is one partition according to the
-  *     plan: unary, narrow operators down to a non-bucketed file scan with
-  *     no dynamic-pruning filter and one split (a union counts as the sum
-  *     of its children). The coalesce also reports `SinglePartition`, and
-  *     yields one partition for an empty input. An exchange keeps its
+  *     `CoalesceExec(1)` when its input reads file scans through narrow
+  *     operators: unary ones and unions, down to non-bucketed file scans
+  *     of one split each with no dynamic-pruning filter. The coalesce
+  *     runs those scans and the operators above them in one task (a union
+  *     of two such scans in one task, not two), also reports
+  *     `SinglePartition`, and yields one partition for an empty input.
+  *     An exchange keeps its
   *     stage where AQE reads its runtime size: when it occurs more than
   *     once in the plan (AQE reuses it), and when a join is above it (AQE
   *     re-plans the join, its build side too, from the sizes of its sides);
@@ -108,7 +110,7 @@ case class SmallShuffleSinglePartition(session: SparkSession) extends Rule[Spark
           e.child
         case e @ ShuffleExchangeExec(_: HashPartitioning | _: RangePartitioning | SinglePartition,
             child, ENSURE_REQUIREMENTS, _) if fitsAbove && small(child) =>
-          if (!joinAbove && splits(child).contains(1) && !shared(plan.canonicalized))
+          if (!joinAbove && narrowScan(child) && !shared(plan.canonicalized))
             CoalesceExec(1, child)
           else if (e.outputPartitioning == SinglePartition) e
           else {
@@ -122,17 +124,16 @@ case class SmallShuffleSinglePartition(session: SparkSession) extends Rule[Spark
     rewrite(plan, fitsAbove = true, joinAbove = false)
   }
 
-  // the partitions of a plan that reads file scans through unary, narrow
-  // operators and unions, or None where the plan does not say
-  private def splits(p: SparkPlan): Option[Int] = p match {
-    case s: FileSourceScanExec if !s.bucketedScan &&
-        !s.partitionFilters.exists(_.exists(_.isInstanceOf[PlanExpression[_]])) =>
-      Some(s.inputRDD.getNumPartitions)
-    case u: UnionExec =>
-      u.children.foldLeft(Option(0))((n, c) => n.zip(splits(c)).map { case (a, b) => a + b })
-    case _: Exchange => None
-    case u: UnaryExecNode => splits(u.child)
-    case _ => None
+  // whether a plan reads one-split file scans through unary, narrow
+  // operators and unions only
+  private def narrowScan(p: SparkPlan): Boolean = p match {
+    case s: FileSourceScanExec =>
+      !s.bucketedScan && s.inputRDD.getNumPartitions <= 1 &&
+        !s.partitionFilters.exists(_.exists(_.isInstanceOf[PlanExpression[_]]))
+    case u: UnionExec => u.children.forall(narrowScan)
+    case _: Exchange => false
+    case u: UnaryExecNode => narrowScan(u.child)
+    case _ => false
   }
 
   // a join's partitioning collection holds each side's; one single side

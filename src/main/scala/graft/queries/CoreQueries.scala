@@ -360,7 +360,7 @@ object CoreQueries {
     // Structured Streaming itself under the correctness gate.
     QueryDef(
       "stream_tumbling",
-      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
+      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.wideStreamPartitions(s)) {
         val schema = graft.core.Tables.cachedSchema(s, s"$dir/events.parquet")
         // the file stream source wants a directory: glob the one table file
         val src = s.readStream.schema(schema)
@@ -389,7 +389,7 @@ object CoreQueries {
     // each event to its two covering starts with exact integer arithmetic.
     QueryDef(
       "stream_sliding",
-      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
+      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.wideStreamPartitions(s)) {
         // keyed-topic ingest shape (VERDICT r14 #3, same playbook that
         // took stream_session_window 6.48→3.96 s at sf1): the corpus
         // arrives as ~cores parquet files hash-partitioned by user_id
@@ -448,7 +448,7 @@ object CoreQueries {
     // twin filters to full buckets.
     QueryDef(
       "stream_count_slices",
-      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
+      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.wideStreamPartitions(s)) {
         import s.implicits._
         // file-stream source, same pattern as stream_tumbling: the events
         // table flows through readStream — nothing is ever materialized on
@@ -541,7 +541,7 @@ object CoreQueries {
     // streaming aggregation EVICT state instead of holding it forever.
     QueryDef(
       "stream_late_drop",
-      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
+      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.wideStreamPartitions(s)) {
         // Memoized pre-split halves (StreamFixtures): the RECENT half (hi)
         // is fed first to drive the watermark, then the old half (lo)
         // arrives entirely behind it.
@@ -580,7 +580,7 @@ object CoreQueries {
     // trigger.
     QueryDef(
       "stream_trigger_slices",
-      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
+      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.wideStreamPartitions(s)) {
         import s.implicits._
         val schema = graft.core.Tables.cachedSchema(s, s"$dir/events.parquet")
         val src = s.readStream.schema(schema)
@@ -615,7 +615,7 @@ object CoreQueries {
     // oracle keeps exactly those.
     QueryDef(
       "stream_gated_windows",
-      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
+      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.wideStreamPartitions(s)) {
         import s.implicits._
         val schema = graft.core.Tables.cachedSchema(s, s"$dir/events.parquet")
         val src = s.readStream.schema(schema)
@@ -654,7 +654,7 @@ object CoreQueries {
     // (rendezvous). Same oracle as the batch twin ev_join_zip.
     QueryDef(
       "stream_zip_join",
-      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
+      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.wideStreamPartitions(s)) {
         import s.implicits._
         val schema = graft.core.Tables.cachedSchema(s, s"$dir/events.parquet")
         val src = s.readStream.schema(schema)
@@ -695,7 +695,7 @@ object CoreQueries {
     // (purchase). Oracle = the zip oracle restricted to such cycles.
     QueryDef(
       "stream_take_join",
-      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
+      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.wideStreamPartitions(s)) {
         import s.implicits._
         val schema = graft.core.Tables.cachedSchema(s, s"$dir/events.parquet")
         val src = s.readStream.schema(schema)
@@ -740,7 +740,7 @@ object CoreQueries {
     // list_reduce oracle as the batch ev_ewma.
     QueryDef(
       "stream_ewma",
-      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
+      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.wideStreamPartitions(s)) {
         import s.implicits._
         val schema = graft.core.Tables.cachedSchema(s, s"$dir/events.parquet")
         val src = s.readStream.schema(schema)
@@ -774,7 +774,7 @@ object CoreQueries {
     // oracle is the identical relational range join.
     QueryDef(
       "stream_stream_join",
-      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
+      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.wideStreamPartitions(s)) {
         val schema = graft.core.Tables.cachedSchema(s, s"$dir/events.parquet")
         def side(tpe: String, pfx: String) =
           s.readStream.schema(schema)
@@ -820,7 +820,7 @@ object CoreQueries {
     // arrival regardless.
     QueryDef(
       "stream_outer_join",
-      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
+      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.wideStreamPartitions(s)) {
         val schema = graft.core.Tables.cachedSchema(s, s"$dir/events.parquet")
         def side(tpe: String, pfx: String) =
           s.readStream.schema(schema)
@@ -1720,7 +1720,7 @@ object CoreQueries {
     // keys). Events duplicated at the source (same event_id) collapse.
     QueryDef(
       "stream_dedup_exact",
-      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
+      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.wideStreamPartitions(s)) {
         val schema = graft.core.Tables.cachedSchema(s, s"$dir/events.parquet")
         val src = s.readStream.schema(schema)
           .option("pathGlobFilter", "events.parquet").parquet(dir)
@@ -1877,7 +1877,7 @@ object CoreQueries {
     // in batch 2. Oracle: identical to the batch ev_cep_pattern.
     QueryDef(
       "stream_cep_pattern",
-      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
+      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.wideStreamPartitions(s)) {
         import s.implicits._
         val fx = StreamFixtures.eventsHalves(s, dir)
         val schema = StreamFixtures.eventsHalvesSchema(s, dir)
@@ -2011,7 +2011,7 @@ object CoreQueries {
     // keep accumulating before closing.
     QueryDef(
       "stream_session_paths",
-      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
+      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.wideStreamPartitions(s)) {
         import s.implicits._
         val fx = StreamFixtures.eventsHalves(s, dir)
         val schema = StreamFixtures.eventsHalvesSchema(s, dir)

@@ -1734,7 +1734,7 @@ object SimilarityQueries {
     // pair set — the streaming state machine must converge to it.
     QueryDef(
       "stream_semdedup",
-      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
+      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.wideStreamPartitions(s)) {
         import s.implicits._
         // corpus-sized coarse codebook FROZEN per JVM (offline constant)
         val cents = StreamFixtures.frozen("semdedup_cents|" + dir) {

@@ -14,11 +14,11 @@ import scala.jdk.CollectionConverters._
   *   1. [[withShufflePartitions]] — a stateful streaming operator commits
   *      one state store PER shuffle partition PER micro-batch (a
   *      stream-stream join commits four). At catalog volumes (~10⁴ rows)
-  *      32 partitions is pure store-commit overhead: the same query at 4
-  *      partitions does 8× fewer RocksDB/HDFS store load+commit cycles per
-  *      batch with identical results. On a real cluster the knob scales
-  *      with volume — the library takes it as configuration, the bench
-  *      pins it small.
+  *      32 partitions is pure store-commit overhead: the same query at
+  *      [[StreamPartitions]] (1) does 32× fewer RocksDB/HDFS store
+  *      load+commit cycles per batch with identical results. On a real
+  *      cluster the knob scales with volume — the library takes it as
+  *      configuration, the bench pins it small.
   *
   *   2. [[StreamFixtures]] — queries that exercise multi-batch semantics
   *      (late data, checkpoint restart, outer-join watermark eviction)
@@ -45,9 +45,11 @@ object StreamHarness {
     }
   }
 
-  /** Run `body` with `spark.sql.shuffle.partitions` set to `n`. The
-    * streaming state-store count scales with this setting; the batch
-    * catalog keeps the session default (local[32] ⇒ 32).
+  /** Run `body` with `spark.sql.shuffle.partitions` set to `n`. A
+    * stateful query takes its state-store count from this setting when it
+    * starts from an empty checkpoint; a restart keeps the count its offset
+    * log recorded. The batch catalog keeps the session default (as many
+    * shuffle partitions as `local[N]` has cores, `graft.LocalSession`).
     *
     * State-backend sweep knob (VERDICT r6 #8): SPARK_GRAFT_STATE_BACKEND=
     * rocksdb runs the WHOLE streaming catalog on the RocksDB provider; no
@@ -67,15 +69,23 @@ object StreamHarness {
   val RocksDbProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  /** Default partition count for the streaming catalog queries. 4 is the
-    * measured sweet spot at catalog volumes (state-store commits scale
-    * with partitions; micro-batch compute parallelism scales against
-    * them — see SCALE.md's streaming overhead audit). Env-tunable for
-    * sweeps: SPARK_GRAFT_STREAM_PARTITIONS.
+  /** Default state partition count for the streaming catalog queries
+    * and the benchmark's drains: 1. At catalog volumes (about 10³ rows
+    * per trigger) a state partition's fixed cost per trigger — its task's
+    * deserialization, the state serializer and deserializer projections
+    * that each task generates again, and the store's load and commit —
+    * outweighs its fold many times over (a JFR profile of the
+    * benchmark's stream_drain, executor samples at 4 partitions: 34%
+    * projection codegen, 13% task deserialization, 15% store load and
+    * commit, 1.4% the fold). One partition runs each trigger as one scan
+    * task and one stateful task; on 4 vCPUs stream_drain ran 20-22%
+    * less CPU and 10-12% more events per second at 1 partition than at
+    * 4 (SCALE.md). The store-heavy queries take [[wideStreamPartitions]].
+    * Env-tunable for sweeps: SPARK_GRAFT_STREAM_PARTITIONS.
     */
   val StreamPartitions: Int =
     sys.env.get("SPARK_GRAFT_STREAM_PARTITIONS") match {
-      case None => 4
+      case None => 1
       case Some(v) => v.toIntOption.filter(_ > 0).getOrElse(
         throw new IllegalArgumentException(
           s"SPARK_GRAFT_STREAM_PARTITIONS must be a positive int, got '$v'"))
@@ -144,13 +154,16 @@ object StreamHarness {
     q.processAllAvailable()
   }
 
-  /** Partition count for the STORE-HEAVY streaming queries
-    * (stream_session_window, stream_scd2): their per-batch state work is
-    * ~rows-sized (912k session inserts+evictions at sf1), so unlike the
-    * rest of the catalog — where 4 partitions minimizes the per-batch
-    * store-commit toll that dominates at KB state — the insert/evict scan
-    * itself is the cost and parallelizes with partitions (measured at
-    * sf1: session_window 5.8 → 4.4 s going 4 → 16). Capped at 16 so the
+  /** Partition count for the STORE-HEAVY streaming queries: those whose
+    * per-trigger state work is ~rows-sized. stream_session_window and
+    * stream_scd2 carry 912k session inserts+evictions per batch at sf1;
+    * the 18 catalog queries that ran slower at one partition than at 4
+    * (sf0.1 on 4 vCPUs, beyond the spread of the runs at 4) fold their
+    * whole input in one or two triggers. Unlike the rest of the
+    * catalog — where one partition minimizes the per-batch state-task
+    * toll that dominates at KB state — the state work itself is the
+    * cost and parallelizes with partitions (measured at sf1:
+    * session_window 5.8 → 4.4 s going 4 → 16). Capped at 16 so the
     * commit toll never dominates the small scales; an explicit
     * SPARK_GRAFT_STREAM_PARTITIONS sweep pin wins (backend/partition
     * sweeps must control the knob they sweep). Results are

@@ -2433,7 +2433,7 @@ object TextQueries {
     // replays the same fixture corpus.
     QueryDef(
       "stream_image_phash",
-      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
+      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.wideStreamPartitions(s)) {
         implicit val enc: Encoder[Multimodal.MediaRow] =
           Encoders.product[Multimodal.MediaRow]
         imageClips(s, dir) // ensure the fixture parquet exists

@@ -789,11 +789,17 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("each batch_history query runs one job, the three over a union of two " +
-    "one-split scans two") {
-    // a union's input is two partitions, so its key exchange stays a stage
-    val unions = Set("ev_asof_take", "ev_join_zip", "ev_bind_bucket")
+    "one-split scans included") {
+    // the union of the two scans runs in the coalesce's one task
     val jobs = batchHistory.map(n => n -> jobsOf(SparkEntry.queries(n)(spark, dir).collect()))
-    jobs shouldBe batchHistory.map(n => n -> (if (unions(n)) 2 else 1))
+    jobs shouldBe batchHistory.map(_ -> 1)
+    for (n <- Seq("ev_asof_take", "ev_join_zip", "ev_bind_bucket")) {
+      val plan = finalSection(finalPlan(n))
+      withClue(plan) {
+        plan should include("Coalesce 1")
+        exchangeLine.findAllIn(plan).toSeq shouldBe empty
+      }
+    }
   }
 
   test("the batch_history queries return the same rows in the same order with " +

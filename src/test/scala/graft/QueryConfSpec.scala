@@ -1,5 +1,14 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.{Seconds, Span}
+import graft.queries.StreamHarness
+
 /** Catalog query bodies leave the session conf and temp views as they
   * found them. Bench and Verify run the whole catalog on one session, so a
   * query that writes session conf changes what every later query runs
@@ -9,7 +18,8 @@ package graft
   * `StreamHarness.withConf`). The view case covers the streaming queries'
   * memory sinks (one temp view each, holding the result on the driver
   * heap; `StreamHarness.drain` drops it) and the SQL-surface queries'
-  * registered views.
+  * registered views. The layout case pins the state partition counts
+  * that the streaming queries take from `StreamHarness`.
   */
 class QueryConfSpec extends SparkSpec {
 
@@ -43,6 +53,41 @@ class QueryConfSpec extends SparkSpec {
       changed shouldBe empty
       spark.conf.getAll shouldBe initial
     } finally spark.conf.unset(provider)
+  }
+
+  test("a catalog drain runs at one state partition, a store-heavy one at " +
+    "min(16, cores)") {
+    assume(!sys.env.contains("SPARK_GRAFT_STREAM_PARTITIONS"), "a sweep pins the count")
+    StreamHarness.StreamPartitions shouldBe 1
+    val cores = spark.sparkContext.defaultParallelism
+    statePartitions("stream_funnel") shouldBe Set(1L)
+    statePartitions("stream_session_window") shouldBe Set(math.min(16, cores).toLong)
+  }
+
+  /** The state partition counts that the stateful triggers of catalog
+    * query `name` reported, over every stream its body ran. */
+  private def statePartitions(name: String): Set[Long] = {
+    val seen = new ConcurrentLinkedQueue[Long]
+    val ended = new AtomicInteger
+    val started = new AtomicInteger
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+        started.incrementAndGet()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        e.progress.stateOperators.foreach(op => seen.add(op.numShufflePartitions))
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+        ended.incrementAndGet()
+    }
+    spark.streams.addListener(listener)
+    try {
+      SparkEntry.queries(name)(spark, dir).collect()
+      // the bus delivers a stream's progress before its end, in order
+      eventually(timeout(Span(30, Seconds))) {
+        started.get should be > 0
+        ended.get shouldBe started.get
+      }
+    } finally spark.streams.removeListener(listener)
+    seen.asScala.toSet
   }
 
   test("query bodies leave the session temp views unchanged (stream_ and sql_)") {

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
+import graft.queries.StreamHarness
 import graft.streaming.{CountSlices, KeyedEvent}
 
 /** Checkpoint-recovery contract for the stateful streaming operators
@@ -20,7 +21,11 @@ import graft.streaming.{CountSlices, KeyedEvent}
   */
 class StreamResumeSpec extends SparkSpec {
 
-  test("count-slice state survives a query restart; straddling bucket closes exactly-once") {
+  /** Run the count-slice fixture over two incarnations, the first at
+    * `first` state partitions and the second at `second` (None: the
+    * session's count), and check the emissions after each: the state
+    * partition counts the second incarnation's triggers reported. */
+  private def countSliceResume(first: Option[Int], second: Option[Int]): Set[Long] = {
     val s = spark
     import s.implicits._
 
@@ -40,37 +45,53 @@ class StreamResumeSpec extends SparkSpec {
         .foreach(p => Files.copy(p,
           Paths.get(srcDir, half + "_" + p.getFileName.toString)))
 
-    def incarnation(): Unit = {
-      val in = s.readStream.schema(implicitly[org.apache.spark.sql.Encoder[KeyedEvent]].schema)
-        .parquet(srcDir).as[KeyedEvent]
-      val q = CountSlices(in, 10)
-        .writeStream.format("parquet")
-        .option("path", s"$root/out")
-        .option("checkpointLocation", s"$root/ckpt")
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
+    def incarnation(partitions: Option[Int]): Set[Long] = {
+      def run(): Set[Long] = {
+        val in = s.readStream.schema(implicitly[org.apache.spark.sql.Encoder[KeyedEvent]].schema)
+          .parquet(srcDir).as[KeyedEvent]
+        val q = CountSlices(in, 10)
+          .writeStream.format("parquet")
+          .option("path", s"$root/out")
+          .option("checkpointLocation", s"$root/ckpt")
+          .outputMode("append").start()
+        try q.processAllAvailable() finally q.stop()
+        q.recentProgress.flatMap(_.stateOperators.map(_.numShufflePartitions)).toSet
+      }
+      partitions.fold(run())(n => StreamHarness.withShufflePartitions(s, n)(run()))
     }
 
-    feed("h1"); incarnation()
-    val afterRun1 = s.read.parquet(s"$root/out")
-      .select("k", "windowId", "n", "sum").collect()
-    // run 1 saw 15 events/key: exactly bucket 0 closed, 5 events parked
-    afterRun1.length shouldBe 3
-    afterRun1.map(_.getLong(1)).toSet shouldBe Set(0L)
+    try {
+      feed("h1"); incarnation(first)
+      val afterRun1 = s.read.parquet(s"$root/out")
+        .select("k", "windowId", "n", "sum").collect()
+      // run 1 saw 15 events/key: exactly bucket 0 closed, 5 events parked
+      afterRun1.length shouldBe 3
+      afterRun1.map(_.getLong(1)).toSet shouldBe Set(0L)
 
-    feed("h2"); incarnation()
-    val finalRows = s.read.parquet(s"$root/out")
-      .select("k", "windowId", "n", "sum").collect()
-    finalRows.length shouldBe 6 // exactly-once: no re-emission of bucket 0
-    // bucket 1 spans the cut: events 11..20 → sum 11+…+20 = 155. Correct
-    // only if the 5 pre-cut events' partial state was restored.
-    finalRows.filter(_.getLong(1) == 1L).foreach { r =>
-      r.getLong(2) shouldBe 10L
-      r.getDouble(3) shouldBe 155.0
-    }
-
-    Files.walk(Paths.get(root)).iterator().asScala.toSeq.reverse
+      feed("h2")
+      val layout = incarnation(second)
+      val finalRows = s.read.parquet(s"$root/out")
+        .select("k", "windowId", "n", "sum").collect()
+      finalRows.length shouldBe 6 // exactly-once: no re-emission of bucket 0
+      // bucket 1 spans the cut: events 11..20 → sum 11+…+20 = 155. Correct
+      // only if the 5 pre-cut events' partial state was restored.
+      finalRows.filter(_.getLong(1) == 1L).foreach { r =>
+        r.getLong(2) shouldBe 10L
+        r.getDouble(3) shouldBe 155.0
+      }
+      layout
+    } finally Files.walk(Paths.get(root)).iterator().asScala.toSeq.reverse
       .foreach(Files.deleteIfExists(_))
+  }
+
+  test("count-slice state survives a query restart; straddling bucket closes exactly-once") {
+    countSliceResume(None, None)
+  }
+
+  test("a checkpoint written at 4 state partitions resumes at 4 under the default count") {
+    // Spark restores the count from the offset log, so a checkpoint of an
+    // older default keeps its layout and its state
+    countSliceResume(Some(4), Some(StreamHarness.StreamPartitions)) shouldBe Set(4L)
   }
 
   test("EWMA value-state survives a restart (RocksDB state)") {
