@@ -360,7 +360,7 @@ object CoreQueries {
     // Structured Streaming itself under the correctness gate.
     QueryDef(
       "stream_tumbling",
-      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.wideStreamPartitions(s)) {
+      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.CatalogStreamPartitions) {
         val schema = graft.core.Tables.cachedSchema(s, s"$dir/events.parquet")
         // the file stream source wants a directory: glob the one table file
         val src = s.readStream.schema(schema)
@@ -389,7 +389,7 @@ object CoreQueries {
     // each event to its two covering starts with exact integer arithmetic.
     QueryDef(
       "stream_sliding",
-      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.wideStreamPartitions(s)) {
+      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.CatalogStreamPartitions) {
         // keyed-topic ingest shape (VERDICT r14 #3, same playbook that
         // took stream_session_window 6.48→3.96 s at sf1): the corpus
         // arrives as ~cores parquet files hash-partitioned by user_id
@@ -448,7 +448,7 @@ object CoreQueries {
     // twin filters to full buckets.
     QueryDef(
       "stream_count_slices",
-      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.wideStreamPartitions(s)) {
+      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.CatalogStreamPartitions) {
         import s.implicits._
         // file-stream source, same pattern as stream_tumbling: the events
         // table flows through readStream — nothing is ever materialized on
@@ -489,7 +489,7 @@ object CoreQueries {
     // pipeline leans on across executor loss / planned restarts.
     QueryDef(
       "stream_checkpoint_resume",
-      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
+      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.CatalogStreamPartitions) {
         import s.implicits._
         // Pre-split halves are a per-JVM memoized fixture (StreamFixtures):
         // the timed run measures the two streaming incarnations, not
@@ -541,7 +541,7 @@ object CoreQueries {
     // streaming aggregation EVICT state instead of holding it forever.
     QueryDef(
       "stream_late_drop",
-      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.wideStreamPartitions(s)) {
+      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.CatalogStreamPartitions) {
         // Memoized pre-split halves (StreamFixtures): the RECENT half (hi)
         // is fed first to drive the watermark, then the old half (lo)
         // arrives entirely behind it.
@@ -580,7 +580,7 @@ object CoreQueries {
     // trigger.
     QueryDef(
       "stream_trigger_slices",
-      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.wideStreamPartitions(s)) {
+      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.CatalogStreamPartitions) {
         import s.implicits._
         val schema = graft.core.Tables.cachedSchema(s, s"$dir/events.parquet")
         val src = s.readStream.schema(schema)
@@ -615,7 +615,7 @@ object CoreQueries {
     // oracle keeps exactly those.
     QueryDef(
       "stream_gated_windows",
-      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.wideStreamPartitions(s)) {
+      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.CatalogStreamPartitions) {
         import s.implicits._
         val schema = graft.core.Tables.cachedSchema(s, s"$dir/events.parquet")
         val src = s.readStream.schema(schema)
@@ -654,7 +654,7 @@ object CoreQueries {
     // (rendezvous). Same oracle as the batch twin ev_join_zip.
     QueryDef(
       "stream_zip_join",
-      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.wideStreamPartitions(s)) {
+      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.CatalogStreamPartitions) {
         import s.implicits._
         val schema = graft.core.Tables.cachedSchema(s, s"$dir/events.parquet")
         val src = s.readStream.schema(schema)
@@ -695,7 +695,7 @@ object CoreQueries {
     // (purchase). Oracle = the zip oracle restricted to such cycles.
     QueryDef(
       "stream_take_join",
-      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.wideStreamPartitions(s)) {
+      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.CatalogStreamPartitions) {
         import s.implicits._
         val schema = graft.core.Tables.cachedSchema(s, s"$dir/events.parquet")
         val src = s.readStream.schema(schema)
@@ -740,7 +740,7 @@ object CoreQueries {
     // list_reduce oracle as the batch ev_ewma.
     QueryDef(
       "stream_ewma",
-      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.wideStreamPartitions(s)) {
+      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.CatalogStreamPartitions) {
         import s.implicits._
         val schema = graft.core.Tables.cachedSchema(s, s"$dir/events.parquet")
         val src = s.readStream.schema(schema)
@@ -774,7 +774,7 @@ object CoreQueries {
     // oracle is the identical relational range join.
     QueryDef(
       "stream_stream_join",
-      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.wideStreamPartitions(s)) {
+      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.CatalogStreamPartitions) {
         val schema = graft.core.Tables.cachedSchema(s, s"$dir/events.parquet")
         def side(tpe: String, pfx: String) =
           s.readStream.schema(schema)
@@ -820,7 +820,7 @@ object CoreQueries {
     // arrival regardless.
     QueryDef(
       "stream_outer_join",
-      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.wideStreamPartitions(s)) {
+      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.CatalogStreamPartitions) {
         val schema = graft.core.Tables.cachedSchema(s, s"$dir/events.parquet")
         def side(tpe: String, pfx: String) =
           s.readStream.schema(schema)
@@ -866,7 +866,7 @@ object CoreQueries {
     // batch Buckets.taggedUnion) — same oracle as ev_bind_bucket.
     QueryDef(
       "stream_bind_bucket",
-      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
+      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.CatalogStreamPartitions) {
         val schema = graft.core.Tables.cachedSchema(s, s"$dir/events.parquet")
         val src = s.readStream.schema(schema)
           .option("pathGlobFilter", "events.parquet").parquet(dir)
@@ -1298,7 +1298,7 @@ object CoreQueries {
     // admits every row exactly once.
     QueryDef(
       "stream_ingest_floor",
-      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
+      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.CatalogStreamPartitions) {
         val fxRoot = StreamFixtures.eventsKeyed(s, dir)
         val schema = StreamFixtures.eventsKeyedSchema(s, dir)
         val srcDir = StreamFixtures.scratchDir("graft_floor_src_")
@@ -1577,7 +1577,7 @@ object CoreQueries {
     // computed from.
     QueryDef(
       "stream_drift_kl",
-      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
+      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.CatalogStreamPartitions) {
         // reference mix FROZEN per JVM (offline-computed monitoring
         // baseline; see StreamFixtures.frozen)
         val ctRows = StreamFixtures.frozen("driftkl_ct|" + dir) {
@@ -1697,7 +1697,7 @@ object CoreQueries {
     // no state store — the dim is just a batch frame in the plan).
     QueryDef(
       "stream_static_join",
-      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
+      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.CatalogStreamPartitions) {
         val schema = graft.core.Tables.cachedSchema(s, s"$dir/events.parquet")
         // static dim: per-user tier derived once, batch-side
         val tiers = s.read.schema(schema)
@@ -1720,7 +1720,7 @@ object CoreQueries {
     // keys). Events duplicated at the source (same event_id) collapse.
     QueryDef(
       "stream_dedup_exact",
-      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.wideStreamPartitions(s)) {
+      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.CatalogStreamPartitions) {
         val schema = graft.core.Tables.cachedSchema(s, s"$dir/events.parquet")
         val src = s.readStream.schema(schema)
           .option("pathGlobFilter", "events.parquet").parquet(dir)
@@ -1877,7 +1877,7 @@ object CoreQueries {
     // in batch 2. Oracle: identical to the batch ev_cep_pattern.
     QueryDef(
       "stream_cep_pattern",
-      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.wideStreamPartitions(s)) {
+      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.CatalogStreamPartitions) {
         import s.implicits._
         val fx = StreamFixtures.eventsHalves(s, dir)
         val schema = StreamFixtures.eventsHalvesSchema(s, dir)
@@ -1928,7 +1928,7 @@ object CoreQueries {
     // time-split feed; oracle identical to the batch ev_cep_kleene.
     QueryDef(
       "stream_cep_kleene",
-      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
+      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.CatalogStreamPartitions) {
         import s.implicits._
         val fx = StreamFixtures.eventsHalves(s, dir)
         val schema = StreamFixtures.eventsHalvesSchema(s, dir)
@@ -1970,7 +1970,7 @@ object CoreQueries {
     // to the batch ev_funnel.
     QueryDef(
       "stream_funnel",
-      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
+      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.CatalogStreamPartitions) {
         import s.implicits._
         val fx = StreamFixtures.eventsHalves(s, dir)
         val schema = StreamFixtures.eventsHalvesSchema(s, dir)
@@ -2011,7 +2011,7 @@ object CoreQueries {
     // keep accumulating before closing.
     QueryDef(
       "stream_session_paths",
-      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.wideStreamPartitions(s)) {
+      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.CatalogStreamPartitions) {
         import s.implicits._
         val fx = StreamFixtures.eventsHalves(s, dir)
         val schema = StreamFixtures.eventsHalvesSchema(s, dir)
@@ -2057,7 +2057,7 @@ object CoreQueries {
     // identical to the batch ev_cohort_retention.
     QueryDef(
       "stream_cohort_retention",
-      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
+      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.CatalogStreamPartitions) {
         import s.implicits._
         val fx = StreamFixtures.eventsHalves(s, dir)
         val schema = StreamFixtures.eventsHalvesSchema(s, dir)
@@ -2113,7 +2113,7 @@ object CoreQueries {
     // reader state replay AND the streaming aggregation in one query.
     QueryDef(
       "stream_walk_dsv2",
-      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
+      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.CatalogStreamPartitions) {
         val src = s.readStream
           .format(classOf[graft.sources.v2.WalkDataSource].getName)
           .option("keys", "AUD,EUR,GBP,JPY").option("steps", "400")
@@ -2635,7 +2635,7 @@ object CoreQueries {
     // attribution at ingest with O(|campaigns|) state forever.
     QueryDef(
       "stream_interval_join",
-      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
+      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.CatalogStreamPartitions) {
         val bRow = Q.events(s, dir)
           .agg(min(col("ts")).as("tmin"), max(col("ts")).as("tmax")).head()
         val (tmin, tmax) = (bRow.getLong(0), bRow.getLong(1))

@@ -313,7 +313,7 @@ object DedupQueries {
     // machine must converge to the batch LSH candidate set.
     QueryDef(
       "stream_neardup_minhash",
-      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.wideStreamPartitions(s)) {
+      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.CatalogStreamPartitions) {
         import s.implicits._
         val schema = graft.core.Tables.cachedSchema(s, s"$dir/documents.parquet")
         // scanWide: shingling + 8 minhash sweeps dominate — parallelize

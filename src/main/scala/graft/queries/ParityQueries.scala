@@ -231,7 +231,7 @@ object ParityQueries {
     // window id below the key's max.
     QueryDef(
       "stream_trigger_slices_before",
-      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.wideStreamPartitions(s)) {
+      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.CatalogStreamPartitions) {
         import s.implicits._
         val schema = graft.core.Tables.cachedSchema(s, s"$dir/events.parquet")
         val src = s.readStream.schema(schema)

@@ -643,7 +643,7 @@ object SimilarityQueries {
     // occupancy. id_sum is the exact-integer membership checksum.
     QueryDef(
       "stream_ivf_append",
-      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
+      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.CatalogStreamPartitions) {
         val K = 8
         // quantizer FROZEN per JVM (StreamFixtures.frozen): the Lloyd
         // build is the offline training step of the serving pattern —
@@ -1492,7 +1492,7 @@ object SimilarityQueries {
     // (dotd norm, floor(x/sqrt(n2)·Q)).
     QueryDef(
       "stream_quality_probe",
-      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
+      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.CatalogStreamPartitions) {
         import s.implicits._
         graft.plans.DotD.register(s)
         val w = StreamFixtures.frozen("probe_w|" + dir) {
@@ -1734,7 +1734,7 @@ object SimilarityQueries {
     // pair set — the streaming state machine must converge to it.
     QueryDef(
       "stream_semdedup",
-      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.wideStreamPartitions(s)) {
+      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.CatalogStreamPartitions) {
         import s.implicits._
         // corpus-sized coarse codebook FROZEN per JVM (offline constant)
         val cents = StreamFixtures.frozen("semdedup_cents|" + dir) {

@@ -15,7 +15,7 @@ import scala.jdk.CollectionConverters._
   *      one state store PER shuffle partition PER micro-batch (a
   *      stream-stream join commits four). At catalog volumes (~10⁴ rows)
   *      32 partitions is pure store-commit overhead: the same query at
-  *      [[StreamPartitions]] (1) does 32× fewer RocksDB/HDFS store
+  *      [[CatalogStreamPartitions]] (4) does 8× fewer RocksDB/HDFS store
   *      load+commit cycles per batch with identical results. On a real
   *      cluster the knob scales with volume — the library takes it as
   *      configuration, the bench pins it small.
@@ -69,27 +69,36 @@ object StreamHarness {
   val RocksDbProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  /** Default state partition count for the streaming catalog queries
-    * and the benchmark's drains: 1. At catalog volumes (about 10³ rows
-    * per trigger) a state partition's fixed cost per trigger — its task's
+  /** State partition count for a stream drained one small file per
+    * trigger, such as the benchmark's drains (10³ rows a trigger): 1.
+    * There a state partition's fixed cost per trigger — its task's
     * deserialization, the state serializer and deserializer projections
     * that each task generates again, and the store's load and commit —
-    * outweighs its fold many times over (a JFR profile of the
-    * benchmark's stream_drain, executor samples at 4 partitions: 34%
-    * projection codegen, 13% task deserialization, 15% store load and
-    * commit, 1.4% the fold). One partition runs each trigger as one scan
-    * task and one stateful task; on 4 vCPUs stream_drain ran 20-22%
-    * less CPU and 10-12% more events per second at 1 partition than at
-    * 4 (SCALE.md). The store-heavy queries take [[wideStreamPartitions]].
-    * Env-tunable for sweeps: SPARK_GRAFT_STREAM_PARTITIONS.
+    * outweighs its fold many times over (a JFR profile of the benchmark's
+    * stream_drain, executor samples at 4 partitions: 34% projection
+    * codegen, 13% task deserialization, 15% store load and commit, 1.4%
+    * the fold). One partition runs each trigger as one scan task and one
+    * stateful task; on 4 vCPUs stream_drain ran 20-22% less CPU and
+    * 10-12% more events per second at 1 partition than at 4 (SCALE.md).
+    * Env-tunable for sweeps: SPARK_GRAFT_STREAM_PARTITIONS, which also
+    * pins [[CatalogStreamPartitions]] and [[wideStreamPartitions]].
     */
-  val StreamPartitions: Int =
-    sys.env.get("SPARK_GRAFT_STREAM_PARTITIONS") match {
-      case None => 1
-      case Some(v) => v.toIntOption.filter(_ > 0).getOrElse(
+  val StreamPartitions: Int = sweepPartitions.getOrElse(1)
+
+  /** State partition count for the streaming catalog queries: 4. Each
+    * admits its whole input, 10⁴-10⁵ rows at sf0.01-sf0.1, in one or two
+    * triggers, so its state work is rows-sized, not the per-trigger toll
+    * that [[StreamPartitions]] cuts; at sf0.1 on 4 vCPUs the 38 stream
+    * queries together ran no faster at 1 partition than at 4, and
+    * slower in four of five windows (SCALE.md).
+    */
+  val CatalogStreamPartitions: Int = sweepPartitions.getOrElse(4)
+
+  private def sweepPartitions: Option[Int] =
+    sys.env.get("SPARK_GRAFT_STREAM_PARTITIONS").map(v =>
+      v.toIntOption.filter(_ > 0).getOrElse(
         throw new IllegalArgumentException(
-          s"SPARK_GRAFT_STREAM_PARTITIONS must be a positive int, got '$v'"))
-    }
+          s"SPARK_GRAFT_STREAM_PARTITIONS must be a positive int, got '$v'")))
 
   /** Run `ds` into a memory sink under a unique name, drive it (by
     * default: process everything available) and stop it, then return the
@@ -154,16 +163,13 @@ object StreamHarness {
     q.processAllAvailable()
   }
 
-  /** Partition count for the STORE-HEAVY streaming queries: those whose
-    * per-trigger state work is ~rows-sized. stream_session_window and
-    * stream_scd2 carry 912k session inserts+evictions per batch at sf1;
-    * the 18 catalog queries that ran slower at one partition than at 4
-    * (sf0.1 on 4 vCPUs, beyond the spread of the runs at 4) fold their
-    * whole input in one or two triggers. Unlike the rest of the
-    * catalog — where one partition minimizes the per-batch state-task
-    * toll that dominates at KB state — the state work itself is the
-    * cost and parallelizes with partitions (measured at sf1:
-    * session_window 5.8 → 4.4 s going 4 → 16). Capped at 16 so the
+  /** Partition count for the STORE-HEAVY streaming queries
+    * (stream_session_window, stream_scd2): their per-batch state work is
+    * ~rows-sized (912k session inserts+evictions at sf1), so unlike the
+    * rest of the catalog — where [[CatalogStreamPartitions]] keeps the
+    * per-batch store-commit toll small at KB state — the insert/evict scan
+    * itself is the cost and parallelizes with partitions (measured at
+    * sf1: session_window 5.8 → 4.4 s going 4 → 16). Capped at 16 so the
     * commit toll never dominates the small scales; an explicit
     * SPARK_GRAFT_STREAM_PARTITIONS sweep pin wins (backend/partition
     * sweeps must control the knob they sweep). Results are
@@ -171,7 +177,7 @@ object StreamHarness {
     */
   def wideStreamPartitions(s: SparkSession): Int =
     if (sys.env.contains("SPARK_GRAFT_STREAM_PARTITIONS")) StreamPartitions
-    else math.max(StreamPartitions,
+    else math.max(CatalogStreamPartitions,
       math.min(16, s.sparkContext.defaultParallelism))
 
   /** Run `body` with the file-scan bin-packer closing a partition at

@@ -790,7 +790,7 @@ object TextQueries {
     // corpus the batch pass encodes.
     QueryDef(
       "stream_bpe_encode",
-      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
+      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.CatalogStreamPartitions) {
         // merge table FROZEN per JVM: trained once offline in a real
         // deployment, shipped to the ingest job as literals
         val merges = StreamFixtures.frozen("bpe_merges8|" + dir) {
@@ -1127,7 +1127,7 @@ object TextQueries {
     // pipeline_clean_corpus.
     QueryDef(
       "stream_clean_corpus",
-      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
+      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.CatalogStreamPartitions) {
         import s.implicits._
         val fx = StreamFixtures.docsHalves(s, dir)
         val schema = StreamFixtures.docsHalvesSchema(s, dir)
@@ -1184,7 +1184,7 @@ object TextQueries {
     // sf0.001–0.1 gates could not see the hole.
     QueryDef(
       "stream_clean_corpus_ttl",
-      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
+      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.CatalogStreamPartitions) {
         import s.implicits._
         // ADVICE r11: the oracle's closed form (the {grp0,grp2}-only
         // re-emit at batch 3) requires the NO-DATA micro-batch after
@@ -1370,7 +1370,7 @@ object TextQueries {
     // pure count.
     QueryDef(
       "stream_decontaminate",
-      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
+      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.CatalogStreamPartitions) {
         def grams8(toks: Column): Column = array_distinct(
           transform(
             sequence(lit(1), greatest(size(toks) - 7, lit(0))),
@@ -2308,7 +2308,7 @@ object TextQueries {
     // the within-shard order swapped from len-desc to id).
     QueryDef(
       "stream_seq_pack",
-      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
+      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.CatalogStreamPartitions) {
         import s.implicits._
         val fx = StreamFixtures.docsHalves(s, dir)
         val schema = StreamFixtures.docsHalvesSchema(s, dir)
@@ -2367,7 +2367,7 @@ object TextQueries {
 
     QueryDef(
       "stream_seq_pack_s0",
-      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
+      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.CatalogStreamPartitions) {
         import s.implicits._
         val fx = StreamFixtures.docsHalves(s, dir)
         val schema = StreamFixtures.docsHalvesSchema(s, dir)
@@ -2433,7 +2433,7 @@ object TextQueries {
     // replays the same fixture corpus.
     QueryDef(
       "stream_image_phash",
-      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.wideStreamPartitions(s)) {
+      (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.CatalogStreamPartitions) {
         implicit val enc: Encoder[Multimodal.MediaRow] =
           Encoders.product[Multimodal.MediaRow]
         imageClips(s, dir) // ensure the fixture parquet exists

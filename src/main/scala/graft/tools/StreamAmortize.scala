@@ -196,7 +196,7 @@ object StreamAmortize {
     }
 
   private def measureSliding(s: SparkSession, dir: String, k: Int): Seq[Double] =
-    StreamHarness.withShufflePartitions(s, StreamHarness.StreamPartitions) {
+    StreamHarness.withShufflePartitions(s, StreamHarness.CatalogStreamPartitions) {
       val ev = graft.core.Tables.events(s, dir)
         .select(col("event_id"), col("user_id"), col("value"),
           graft.core.Tables.tsUsExpr(

@@ -55,13 +55,13 @@ class QueryConfSpec extends SparkSpec {
     } finally spark.conf.unset(provider)
   }
 
-  test("a catalog drain runs at one state partition, a store-heavy one at " +
-    "min(16, cores)") {
+  test("the drains' state partition count is 1, a catalog query runs at 4, " +
+    "a store-heavy one at max(4, min(16, cores))") {
     assume(!sys.env.contains("SPARK_GRAFT_STREAM_PARTITIONS"), "a sweep pins the count")
     StreamHarness.StreamPartitions shouldBe 1
     val cores = spark.sparkContext.defaultParallelism
-    statePartitions("stream_funnel") shouldBe Set(1L)
-    statePartitions("stream_session_window") shouldBe Set(math.min(16, cores).toLong)
+    statePartitions("stream_funnel") shouldBe Set(4L)
+    statePartitions("stream_session_window") shouldBe Set(math.max(4, math.min(16, cores)).toLong)
   }
 
   /** The state partition counts that the stateful triggers of catalog

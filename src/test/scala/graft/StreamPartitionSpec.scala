@@ -9,11 +9,12 @@ import graft.streaming._
   * other) that the gates and the take join's sides read. */
 final case class FeedEvent(k: String, ts: Long, seq: Long, v: Double, kind: Int)
 
-/** The streaming catalog and the benchmark's drains run their stateful
-  * operators at [[StreamHarness.StreamPartitions]] state partitions, and
-  * Verify checks them only there. The six operators the benchmark drains
-  * must give the same sink rows at any count: each drains one feed, one
-  * file per trigger, at 1 state partition and at 4.
+/** The benchmark's drains run their stateful operators at
+  * [[StreamHarness.StreamPartitions]] (1) state partitions and the
+  * streaming catalog at [[StreamHarness.CatalogStreamPartitions]] (4), and
+  * Verify checks the catalog only there. The six operators the benchmark
+  * drains must give the same sink rows at any count: each drains one
+  * feed, one file per trigger, at 1 state partition and at 4.
   */
 class StreamPartitionSpec extends SparkSpec {
   import spark.implicits._
