@@ -86,11 +86,10 @@ object StreamHarness {
   val StreamPartitions: Int = sweepPartitions.getOrElse(1)
 
   /** State partition count for the streaming catalog queries: 4. Each
-    * admits its whole input, 10⁴-10⁵ rows at sf0.01-sf0.1, in one or two
-    * triggers, so its state work is rows-sized, not the per-trigger toll
-    * that [[StreamPartitions]] cuts; at sf0.1 on 4 vCPUs the 38 stream
-    * queries together ran no faster at 1 partition than at 4, and
-    * slower in four of five windows (SCALE.md).
+    * admits its whole input table in one or two triggers, not a small
+    * file per trigger. With all 38 at 1 partition, their sf0.1 subtotal
+    * on 4 vCPUs read +0.6% and +11.1% against 4 in two windows, so the
+    * catalog keeps the count it had (SCALE.md).
     */
   val CatalogStreamPartitions: Int = sweepPartitions.getOrElse(4)
 
