@@ -25,7 +25,6 @@ import org.apache.spark.sql.functions._
   */
 object Packing {
 
-  final case class Item(id: Long, len: Int)
   final case class ShardedItem(shard: Int, id: Long, len: Int)
   final case class Packed(shard: Int, bin: Long, id: Long, len: Int)
   final case class PackedAt(shard: Int, bin: Long, id: Long, len: Int, start: Int)

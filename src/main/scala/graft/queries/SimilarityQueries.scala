@@ -253,6 +253,19 @@ object SimilarityQueries {
            (acc, x) -> acc + x) > 0 THEN ${1L << p} ELSE 0 END"""
     }.mkString(" + ")
 
+  /** Oracle of knn_brute and its twin sql_cosine_topk. */
+  private val cosineTopkOracle = s"""WITH $embSql,
+             q AS (SELECT vec_id AS q_id, v AS qv, n2 AS qn2 FROM emb WHERE vec_id < 3),
+             scored AS (
+               SELECT q_id, vec_id,
+                 ${dotSql("qv", "v")} / (sqrt(qn2) * sqrt(n2)) AS cos
+               FROM q, emb WHERE vec_id <> q_id)
+             SELECT q_id, rk, vec_id, cos
+             FROM (SELECT *, row_number() OVER (
+                     PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rk
+                   FROM scored)
+             WHERE rk <= 5 ORDER BY q_id, rk"""
+
   val defs: Seq[QueryDef] = Seq(
 
     // Exact cosine top-5 for query vectors 0..2: broadcast the 3 queries,
@@ -273,17 +286,7 @@ object SimilarityQueries {
           .select("q_id", "rk", "vec_id", "cos")
           .orderBy("q_id", "rk")
       },
-      Some(s"""WITH $embSql,
-             q AS (SELECT vec_id AS q_id, v AS qv, n2 AS qn2 FROM emb WHERE vec_id < 3),
-             scored AS (
-               SELECT q_id, vec_id,
-                 ${dotSql("qv", "v")} / (sqrt(qn2) * sqrt(n2)) AS cos
-               FROM q, emb WHERE vec_id <> q_id)
-             SELECT q_id, rk, vec_id, cos
-             FROM (SELECT *, row_number() OVER (
-                     PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rk
-                   FROM scored)
-             WHERE rk <= 5 ORDER BY q_id, rk""")),
+      Some(cosineTopkOracle)),
 
     // LSH bucket histogram: verifies the bucketing map itself.
     QueryDef(
@@ -1328,17 +1331,7 @@ object SimilarityQueries {
              WHERE rk <= 5 ORDER BY q_id, rk""")
         finally s.catalog.dropTempView("graft_emb")
       },
-      Some(s"""WITH $embSql,
-             q AS (SELECT vec_id AS q_id, v AS qv, n2 AS qn2 FROM emb WHERE vec_id < 3),
-             scored AS (
-               SELECT q_id, vec_id,
-                 ${dotSql("qv", "v")} / (sqrt(qn2) * sqrt(n2)) AS cos
-               FROM q, emb WHERE vec_id <> q_id)
-             SELECT q_id, rk, vec_id, cos
-             FROM (SELECT *, row_number() OVER (
-                     PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rk
-                   FROM scored)
-             WHERE rk <= 5 ORDER BY q_id, rk""")),
+      Some(cosineTopkOracle)),
 
     // Per-label corpus stats: count + mean vector norm (decimal-exact sum
     // of identically-computed doubles → deterministic mean).
@@ -1503,8 +1496,9 @@ object SimilarityQueries {
           graft.operators.LinearProbe.train(e, ProbeK, ProbeD, ProbeSteps)
         }
         val bw = s.sparkContext.broadcast(w)
-        val fx = StreamFixtures.embHalves(s, dir)
-        val schema = StreamFixtures.embHalvesSchema(s, dir)
+        val fx = StreamFixtures.halves(dir, "embeddings", "vec_id")(
+          s.read.parquet(s"$dir/embeddings.parquet"))
+        val schema = StreamFixtures.halvesSchema(s, fx)
         // batch 1: low-id half; batch 2: counts accumulate
         StreamHarness.drainFeed(fx, Seq("lo", "hi"), "complete") { srcDir =>
           s.readStream.schema(schema).parquet(srcDir)

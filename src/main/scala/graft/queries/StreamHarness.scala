@@ -51,10 +51,10 @@ object StreamHarness {
     * log recorded. The batch catalog keeps the session default (as many
     * shuffle partitions as `local[N]` has cores, `graft.LocalSession`).
     *
-    * State-backend sweep knob (VERDICT r6 #8): SPARK_GRAFT_STATE_BACKEND=
+    * State-backend switch (VERDICT r6 #8): SPARK_GRAFT_STATE_BACKEND=
     * rocksdb runs the WHOLE streaming catalog on the RocksDB provider; no
     * query pins a backend itself. Results must be backend-independent —
-    * the sweep re-checks every hash; SCALE.md records the per-backend
+    * a RocksDB run re-checks every hash; SCALE.md records the per-backend
     * toll.
     */
   def withShufflePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
@@ -80,10 +80,8 @@ object StreamHarness {
     * the fold). One partition runs each trigger as one scan task and one
     * stateful task; on 4 vCPUs stream_drain ran 20-22% less CPU and
     * 10-12% more events per second at 1 partition than at 4 (SCALE.md).
-    * Env-tunable for sweeps: SPARK_GRAFT_STREAM_PARTITIONS, which also
-    * pins [[CatalogStreamPartitions]] and [[wideStreamPartitions]].
     */
-  val StreamPartitions: Int = sweepPartitions.getOrElse(1)
+  val StreamPartitions: Int = 1
 
   /** State partition count for the streaming catalog queries: 4. Each
     * admits its whole input table in one or two triggers, not a small
@@ -91,13 +89,7 @@ object StreamHarness {
     * on 4 vCPUs read +0.6% and +11.1% against 4 in two windows, so the
     * catalog keeps the count it had (SCALE.md).
     */
-  val CatalogStreamPartitions: Int = sweepPartitions.getOrElse(4)
-
-  private def sweepPartitions: Option[Int] =
-    sys.env.get("SPARK_GRAFT_STREAM_PARTITIONS").map(v =>
-      v.toIntOption.filter(_ > 0).getOrElse(
-        throw new IllegalArgumentException(
-          s"SPARK_GRAFT_STREAM_PARTITIONS must be a positive int, got '$v'")))
+  val CatalogStreamPartitions: Int = 4
 
   /** Run `ds` into a memory sink under a unique name, drive it (by
     * default: process everything available) and stop it, then return the
@@ -169,15 +161,11 @@ object StreamHarness {
     * per-batch store-commit toll small at KB state — the insert/evict scan
     * itself is the cost and parallelizes with partitions (measured at
     * sf1: session_window 5.8 → 4.4 s going 4 → 16). Capped at 16 so the
-    * commit toll never dominates the small scales; an explicit
-    * SPARK_GRAFT_STREAM_PARTITIONS sweep pin wins (backend/partition
-    * sweeps must control the knob they sweep). Results are
+    * commit toll never dominates the small scales. Results are
     * partition-count independent (CPUS=7 gate).
     */
   def wideStreamPartitions(s: SparkSession): Int =
-    if (sys.env.contains("SPARK_GRAFT_STREAM_PARTITIONS")) StreamPartitions
-    else math.max(CatalogStreamPartitions,
-      math.min(16, s.sparkContext.defaultParallelism))
+    math.max(CatalogStreamPartitions, math.min(16, s.sparkContext.defaultParallelism))
 
   /** Run `body` with the file-scan bin-packer closing a partition at
     * every file. The pre-split keyed fixtures
@@ -251,33 +239,39 @@ object StreamFixtures {
     }
   }
 
-  /** The events table split into two single-file parquet halves by event
-    * time: `lo/` (ts ≤ mid) and `hi/` (ts > mid), columns exactly
-    * [[graft.core.Tables.events]] (µs ts + seq). Built once per (dir) per
-    * JVM; multi-batch streaming queries copy these files into fresh
-    * per-run source dirs (file copies, no Spark jobs).
+  /** Table `table` of `dir`, read as `frame`, split at the midpoint of
+    * its integer column `column` into two single-file parquet halves:
+    * `lo/` (column ≤ mid) and `hi/` (column > mid), with mid =
+    * min + (max - min) div 2. Built once per (table, dir) per JVM;
+    * multi-batch streaming queries copy these files into fresh per-run
+    * source dirs (file copies, no Spark jobs). The catalog splits the
+    * events by event time (µs `ts` of [[graft.core.Tables.events]]), and
+    * the documents and embeddings by id, so a stream that admits the
+    * lower ids first keeps the batch keep-min-id rule of first-wins dedup.
     *
     * One file per half ⇒ one deterministic micro-batch per feed. (The
     * per-key-ordered-source contract: a hash-partitioned multi-file half
-    * could be admitted across batches with ts ranges interleaved. This
+    * could be admitted across batches with ranges interleaved. This
     * coalesce is test-fixture generation, not an engine path — a real
     * deployment's Kafka topic is keyed.)
     */
-  def eventsHalves(s: SparkSession, dir: String): String = cache.synchronized {
-    cache.getOrElseUpdate("events_halves|" + dir, {
-      val ev = graft.core.Tables.events(s, dir)
-      val r0 = ev.agg(min("ts"), max("ts")).head()
-      val mid = r0.getLong(0) + (r0.getLong(1) - r0.getLong(0)) / 2
-      val root = Files.createTempDirectory("graft_fx_events_").toString
-      ev.filter(col("ts") <= mid).coalesce(1).write.parquet(s"$root/lo")
-      ev.filter(col("ts") > mid).coalesce(1).write.parquet(s"$root/hi")
-      root
-    })
-  }
+  def halves(dir: String, table: String, column: String)(frame: => DataFrame): String =
+    cache.synchronized {
+      cache.getOrElseUpdate(s"halves|$table|$dir", {
+        val d = frame
+        val r0 = d.agg(min(column), max(column)).head()
+        val (lo, hi) = (r0.getAs[Number](0).longValue, r0.getAs[Number](1).longValue)
+        val mid = lo + (hi - lo) / 2
+        val root = Files.createTempDirectory(s"graft_fx_${table}_").toString
+        d.filter(col(column) <= mid).coalesce(1).write.parquet(s"$root/lo")
+        d.filter(col(column) > mid).coalesce(1).write.parquet(s"$root/hi")
+        root
+      })
+    }
 
-  /** Schema of the fixture halves (= Tables.events schema). */
-  def eventsHalvesSchema(s: SparkSession, dir: String) =
-    graft.core.Tables.cachedSchema(s, eventsHalves(s, dir) + "/lo")
+  /** Schema of the [[halves]] under fixture root `root` (= its table's). */
+  def halvesSchema(s: SparkSession, root: String) =
+    graft.core.Tables.cachedSchema(s, root + "/lo")
 
   /** The orders table split into two halves by o_orderdate (change-log
     * time) — the SCD2 streaming twin feeds these to prove an interval
@@ -315,25 +309,6 @@ object StreamFixtures {
   def ordersHalvesSchema(s: SparkSession, dir: String) =
     graft.core.Tables.cachedSchema(s, ordersHalves(s, dir) + "/lo")
 
-  /** The documents table split by doc_id median — the streaming corpus
-    * pipeline feeds lower ids first, so first-wins dedup across batches
-    * equals the batch keep-min-doc_id rule.
-    */
-  def docsHalves(s: SparkSession, dir: String): String = cache.synchronized {
-    cache.getOrElseUpdate("docs_halves|" + dir, {
-      val d = s.read.parquet(s"$dir/documents.parquet")
-      val mid = d.agg((min("doc_id") + max("doc_id")) / 2).head().getDouble(0)
-      val root = Files.createTempDirectory("graft_fx_docs_").toString
-      d.filter(col("doc_id") <= mid).coalesce(1).write.parquet(s"$root/lo")
-      d.filter(col("doc_id") > mid).coalesce(1).write.parquet(s"$root/hi")
-      root
-    })
-  }
-
-  /** Schema of the documents fixture halves. */
-  def docsHalvesSchema(s: SparkSession, dir: String) =
-    graft.core.Tables.cachedSchema(s, docsHalves(s, dir) + "/lo")
-
   /** The documents table split into the FOUR deterministic batches of the
     * TTL-registry gate (`stream_clean_corpus_ttl`): grp = doc_id % 3 →
     * b1/b2/b3 with constant event times T1 &lt; T2 &lt; T3, plus b4 = the
@@ -359,19 +334,6 @@ object StreamFixtures {
   /** Schema of the TTL-gate batches (documents + event-time ts). */
   def docsTtlBatchesSchema(s: SparkSession, dir: String) =
     graft.core.Tables.cachedSchema(s, docsTtlBatches(s, dir) + "/b1")
-
-  def embHalves(s: SparkSession, dir: String): String = cache.synchronized {
-    cache.getOrElseUpdate("emb_halves|" + dir, {
-      val d = s.read.parquet(s"$dir/embeddings.parquet")
-      val mid = d.agg((min("vec_id") + max("vec_id")) / 2).head().getDouble(0)
-      val root = Files.createTempDirectory("graft_fx_emb_").toString
-      d.filter(col("vec_id") <= mid).coalesce(1).write.parquet(s"$root/lo")
-      d.filter(col("vec_id") > mid).coalesce(1).write.parquet(s"$root/hi")
-      root
-    })
-  }
-  def embHalvesSchema(s: SparkSession, dir: String) =
-    graft.core.Tables.cachedSchema(s, embHalves(s, dir) + "/lo")
 
   /** The events table hash-partitioned by user_id into one parquet file
     * per core under `keyed/` — the KEYED-TOPIC ingest shape (VERDICT r13

@@ -442,6 +442,39 @@ object TextQueries {
 
   private def sqlSet(set: Seq[String]): String = set.map("'" + _ + "'").mkString("(", ",", ")")
 
+  /** Oracle of pipeline_clean_corpus and its twin stream_clean_corpus. */
+  private val cleanCorpusOracle = s"""WITH quality AS (
+             SELECT *, len(string_split(text, ' ')) AS n_tokens
+             FROM documents WHERE len(string_split(text, ' ')) BETWEEN 20 AND 1000),
+           survivors AS (
+             SELECT * FROM (
+               SELECT *, row_number() OVER (
+                 PARTITION BY ${Q.hash60Sql("text")} ORDER BY doc_id) AS rn
+               FROM quality)
+             WHERE rn = 1)
+           SELECT lang, count(*) AS n_docs,
+             sum(n_tokens::decimal(38,6))::bigint AS total_tokens
+           FROM survivors GROUP BY lang ORDER BY lang"""
+
+  /** Oracle of doc_decontaminate and its twins doc_decontaminate_bloom and
+    * stream_decontaminate. */
+  private val decontaminateOracle = s"""WITH base AS (
+             SELECT doc_id,
+               list_distinct([${Q.hash60Sql("array_to_string(t[i:i+7], ' ')")}
+                 for i in range(1, greatest(len(t) - 6, 1))]) AS hs
+             FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents)
+             WHERE len(t) >= 8),
+           bench AS (
+             SELECT DISTINCT unnest(hs) AS h FROM base WHERE doc_id % 20 = 0),
+           corp AS (
+             SELECT doc_id, unnest(hs) AS h FROM base WHERE doc_id % 20 <> 0)
+           SELECT doc_id, count(*) AS n_hits
+           FROM corp JOIN bench USING (h)
+           GROUP BY doc_id ORDER BY doc_id"""
+
+  /** Oracle of mm_image_phash and its twin stream_image_phash. */
+  private val imagePhashOracle = s"""$imageFpCte SELECT id, phash FROM ph ORDER BY id"""
+
   val defs: Seq[QueryDef] = Seq(
 
     // Token counting: pure per-row map, zero shuffles.
@@ -1103,18 +1136,7 @@ object TextQueries {
             Q.dsum(col("n_tokens")).cast("long").as("total_tokens"))
           .orderBy("lang")
       },
-      Some(s"""WITH quality AS (
-             SELECT *, len(string_split(text, ' ')) AS n_tokens
-             FROM documents WHERE len(string_split(text, ' ')) BETWEEN 20 AND 1000),
-           survivors AS (
-             SELECT * FROM (
-               SELECT *, row_number() OVER (
-                 PARTITION BY ${Q.hash60Sql("text")} ORDER BY doc_id) AS rn
-               FROM quality)
-             WHERE rn = 1)
-           SELECT lang, count(*) AS n_docs,
-             sum(n_tokens::decimal(38,6))::bigint AS total_tokens
-           FROM survivors GROUP BY lang ORDER BY lang""")),
+      Some(cleanCorpusOracle)),
 
     // STREAMING corpus cleaning: the same gate → dedup → stats pipeline on
     // a LIVE ingest feed. The dedup stage is streaming.KeepFirst —
@@ -1129,8 +1151,9 @@ object TextQueries {
       "stream_clean_corpus",
       (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.CatalogStreamPartitions) {
         import s.implicits._
-        val fx = StreamFixtures.docsHalves(s, dir)
-        val schema = StreamFixtures.docsHalvesSchema(s, dir)
+        val fx = StreamFixtures.halves(dir, "documents", "doc_id")(
+          s.read.parquet(s"$dir/documents.parquet"))
+        val schema = StreamFixtures.halvesSchema(s, fx)
         // batch 1: low doc_ids seed the registry
         // batch 2: cross-batch dups suppressed
         StreamHarness.drainFeed(fx, Seq("lo", "hi")) { srcDir =>
@@ -1147,18 +1170,7 @@ object TextQueries {
             Q.dsum(col("nTokens")).cast("long").as("total_tokens"))
           .orderBy("lang")
       },
-      Some(s"""WITH quality AS (
-             SELECT *, len(string_split(text, ' ')) AS n_tokens
-             FROM documents WHERE len(string_split(text, ' ')) BETWEEN 20 AND 1000),
-           survivors AS (
-             SELECT * FROM (
-               SELECT *, row_number() OVER (
-                 PARTITION BY ${Q.hash60Sql("text")} ORDER BY doc_id) AS rn
-               FROM quality)
-             WHERE rn = 1)
-           SELECT lang, count(*) AS n_docs,
-             sum(n_tokens::decimal(38,6))::bigint AS total_tokens
-           FROM survivors GROUP BY lang ORDER BY lang""")),
+      Some(cleanCorpusOracle)),
 
     // TTL-REGISTRY corpus cleaning (VERDICT r10 #5 — the eviction path
     // itself under the cross-engine gate): same gate → dedup → stats
@@ -1303,19 +1315,7 @@ object TextQueries {
           .agg(count(lit(1)).as("n_hits"))
           .orderBy("doc_id")
       },
-      Some(s"""WITH base AS (
-             SELECT doc_id,
-               list_distinct([${Q.hash60Sql("array_to_string(t[i:i+7], ' ')")}
-                 for i in range(1, greatest(len(t) - 6, 1))]) AS hs
-             FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents)
-             WHERE len(t) >= 8),
-           bench AS (
-             SELECT DISTINCT unnest(hs) AS h FROM base WHERE doc_id % 20 = 0),
-           corp AS (
-             SELECT doc_id, unnest(hs) AS h FROM base WHERE doc_id % 20 <> 0)
-           SELECT doc_id, count(*) AS n_hits
-           FROM corp JOIN bench USING (h)
-           GROUP BY doc_id ORDER BY doc_id""")),
+      Some(decontaminateOracle)),
 
     // The SAME decontamination sweep through operators.Decontaminate's
     // Bloom-pruned two-phase plan (prune on a broadcast ~10-bits/key
@@ -1344,19 +1344,7 @@ object TextQueries {
         graft.operators.Decontaminate.hits(corpus, bench)
           .orderBy("doc_id")
       },
-      Some(s"""WITH base AS (
-             SELECT doc_id,
-               list_distinct([${Q.hash60Sql("array_to_string(t[i:i+7], ' ')")}
-                 for i in range(1, greatest(len(t) - 6, 1))]) AS hs
-             FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents)
-             WHERE len(t) >= 8),
-           bench AS (
-             SELECT DISTINCT unnest(hs) AS h FROM base WHERE doc_id % 20 = 0),
-           corp AS (
-             SELECT doc_id, unnest(hs) AS h FROM base WHERE doc_id % 20 <> 0)
-           SELECT doc_id, count(*) AS n_hits
-           FROM corp JOIN bench USING (h)
-           GROUP BY doc_id ORDER BY doc_id""")),
+      Some(decontaminateOracle)),
 
     // STREAMING decontamination — the production deployment of the
     // eval-leakage sweep: the benchmark index is STATIC (built once,
@@ -1390,8 +1378,9 @@ object TextQueries {
             .select(explode(grams8(col("t"))).as("h"))
             .distinct().localCheckpoint(true)
         }
-        val fx = StreamFixtures.docsHalves(s, dir)
-        val schema = StreamFixtures.docsHalvesSchema(s, dir)
+        val fx = StreamFixtures.halves(dir, "documents", "doc_id")(
+          s.read.parquet(s"$dir/documents.parquet"))
+        val schema = StreamFixtures.halvesSchema(s, fx)
         // batch 1: low-id half; batch 2: hits accumulate across batches
         StreamHarness.drainFeed(fx, Seq("lo", "hi"), "complete") { srcDir =>
           // scanWide: the 8-gram hash explode is the CPU cost — fan the
@@ -1410,19 +1399,7 @@ object TextQueries {
             .agg(count(lit(1)).as("n_hits"))
         }.orderBy("doc_id")
       },
-      Some(s"""WITH base AS (
-             SELECT doc_id,
-               list_distinct([${Q.hash60Sql("array_to_string(t[i:i+7], ' ')")}
-                 for i in range(1, greatest(len(t) - 6, 1))]) AS hs
-             FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents)
-             WHERE len(t) >= 8),
-           bench AS (
-             SELECT DISTINCT unnest(hs) AS h FROM base WHERE doc_id % 20 = 0),
-           corp AS (
-             SELECT doc_id, unnest(hs) AS h FROM base WHERE doc_id % 20 <> 0)
-           SELECT doc_id, count(*) AS n_hits
-           FROM corp JOIN bench USING (h)
-           GROUP BY doc_id ORDER BY doc_id""")),
+      Some(decontaminateOracle)),
 
     // Cross-document repeated-SPAN mining — the distributed signal behind
     // exact-substring deduplication ("Deduplicating Training Data Makes
@@ -2310,8 +2287,9 @@ object TextQueries {
       "stream_seq_pack",
       (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.CatalogStreamPartitions) {
         import s.implicits._
-        val fx = StreamFixtures.docsHalves(s, dir)
-        val schema = StreamFixtures.docsHalvesSchema(s, dir)
+        val fx = StreamFixtures.halves(dir, "documents", "doc_id")(
+          s.read.parquet(s"$dir/documents.parquet"))
+        val schema = StreamFixtures.halvesSchema(s, fx)
         // batch 1: low-id half; batch 2: open bins keep filling
         StreamHarness.drainFeed(fx, Seq("lo", "hi"), "complete") { srcDir =>
           val src = s.readStream.schema(schema).parquet(srcDir)
@@ -2369,8 +2347,9 @@ object TextQueries {
       "stream_seq_pack_s0",
       (s, dir) => StreamHarness.withShufflePartitions(s, StreamHarness.CatalogStreamPartitions) {
         import s.implicits._
-        val fx = StreamFixtures.docsHalves(s, dir)
-        val schema = StreamFixtures.docsHalvesSchema(s, dir)
+        val fx = StreamFixtures.halves(dir, "documents", "doc_id")(
+          s.read.parquet(s"$dir/documents.parquet"))
+        val schema = StreamFixtures.halvesSchema(s, fx)
         // batch 1: low-id half; batch 2: open bins keep filling
         StreamHarness.drainFeed(fx, Seq("lo", "hi"), "complete") { srcDir =>
           val src = s.readStream.schema(schema).parquet(srcDir)
@@ -2409,7 +2388,7 @@ object TextQueries {
       (s, dir) =>
         Codecs.imageHashes(imageClips(s, dir)).toDF("id", "phash")
           .orderBy("id"),
-      Some(s"""$imageFpCte SELECT id, phash FROM ph ORDER BY id""")),
+      Some(imagePhashOracle)),
 
     // Image near-dup pairs through the shared 4×16-bit Hamming-banded
     // core (pigeonhole-exact at distance ≤ 3) — same-group fixtures
@@ -2444,7 +2423,7 @@ object TextQueries {
         val hashed = Codecs.imageHashes(src).toDF("id", "phash")
         StreamHarness.drain(hashed).orderBy("id")
       },
-      Some(s"""$imageFpCte SELECT id, phash FROM ph ORDER BY id""")),
+      Some(imagePhashOracle)),
 
     QueryDef(
       "mm_audio_fp",

@@ -12,8 +12,8 @@ import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
 
-/** Run named catalog queries and dump each one's final plan to files —
-  * plan evidence under $SPARK_GRAFT_PLANS_DIR (default plans/r16).
+/** Each named query's final plan and job counts, for `tools/plandiff.py`
+  * to diff two commits by: written under $SPARK_GRAFT_PLANS_DIR (plans/r16).
   *
   *   SPARK_GRAFT_SF_DIR=/path/to/sf0.01 sbt "runMain graft.tools.PlanDump before graph_pagerank knn_ivfpq"
   *

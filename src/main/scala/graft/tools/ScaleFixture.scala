@@ -3,13 +3,13 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Synthesize an sf1-equivalent fixture dir from sf0.1 (VERDICT r7 #3):
-  * `factor` DISJOINT key-shifted copies of every keyed table, so each
-  * copy is a self-consistent TPC-H-ish universe and the union is a
-  * `factor`× corpus with the ORIGINAL's join selectivities, group
-  * cardinalities (per copy), and duplicate structure — the shape a real
-  * 10× data growth has, unlike naive row duplication which manufactures
-  * quadratic near-dup blowups.
+/** The inputs larger than sf0.1 behind the CORRECTNESS_SF* gates, made
+  * from sf0.1 (VERDICT r7 #3): `factor` DISJOINT key-shifted copies of
+  * every keyed table, so each copy is a self-consistent TPC-H-ish
+  * universe and the union is a `factor`× corpus with the ORIGINAL's join
+  * selectivities, group cardinalities (per copy), and duplicate structure
+  * — the shape a real 10× data growth has, unlike naive row duplication
+  * which manufactures quadratic near-dup blowups.
   *
   *   sbt -batch "runMain graft.tools.ScaleFixture /root/testdata/sf0.1 /tmp/sf1 10"
   *

@@ -4,17 +4,17 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.streaming._
 
-/** 100-batch state-size soak for the bounded-state streaming families
-  * (VERDICT r7 #8; TTL registries VERDICT r8 #8): the FIFO-cap / O(1)-register claims are
-  * law-tested for VALUES, but state growth over a long feed was argued,
-  * not measured. This harness drives each family with 100 micro-batches
-  * from a fixed key/cell/bucket universe (MemoryStream, one batch per
-  * `addData` + `processAllAvailable`), records `stateOperators` metrics
-  * (numRowsTotal, stateMemory) from each batch's StreamingQueryProgress,
-  * and ASSERTS the plateau: state row count at batch 100 equals batch 50
-  * exactly, and state memory grows ≤ 25% after batch 50 (snapshot jitter
-  * allowance). A family whose state tracked the stream length (the bug
-  * class this guards) fails loudly.
+/** Whether each bounded-state streaming family's state plateaus over 100
+  * batches (VERDICT r7 #8; TTL registries r8 #8). The FIFO-cap /
+  * O(1)-register claims are law-tested for VALUES, but state growth over
+  * a long feed was argued, not measured. This harness drives each family
+  * with 100 micro-batches from a fixed key/cell/bucket universe
+  * (MemoryStream, one batch per `addData` + `processAllAvailable`),
+  * records `stateOperators` metrics (numRowsTotal, stateMemory) from each
+  * batch's StreamingQueryProgress, and ASSERTS the plateau: state row
+  * count at batch 100 equals batch 50 exactly, and state memory grows ≤
+  * 25% after batch 50 (snapshot jitter allowance). A family whose state
+  * tracked the stream length (the bug class this guards) fails loudly.
   *
   *   sbt -batch "runMain graft.tools.StateSoak"
   *

@@ -7,7 +7,8 @@ import scala.jdk.CollectionConverters._
 import graft.tools.PlanDump
 
 /** Contracts of the harness around the catalog: the flagship entry query,
-  * the one session builder of the mains, and PlanDump's per-query counts.
+  * the one session builder of the mains, the environment variables they
+  * read, and PlanDump's per-query counts.
   */
 class HarnessSpec extends SparkSpec {
 
@@ -15,16 +16,29 @@ class HarnessSpec extends SparkSpec {
     SparkEntry.entry(spark).count() should be > 0L
   }
 
-  test("no main source but LocalSession calls SparkSession.builder") {
+  /** Each main source file under src/main/scala, by its path relative to
+    * that root, with its comments stripped. */
+  private def mainSources: Map[String, String] = {
     val root = Paths.get("src/main/scala")
     val comments = """(?s)/\*.*?\*/|//[^\n]*""".r
     val files = Files.walk(root)
-    val callers =
-      try files.iterator().asScala.filter(_.toString.endsWith(".scala"))
-        .filter(p => comments.replaceAllIn(Files.readString(p), "").contains("SparkSession.builder"))
-        .map(root.relativize(_).toString).toList
-      finally files.close()
-    callers shouldBe List("graft/LocalSession.scala")
+    try files.iterator().asScala.filter(_.toString.endsWith(".scala"))
+      .map(p => root.relativize(p).toString -> comments.replaceAllIn(Files.readString(p), ""))
+      .toMap
+    finally files.close()
+  }
+
+  test("no main source but LocalSession calls SparkSession.builder") {
+    mainSources.collect { case (p, src) if src.contains("SparkSession.builder") => p }
+      .toList shouldBe List("graft/LocalSession.scala")
+  }
+
+  test("main sources read exactly the listed SPARK_* environment variables") {
+    val read = """sys\.env(?:\.\w+)?\(\s*"(SPARK_\w+)"""".r
+    val knobs = mainSources.values.flatMap(read.findAllMatchIn(_).map(_.group(1))).toSet
+    knobs shouldBe Set("SPARK_GRAFT_CPUS", "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_SKIP_DUCK",
+      "SPARK_GRAFT_BENCH_OUT", "SPARK_GRAFT_DUCK_BENCH", "SPARK_GRAFT_PLANS_DIR",
+      "SPARK_GRAFT_STATE_BACKEND")
   }
 
   test("PlanDump counts a query the same whatever ran before it") {

@@ -57,7 +57,6 @@ class QueryConfSpec extends SparkSpec {
 
   test("the drains' state partition count is 1, a catalog query runs at 4, " +
     "a store-heavy one at max(4, min(16, cores))") {
-    assume(!sys.env.contains("SPARK_GRAFT_STREAM_PARTITIONS"), "a sweep pins the count")
     StreamHarness.StreamPartitions shouldBe 1
     val cores = spark.sparkContext.defaultParallelism
     statePartitions("stream_funnel") shouldBe Set(4L)
